@@ -27,4 +27,6 @@ Layout:
     plans/       physical-plan audit helpers (pushdown / broadcast checks)
 """
 
+from playwrightcrawler_spark import zipstamp  # noqa: F401  (per-task import cost, see module)
+
 __version__ = "0.1.0"

@@ -6,9 +6,11 @@ One wave =
     fetch   : broadcast-join the (small) wave against the pages table —
               replaces the live browser per BASELINE.json input_hint
     route   : content-type sniff → first-match route (R0)
-    extract : text/words/links/opendir pandas UDFs on html rows (E1-E6)
-    discover: explode links + open-dir tree expansion (P16) → canonicalize
-              (P1) → hygiene filters with drop accounting (P4-P10, A5)
+    extract : ONE routed pandas UDF: text/words/opendir (E1-E6) plus each
+              href resolved, split into web link or mailto address, and
+              canonicalized (U1, U3, P1, P4) — the wave's only Python
+    discover: explode links + open-dir tree expansion (P16) → JVM-side
+              hygiene filters with drop accounting (P4-P10, A5)
     dedup   : dropDuplicates + anti-join against the frontier (J1/J2/J5)
     commit  : crawled delta-append + frontier snapshot + wave_metrics,
               atomic per wave (resumable — north_rule checkpoint/lineage)
@@ -18,10 +20,14 @@ Scale design:
   10^10-row pages/frontier tables are never shuffled on the fetch path;
 - the wide shuffles are the per-host window (bounded by the candidate
   set) and the frontier rewrite (bucketed by host_salt on Iceberg);
-- exactly 4-6 Spark actions per wave: counters ride on Observations
-  attached to the write jobs instead of separate count() jobs — at
-  cluster scale that's the difference between 4 and 12 stage launches
-  per wave;
+- five Spark ACTIONS per wave with bucket lineage, Bloom and compaction
+  off (selection counts, cache fill, crawled write, frontier inserts and
+  flips writes); a bucketed pages table, bucket lineage, the Bloom
+  update and a compaction add one each. Each action runs as one or more
+  Spark JOBS (AQE submits every query stage and broadcast as its own
+  job: 18 jobs per wave on the benchmark's crawl_extract shape). Counters
+  ride on Observations attached to the write actions instead of
+  separate count() actions;
 - crawled/wave_metrics are fast-append (delta) tables: commit cost is
   O(wave), only the frontier pays a rewrite (Iceberg MoR would make that
   O(wave) too);
@@ -44,13 +50,6 @@ from playwrightcrawler_spark.operators import seen
 from playwrightcrawler_spark.sources.tables import Lakehouse, with_host_salt
 
 _BASE_TS = datetime(2025, 6, 1, tzinfo=timezone.utc)
-
-_MAILTO_RX = (
-    r"(?i)^(mailto:|maillto:|maito:|mail:|malito:|mailton:|\"mailto:|"
-    r"emailto:|maltio:|mainto:|E-mail:|mailtfo:|mailtp:|mailtop:|"
-    r"mailo:|mail to:|Email para:|email :|email:|E-mail: |mail-to:|"
-    r"maitlo:|mail\.to:)"
-)
 
 DROP_REASONS = [
     "invalid", "embedded", "too_long", "no_host", "blocked_host",
@@ -227,28 +226,24 @@ class CrawlEngine:
 
     # ------------------------------------------------- link hygiene pipeline
     def _classify_links(self, links: DataFrame) -> DataFrame:
-        """P1 canonicalization + P4-P10 hygiene with a ``drop_reason``
-        column (NULL = keep). Input: (url, depth).
+        """P4-P10 hygiene with a ``drop_reason`` column (NULL = keep), all
+        JVM-side. Input: ``udfs.LINK_TYPE`` columns (raw, url = its
+        sanitize_url form, repeated) + depth, as the extraction UDF or
+        ``udfs.seed_link`` computed them; output: (url, depth, host,
+        drop_reason).
 
         Check ORDER matches the reference (preprocess_crawler_data,
         playwrightcrawler.py:1846-1855): embedded-scheme and length caps
         apply to the RAW url BEFORE sanitize_url — a >4096-char raw link
         that would sanitize under the cap is still dropped, and the
         drop_reason accounting reads the same column the predicate used."""
-        raw_reason = (
-            F.when(sqlfns.is_embedded(F.col("url")), "embedded")
-            .when(~sqlfns.length_ok(F.col("url")), "too_long")
-        )
-        canon = (
-            links.withColumn("_raw_reason", raw_reason)
-            .withColumn("url", udfs.canonicalize_url(F.col("url")))
-        )
         return (
-            canon.withColumn("host", sqlfns.host_of(F.col("url")))
+            links.withColumn("host", sqlfns.host_of(F.col("url")))
             .withColumn(
                 "drop_reason",
                 F.coalesce(
-                    F.col("_raw_reason"),
+                    F.when(sqlfns.is_embedded(F.col("raw")), "embedded")
+                    .when(~sqlfns.length_ok(F.col("raw")), "too_long"),
                     F.when(F.col("url") == "", "invalid")
                     .when(F.col("host").isNull() | (F.col("host") == ""), "no_host")
                     .when(sqlfns.host_block_listed(F.col("host")), "blocked_host")
@@ -256,22 +251,48 @@ class CrawlEngine:
                     .when(sqlfns.url_block_listed(F.col("url")), "blocked_url")
                     .when(
                         sqlfns.repeated_segments_prefilter(F.col("url"))
-                        & udfs.has_repeated_segments(F.col("url")),
+                        & F.col("repeated"),
                         "repeated_segments",
                     ),
                 ),
             )
-            .drop("_raw_reason")
+            .drop("raw", "repeated")
         )
 
     @staticmethod
-    def _dedupe_links(flagged: DataFrame) -> DataFrame:
-        """J4 set semantics: keep clean rows, smallest depth per URL."""
-        return (
-            flagged.filter(F.col("drop_reason").isNull())
-            .groupBy("url", "host")
-            .agg(F.min("depth").alias("depth"))
-        )
+    def _page_links(html_pages: DataFrame) -> DataFrame:
+        """Extracted pages → one row per discovered web link: the
+        ``udfs.LINK_TYPE`` columns + depth (parent depth + 1)."""
+        return html_pages.select(
+            F.explode("links").alias("_l"), (F.col("depth") + 1).alias("depth")
+        ).select("_l.*", "depth")
+
+    @staticmethod
+    def _dedupe_links(flagged: DataFrame, obs: Observation | None = None) -> DataFrame:
+        """J4 set semantics: keep clean rows, smallest depth per URL. The
+        same aggregation counts every link (``links_seen``) and each drop
+        reason (``drop_<reason>``) into ``obs`` when given.
+
+        Dropped rows group under a NULL key instead of being filtered out
+        first, so the shuffle below the metrics node is empty only when
+        there is no link at all. AQE prunes an Observation that sits inside
+        a query stage it finds empty; with the filter first, Catalyst
+        pushed the seen-set anti-join below this aggregation, and a wave
+        whose links were all known lost its counters with that branch."""
+        kept = F.col("drop_reason").isNull()
+        counts = {
+            "links_seen": F.count(F.lit(1)),
+            **{f"drop_{r}": F.count(F.when(F.col("drop_reason") == r, 1)) for r in DROP_REASONS},
+        }
+        grouped = flagged.groupBy(
+            F.when(kept, F.col("url")).alias("url"),
+            F.when(kept, F.col("host")).alias("host"),
+        ).agg(F.min("depth").alias("depth"), *[c.alias(n) for n, c in counts.items()])
+        if obs is not None:
+            grouped = grouped.observe(
+                obs, *[F.coalesce(F.sum(n), F.lit(0)).alias(n) for n in counts]
+            )
+        return grouped.filter(F.col("url").isNotNull()).drop(*counts)
 
     # ------------------------------------------------------------- bootstrap
     def _seed_rows(self, urls: DataFrame | list[str], wave: int) -> DataFrame:
@@ -279,9 +300,8 @@ class CrawlEngine:
         rows through the same hygiene as discovered links."""
         if not isinstance(urls, DataFrame):
             urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        links = self._dedupe_links(
-            self._classify_links(urls.select("url").withColumn("depth", F.lit(0)))
-        )
+        seeds = urls.select(udfs.seed_link(F.col("url")).alias("_l"), F.lit(0).alias("depth"))
+        links = self._dedupe_links(self._classify_links(seeds.select("_l.*", "depth")))
         return (
             with_host_salt(links, buckets=config.HOST_SALT_BUCKETS)
             .withColumn("visited", F.lit(False))
@@ -589,16 +609,9 @@ class CrawlEngine:
         )
 
         html_pages = fetched.filter(F.col("route") == "html")
-        raw_links = html_pages.select(
-            F.col("url").alias("parent_url"),
-            F.col("host").alias("parent_host"),
-            "depth",
-            F.explode(udfs.resolve_links(F.col("url"), F.col("raw_links"))).alias("url"),
-        ).cache()
 
         # ---- crawled rows (A4 schema, reference §1.1b) — ACTION 2 (write)
-        crawled_all = self._build_crawled(fetched, html_pages, missing, raw_links, wave,
-                                          fused=True)
+        crawled_all = self._build_crawled(fetched, html_pages, missing, wave, fused=True)
         obs_crawl = Observation()
         crawled_all = crawled_all.observe(
             obs_crawl,
@@ -629,44 +642,36 @@ class CrawlEngine:
         crawl_stats = _obs_get(obs_crawl, {"rows": 0, "fetched_ok": 0, "emails": 0})
         mark("t_crawled")
 
-        # ---- discovered links → hygiene → anti-join → frontier commit
-        web_links = (
-            raw_links.filter(~F.col("url").rlike(_MAILTO_RX))
-            .select("url", (F.col("depth") + 1).alias("depth"))
-            .coalesce(npart)
-        )
+        # ---- discovered links → hygiene → anti-join → frontier commit.
+        # The extraction UDF already resolved, split off mailto and
+        # sanitized every href, so the link pipeline reads the cache only.
+        web_links = self._page_links(html_pages).coalesce(npart)
         if self.hunt:
             # P16: content URLs and links contribute parent-directory chains
             # (reference preprocess :1837-1845)
-            tree_of = lambda df, d: df.select(
-                F.explode(udfs.directory_tree(F.col("url"))).alias("url"),
-                (d + 1).alias("depth"),
-            )
+            def tree_of(df, url_col):
+                return df.select(
+                    F.explode(udfs.directory_tree_links(F.col(url_col))).alias("_l"),
+                    (F.col("depth") + 1).alias("depth"),
+                ).select("_l.*", "depth")
+
             guarded = web_links.filter(
-                sqlfns.length_ok(F.col("url")) & ~sqlfns.is_embedded(F.col("url"))
+                sqlfns.length_ok(F.col("raw")) & ~sqlfns.is_embedded(F.col("raw"))
             )
             web_links = (
                 web_links
-                .unionByName(tree_of(wave_df.select("url", "depth"), F.col("depth")))
-                .unionByName(tree_of(guarded, F.col("depth")))
+                .unionByName(tree_of(wave_df, "url"))
+                .unionByName(tree_of(guarded, "raw"))
             )
 
-        flagged = self._classify_links(web_links)
         obs_links = Observation()
-        flagged = flagged.observe(
-            obs_links,
-            F.count(F.lit(1)).alias("links_seen"),
-            *[
-                F.count(F.when(F.col("drop_reason") == r, 1)).alias(f"drop_{r}")
-                for r in DROP_REASONS
-            ],
-        )
         # J1/J5 seen-set membership. With use_bloom the frontier is only
         # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
         # without, the exact anti-join (right side = frontier) is cheaper
         # at sub-10^7 frontier sizes.
         hashed = with_host_salt(
-            self._dedupe_links(flagged), buckets=config.HOST_SALT_BUCKETS
+            self._dedupe_links(self._classify_links(web_links), obs_links),
+            buckets=config.HOST_SALT_BUCKETS,
         ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
         # read_keys, not the MoR view: flips never add url_hashes, so the
         # seen-set is base ∪ insert-deltas — skipping the flip join removes
@@ -766,7 +771,7 @@ class CrawlEngine:
         )  # ACTION 5 (driver-local)
         mark("t_metrics")
 
-        unp = [selected, fetched, raw_links]  # html_pages is a view of fetched
+        unp = [selected, fetched]  # html_pages is a view of fetched
         if self.bucket_lineage:
             unp.append(insert_rows)
         for df in unp:
@@ -842,7 +847,7 @@ class CrawlEngine:
         )
 
         # mismatch fallback: html-sniffed rows get the full extraction path
-        html_pages = raw_links = None
+        html_pages = None
         html_rows_in = fetched.filter(F.col("route") == "html")
         if html_rows_in.limit(1).count():
             if self.extract_raw:
@@ -856,14 +861,8 @@ class CrawlEngine:
                 html_rows_in, html_col="html", url_col="url"
             ).drop("html").cache()
             html_pages.count()
-            raw_links = html_pages.select(
-                F.col("url").alias("parent_url"),
-                F.col("host").alias("parent_host"),
-                "depth",
-                F.explode(udfs.resolve_links(F.col("url"), F.col("raw_links"))).alias("url"),
-            )
 
-        crawled_all = self._build_crawled(fetched, html_pages, missing, raw_links, wave)
+        crawled_all = self._build_crawled(fetched, html_pages, missing, wave)
         obs = Observation()
         crawled_all = crawled_all.observe(
             obs,
@@ -879,13 +878,9 @@ class CrawlEngine:
         # seen-set pipeline as a normal wave, committed with the flips
         insert_rows = None
         links_new = 0
-        if raw_links is not None:
-            web_links = (
-                raw_links.filter(~F.col("url").rlike(_MAILTO_RX))
-                .select("url", (F.col("depth") + 1).alias("depth"))
-            )
+        if html_pages is not None:
             hashed = with_host_salt(
-                self._dedupe_links(self._classify_links(web_links)),
+                self._dedupe_links(self._classify_links(self._page_links(html_pages))),
                 buckets=config.HOST_SALT_BUCKETS,
             ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
             insert_rows = (
@@ -969,7 +964,7 @@ class CrawlEngine:
         return {"wave": wave, "op": "cleanup", "deleted": deleted, "rules": counts}
 
     # ----------------------------------------------------- crawled assembly
-    def _build_crawled(self, fetched, html_pages, missing, raw_links, wave: int,
+    def _build_crawled(self, fetched, html_pages, missing, wave: int,
                        fused: bool = False) -> DataFrame:
         """A4-schema rows, JOIN-FREE: the extraction output already carries
         every fetched column, so html rows, non-html rows, dead links and
@@ -1057,10 +1052,13 @@ class CrawlEngine:
             [F.lit(None).cast("string").alias("raw_webcontent")]
             if self.extract_raw else []
         )
-        email_rows = None if raw_links is None else (
-            raw_links.filter(F.col("url").rlike(_MAILTO_RX))
-            .withColumn("email", udfs.extract_email(F.col("url")))
-            .filter(F.col("email").isNotNull())
+        # one email record per valid mailto link on an extracted html page
+        email_rows = None if html_pages is None else (
+            html_pages.select(
+                F.col("url").alias("parent_url"),
+                F.col("host").alias("parent_host"),
+                F.explode("emails").alias("email"),
+            )
             .select(
                 F.concat_ws("|", "parent_url", "email").alias("url"),
                 F.col("parent_url").alias("enrich_url"),

@@ -34,56 +34,34 @@ def has_repeated_segments(urls: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(T.StringType())
-def url_sha256(urls: pd.Series) -> pd.Series:
-    """Reference `_id` parity (sha256 hex). The engine's 64-bit key is
-    ``F.xxhash64`` — JVM-side, no UDF."""
-    return urls.map(urltools.url_sha256, na_action="ignore")
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def directory_tree(urls: pd.Series) -> pd.Series:
-    """Parent-directory expansion for open-dir hunting (P16)."""
-    return urls.map(urltools.get_directory_tree, na_action="ignore")
-
-
-_QS_SCHEMA = T.StructType([
-    T.StructField("has_query", T.BooleanType()),
-    T.StructField("query_variables", T.ArrayType(T.StringType())),
-    T.StructField("query_values", T.ArrayType(T.StringType())),
+# one hygiene-checked link: resolved href, its sanitize_url form, and the
+# repeated-segments verdict on that form (``urltools.link_record``)
+LINK_TYPE = T.StructType([
+    T.StructField("raw", T.StringType()),
+    T.StructField("url", T.StringType()),
+    T.StructField("repeated", T.BooleanType()),
 ])
 
 
-@pandas_udf(_QS_SCHEMA)
-def parse_query(urls: pd.Series) -> pd.DataFrame:
-    """Exact CPython parse_qs decomposition (P14 parity; the pure-SQL
-    variant lives in sqlfns.query_* and is cross-checked in tests)."""
-    rows = [urltools.parse_query(u) if isinstance(u, str) else (False, [], []) for u in urls]
-    return pd.DataFrame(rows, columns=["has_query", "query_variables", "query_values"])
+def _link(u):
+    return urltools.link_record(u)[:3]
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def resolve_links(parent_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
-    """urljoin each discovered href against its page URL (U1)."""
-
-    def _resolve(parent, links):
-        if links is None or parent is None:
-            return []
-        out = []
-        for h in links:
-            try:
-                out.append(urltools.resolve_link(parent, h))
-            except ValueError:
-                continue
-        return out
-
-    return pd.Series([_resolve(p, l) for p, l in zip(parent_urls, hrefs)])
+@pandas_udf(LINK_TYPE)
+def seed_link(urls: pd.Series) -> pd.DataFrame:
+    """``link_record`` over seed URLs (no parent page): the same
+    (raw, url, repeated) columns the extraction UDF gives discovered links."""
+    return pd.DataFrame([_link(u) for u in urls], columns=LINK_TYPE.fieldNames())
 
 
-@pandas_udf(T.StringType())
-def extract_email(urls: pd.Series) -> pd.Series:
-    """mailto-and-misspellings address extraction (U3); null when invalid."""
-    return urls.map(urltools.extract_email, na_action="ignore")
+@pandas_udf(T.ArrayType(LINK_TYPE))
+def directory_tree_links(urls: pd.Series) -> pd.Series:
+    """Parent-directory expansion for open-dir hunting (P16), each tree URL
+    as a ``link_record``."""
+    return urls.map(
+        lambda u: [_link(t) for t in urltools.get_directory_tree(u)],
+        na_action="ignore",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -109,21 +87,9 @@ def decode_text(raw: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
-def extract_links(html: pd.Series) -> pd.Series:
-    """Raw hrefs/srcs from a/link/script/img (E4 harvest)."""
-    return html.map(textextract.extract_links, na_action="ignore")
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
 def top_words(texts: pd.Series) -> pd.Series:
     """Per-document top-24k token list (E5; Counter tiebreak parity)."""
     return texts.map(textextract.top_words, na_action="ignore")
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def words_from_html(html: pd.Series) -> pd.Series:
-    """E2+E5: word list straight from html bytes."""
-    return html.map(textextract.words_from_html, na_action="ignore")
 
 
 @pandas_udf(T.BooleanType())
@@ -134,22 +100,6 @@ def fast_scan_bails(html: pd.Series) -> pd.Series:
     return html.map(textextract.fast_scan_bailed, na_action="ignore").fillna(False)
 
 
-_OPENDIR_SCHEMA = T.StructType([
-    T.StructField("isopendir", T.BooleanType()),
-    T.StructField("opendir_pattern", T.StringType()),
-])
-
-
-@pandas_udf(_OPENDIR_SCHEMA)
-def open_dir(html: pd.Series, urls: pd.Series) -> pd.DataFrame:
-    """Open-directory fingerprinting (E6) — returns which pattern matched."""
-    rows = []
-    for h, u in zip(html, urls):
-        content = textextract.decode_html(h)
-        rows.append(textextract.is_open_directory(content, u or ""))
-    return pd.DataFrame(rows, columns=["isopendir", "opendir_pattern"])
-
-
 # --------------------------------------------------------------------------
 # Convenience wrappers used by the engine
 # --------------------------------------------------------------------------
@@ -158,7 +108,8 @@ def open_dir(html: pd.Series, urls: pd.Series) -> pd.DataFrame:
 _EXTRACT_ALL_SCHEMA = T.StructType([
     T.StructField("text_extracted", T.StringType()),
     T.StructField("words", T.ArrayType(T.StringType())),
-    T.StructField("raw_links", T.ArrayType(T.StringType())),
+    T.StructField("links", T.ArrayType(LINK_TYPE)),
+    T.StructField("emails", T.ArrayType(T.StringType())),
     T.StructField("isopendir", T.BooleanType()),
     T.StructField("opendir_pattern", T.StringType()),
 ])
@@ -170,10 +121,14 @@ def _extract_page_row(raw, url, route: str = "html"):
     cannot drift (round-5 verdict #2 / advice: the two UDFs used to carry
     separate copies of this body).
 
-    html (default) route — fused E1+E2/E5+E4+E6: ONE decode + ONE DOM walk
-    produces text, word list, raw links and the open-dir verdict. Parser
-    selection is shared with ``extract_text`` via ``textextract.parse_html``
-    (bs4 when installed, fast-scan/stdlib walker here).
+    html (default) route — fused E1+E2/E5+E4+E6+U1+U3+P1+P4: ONE decode +
+    ONE DOM walk produces text, word list and the open-dir verdict; each
+    harvested href then goes through ``urltools.page_links`` (resolve,
+    mailto split, sanitize, repeated-segments check), so discovered links
+    leave the wave's single Arrow crossing ready for the JVM-side hygiene
+    filters. Parser selection is shared with ``extract_text`` via
+    ``textextract.parse_html`` (bs4 when installed, fast-scan/stdlib
+    walker here).
 
     plain_text route — charset-ladder decode (X5) + top_words, exactly the
     column pipeline it replaced: substring(decode,1,MAX) then top_words of
@@ -181,18 +136,19 @@ def _extract_page_row(raw, url, route: str = "html"):
     """
     if route == "plain_text":
         if raw is None:
-            return (None, None, [], False, "")
+            return (None, None, [], [], False, "")
         text = textextract.detect_decode(bytes(raw))[: textextract.config.MAX_WEBCONTENT_SIZE]
-        return (text, textextract.top_words(text), [], False, "")
+        return (text, textextract.top_words(text), [], [], False, "")
     content = textextract.decode_html(raw)
     if not content:
-        return ("", [], [], False, "")
-    parts, links = textextract.parse_html(content)
+        return ("", [], [], [], False, "")
+    parts, hrefs = textextract.parse_html(content)
     stripped = [t.strip() for t in parts]
     text = " ".join(t for t in stripped if t)[: textextract.config.MAX_WEBCONTENT_SIZE]
     words = textextract.top_words(" ".join(parts))
+    links, emails = urltools.page_links(url, hrefs)
     od_flag, od_pat = textextract.is_open_directory(content, url or "")
-    return (text, words, links, od_flag, od_pat)
+    return (text, words, links, emails, od_flag, od_pat)
 
 
 @pandas_udf(_EXTRACT_ALL_SCHEMA)
@@ -222,7 +178,7 @@ def extract_all_routed(html: pd.Series, urls: pd.Series, routes: pd.Series) -> p
 
 def with_extraction(df, html_col: str = "html", url_col: str = "url",
                     route_col: str | None = None):
-    """Append text/words/links/opendir columns via the fused single-parse
+    """Append text/words/links/emails/opendir columns via the fused single-parse
     UDF (one Arrow transfer of ``html``, one HTMLParser walk per page).
     With ``route_col`` the route-aware UDF also folds the plain-text
     decode into the same crossing. The struct is bound to a column first

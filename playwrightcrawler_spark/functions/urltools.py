@@ -337,3 +337,61 @@ def extract_email(raw_url: str) -> str | None:
         return None
     address = m.group(2)
     return address if _EMAIL_VALID.match(address) else None
+
+
+# ---------------------------------------------------------------------------
+# Per-link hygiene kernel — the discovered-link half of the extraction UDF
+# ---------------------------------------------------------------------------
+
+# Which resolved links are mailto-style: the prefixes of _MAILTO_PREFIX
+# (with a literal dot in "mail.to:"), matched the way the engine's former
+# java.util.regex filter did — its (?i) folds ASCII letters only, hence
+# re.ASCII (Unicode folding would also take "MAİLTO:", dotted capital I).
+_MAILTO_LINK = re.compile(
+    r"^(mailto:|maillto:|maito:|mail:|malito:|mailton:|\"mailto:|"
+    r"emailto:|maltio:|mainto:|E-mail:|mailtfo:|mailtp:|mailtop:|"
+    r"mailo:|mail to:|Email para:|email :|email:|E-mail: |mail-to:|"
+    r"maitlo:|mail\.to:)",
+    re.IGNORECASE | re.ASCII,
+)
+
+
+def link_record(href, parent: str | None = None):
+    """One link → ``(raw, url, repeated, email)``; None when urljoin
+    rejects the href.
+
+    With a ``parent`` page URL the href is resolved against it (U1); a
+    mailto-style result yields ``(raw, None, False, extract_email(raw))``
+    (U3), any other ``(raw, sanitize_url(raw), has_repeated_segments(url),
+    None)`` (P1, P4). Without a parent (seed URLs) the href is taken as
+    already resolved and never split off as mailto."""
+    if parent is None:
+        raw = href
+    else:
+        try:
+            raw = resolve_link(parent, href)
+        except ValueError:
+            return None
+        if _MAILTO_LINK.match(raw):
+            return raw, None, False, extract_email(raw)
+    url = sanitize_url(raw)
+    return raw, url, has_repeated_segments(url), None
+
+
+def page_links(parent: str | None, hrefs) -> tuple[list, list]:
+    """A page's hrefs → ``([(raw, url, repeated), ...], [email, ...])`` in
+    href order: web links through ``link_record``, valid mailto addresses
+    apart; hrefs urljoin rejects are skipped. No parent → no links."""
+    links, emails = [], []
+    if parent is None or hrefs is None:
+        return links, emails
+    for h in hrefs:
+        rec = link_record(h, parent)
+        if rec is None:
+            continue
+        raw, url, repeated, email = rec
+        if url is not None:
+            links.append((raw, url, repeated))
+        elif email is not None:
+            emails.append(email)
+    return links, emails

@@ -79,3 +79,30 @@ def wholestage_codegen_ids(df: DataFrame) -> int:
     """Number of whole-stage codegen regions (wider is better — a region
     that failed to compile falls back and disappears from this count)."""
     return len(set(re.findall(r"\*\((\d+)\)", physical_plan(df))))
+
+
+def python_eval_nodes(df: DataFrame) -> list[str]:
+    """One line per distinct python-eval node (ArrowEvalPython,
+    BatchEvalPython, ...) a run of ``df`` would evaluate, counting the plans
+    of cached relations it reads: a cached frame read by several branches
+    is one node, its plan is walked once."""
+    jvm = df._sc._jvm
+    out, seen = [], set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        key = jvm.System.identityHashCode(node)
+        if key in seen:
+            continue
+        seen.add(key)
+        name = node.nodeName()
+        if name.endswith("EvalPython"):
+            out.append(node.simpleString(200))
+        # AQE wrappers hold their plans outside children/innerChildren
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Profile the fused extraction kernel (udfs.extract_all body) on real
+"""Profile the fused extraction kernel (udfs._extract_page_row) on real
 bench-fixture pages, outside Spark — interference-tolerant relative
 numbers for kernel optimization.
 
@@ -23,21 +23,9 @@ def load_pages(n):
 
 
 def kernel(urls, payloads):
-    from playwrightcrawler_spark.functions import textextract
+    from playwrightcrawler_spark.functions.udfs import _extract_page_row
 
-    out = []
-    for raw, url in zip(payloads, urls):
-        content = textextract.decode_html(raw)
-        if not content:
-            out.append(("", [], [], False, ""))
-            continue
-        parts, links = textextract.parse_html(content)
-        stripped = [t.strip() for t in parts]
-        text = " ".join(t for t in stripped if t)[: textextract.config.MAX_WEBCONTENT_SIZE]
-        words = textextract.top_words(" ".join(parts))
-        od_flag, od_pat = textextract.is_open_directory(content, url or "")
-        out.append((text, words, links, od_flag, od_pat))
-    return out
+    return [_extract_page_row(raw, url) for raw, url in zip(payloads, urls)]
 
 
 def main():

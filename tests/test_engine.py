@@ -490,3 +490,57 @@ def test_time_travel(crawl_result, spark):
     v1 = eng.lake.frontier.read(spark, version=1).count()
     assert v_head > 1
     assert v1 <= head
+
+
+def _closed_link_pages(path: str, n: int = 6) -> list[str]:
+    """n html pages on one host that link only to each other, plus one
+    href per hygiene drop reason and a mailto link on every page."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    urls = [f"https://closed.example/p{i}.html" for i in range(n)]
+    html = [
+        (
+            f"<!DOCTYPE html><html><head><title>p{i}</title></head><body>"
+            f"<p>closed page {i}</p>"
+            f'<a href="/p{(i + 1) % n}.html">next</a>'
+            f'<a href="https://closed.example/p{(i + 2) % n}.html#top">skip</a>'
+            '<a href="javascript:void(0)">embedded</a>'
+            f'<a href="/long/{"q" * 4200}">too long</a>'
+            '<a href="https://fonts.gstatic.com/s.css">blocked host</a>'
+            '<a href="/fonts/fonts/fonts/a.woff">repeated segments</a>'
+            f'<a href="mailto:owner{i}@closed.example">mail</a>'
+            "</body></html>"
+        ).encode()
+        for i in range(n)
+    ]
+    pq.write_table(pa.table({"url": urls, "html": html}), f"{path}/part-0.parquet")
+    return urls
+
+
+@pytest.mark.parametrize("bucket_lineage", [False, True])
+def test_link_counters_when_every_link_is_known(spark, tmp_path, bucket_lineage):
+    """A wave whose clean links are all already in the frontier inserts
+    nothing, yet wave_metrics must carry the true links_seen and per-reason
+    drop counts (the counters used to be pruned with the empty branch)."""
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    urls = _closed_link_pages(str(pages))
+    eng = CrawlEngine(spark, str(pages), str(tmp_path / "wh"), wave_size=100,
+                      per_host_quota=100, hunt_open_directories=False,
+                      bucket_lineage=bucket_lineage)
+    eng.bootstrap(urls)
+    m = eng.run_wave(1)
+    assert (m["urls_fetched"], m["links_new"], m["links_seen"]) == (6, 0, 36)
+    got = {
+        r["scope"] + "/" + r["metric"]: r["value"]
+        for r in eng.lake.wave_metrics.read(spark).filter(F.col("wave") == 1).collect()
+    }
+    assert got["wave/links_seen"] == 36
+    assert got["wave/links_new"] == 0
+    assert got["wave/emails"] == 6
+    drops = {k.split("/")[0]: v for k, v in got.items() if k.startswith("drop:")}
+    assert drops == {
+        "drop:embedded": 6, "drop:too_long": 6,
+        "drop:blocked_host": 6, "drop:repeated_segments": 6,
+    }

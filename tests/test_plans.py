@@ -217,3 +217,59 @@ def test_near_dup_plan_has_no_cartesian(spark, sf_dir):
     plan = audit.physical_plan(q_embedding_near_dup(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _digest(df) -> tuple[int, int]:
+    """Row count and an order-insensitive hash sum over the sorted columns
+    (node_id is deployment config, not crawl output)."""
+    cols = sorted(c for c in df.columns if c != "node_id")
+    h = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(2**31 - 1))
+    r = df.select(h.alias("h")).agg(F.count(F.lit(1)).alias("n"), F.sum("h").alias("s")).first()
+    return int(r["n"]), int(r["s"])
+
+
+def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
+    """With Bloom and hunting off, the only python a wave evaluates is the
+    routed extraction UDF: the crawled append and the frontier inserts
+    each hold exactly that one ArrowEvalPython (link resolution,
+    sanitize_url, the repeated-segments check and mailto extraction ride
+    inside it), the visited flips none. The tables equal those the engine
+    wrote for the same seed when those per-link steps were separate UDFs
+    (digests recorded from that engine)."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.sources import pages_gen
+
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=300,
+                      per_host_quota=2, seed=7, hunt_open_directories=False,
+                      use_bloom=False)
+    eng.bootstrap(pages_gen.seed_urls())
+    plans = []
+
+    def capture(obj, meth):
+        orig = getattr(obj, meth)
+
+        def wrapped(*a, **kw):
+            frames = {**{f"{meth}[{i}]": x for i, x in enumerate(a)}, **kw}
+            plans.extend(
+                (name, audit.python_eval_nodes(df))
+                for name, df in frames.items() if hasattr(df, "_jdf")
+            )
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(obj, meth, wrapped)
+
+    capture(eng.lake.crawled, "append")
+    capture(eng.lake.frontier, "commit_wave")
+    metrics = eng.run(3)
+    assert [m["done"] for m in metrics] == [False] * 3
+
+    # per wave: the crawled frame (append's second argument), the frontier
+    # inserts and the visited flips, which read the selection only
+    want = {"append[1]": 1, "inserts": 1, "flips": 0}
+    assert sorted(name for name, _ in plans) == sorted(list(want) * 3)
+    for name, nodes in plans:
+        assert len(nodes) == want[name], (name, nodes)
+        assert all("extract_all_routed" in n for n in nodes), nodes
+
+    assert _digest(eng.lake.crawled.read(spark)) == (45, 44496452326)
+    assert _digest(eng.lake.frontier.read(spark)) == (78, 78469828928)

@@ -31,21 +31,24 @@ def _fetched_frame(spark):
     decodes plain_text in the same Arrow crossing as the html walk),
     empty-extraction sentinels ('', [], [], False, '') for the rest. The
     html bytes column survives here only because the NON-fused comparison
-    branch recomputes the plain-text decode from it."""
+    branch recomputes the plain-text decode from it. One html page carries
+    a mailto address, which becomes an email record."""
     rows = [
-        # url, ctype, route, ext, depth, html(plain-text only), text, words, isopendir, odpat
-        ("https://a.example/p0.html", "text/html", "html", "html", 0,
-         None, "hello world", ["hello", "world"], False, ""),
-        ("https://a.example/dir/", "text/html", "html", "", 1,
-         None, "Index of /dir", ["index", "of", "dir"], True, "index of"),
-        ("https://b.example/notes.txt", "text/plain", "plain_text", "txt", 1,
+        # url, host, ctype, route, ext, depth, html(plain-text only), text,
+        # words, emails, isopendir, odpat
+        ("https://a.example/p0.html", "a.example", "text/html", "html", "html", 0,
+         None, "hello world", ["hello", "world"], ["someone@example.org"], False, ""),
+        ("https://a.example/dir/", "a.example", "text/html", "html", "", 1,
+         None, "Index of /dir", ["index", "of", "dir"], [], True, "index of"),
+        ("https://b.example/notes.txt", "b.example", "text/plain", "plain_text", "txt", 1,
          bytearray(b"plain body text"), "plain body text",
-         ["plain", "body", "text"], False, ""),
-        ("https://b.example/logo.png", "image/png", "image", "png", 2,
-         None, "", [], False, ""),
+         ["plain", "body", "text"], [], False, ""),
+        ("https://b.example/logo.png", "b.example", "image/png", "image", "png", 2,
+         None, "", [], [], False, ""),
     ]
     schema = T.StructType([
         T.StructField("url", T.StringType()),
+        T.StructField("host", T.StringType()),
         T.StructField("content_type", T.StringType()),
         T.StructField("route", T.StringType()),
         T.StructField("file_extension", T.StringType()),
@@ -53,6 +56,7 @@ def _fetched_frame(spark):
         T.StructField("html", T.BinaryType()),
         T.StructField("text_extracted", T.StringType()),
         T.StructField("words", T.ArrayType(T.StringType())),
+        T.StructField("emails", T.ArrayType(T.StringType())),
         T.StructField("isopendir", T.BooleanType()),
         T.StructField("opendir_pattern", T.StringType()),
     ])
@@ -70,27 +74,16 @@ def _missing_frame(spark):
     )
 
 
-def _raw_links_frame(spark):
-    return spark.createDataFrame(
-        [
-            ("https://a.example/p0.html", "a.example", 0, "mailto:someone@example.org"),
-            ("https://a.example/p0.html", "a.example", 0, "https://d.example/next.html"),
-        ],
-        "parent_url string, parent_host string, depth int, url string",
-    )
-
-
 def test_fused_build_crawled_matches_union_shape(idle_engine, spark):
     """fused=True (one conditional projection) must emit exactly the rows
     the original two-branch union emitted, for every route class at once:
     html, plain_text, binary, fetch-miss and email."""
     fetched = _fetched_frame(spark)
     missing = _missing_frame(spark)
-    raw_links = _raw_links_frame(spark)
     html_pages = fetched.filter(F.col("route") == "html")
 
-    fused = idle_engine._build_crawled(fetched, html_pages, missing, raw_links, wave=7, fused=True)
-    union = idle_engine._build_crawled(fetched, html_pages, missing, raw_links, wave=7, fused=False)
+    fused = idle_engine._build_crawled(fetched, html_pages, missing, wave=7, fused=True)
+    union = idle_engine._build_crawled(fetched, html_pages, missing, wave=7, fused=False)
 
     assert fused.columns == union.columns
     cols = sorted(fused.columns)

@@ -3,6 +3,8 @@ AST-extracted reference functions (SURVEY.md §5.1, FIXTURES.md A7)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -194,3 +196,113 @@ def test_is_embedded(ref):
     for u in ["data:image/png;base64,x", "blob:y", "about:blank",
               "javascript:void(0)", "https://e.com"]:
         assert urltools.is_embedded_url(u) == ref["is_embedded_url"](u)
+
+
+# --- per-link kernel (link_record / page_links) -----------------------------
+
+# The mailto filter the engine ran JVM-side before the per-link kernel
+# replaced it; java.util.regex's (?i) folds ASCII only, so re.ASCII.
+_JAVA_MAILTO_RX = re.compile(
+    r"^(mailto:|maillto:|maito:|mail:|malito:|mailton:|\"mailto:|"
+    r"emailto:|maltio:|mainto:|E-mail:|mailtfo:|mailtp:|mailtop:|"
+    r"mailo:|mail to:|Email para:|email :|email:|E-mail: |mail-to:|"
+    r"maitlo:|mail\.to:)",
+    re.IGNORECASE | re.ASCII,
+)
+
+_HREF_PARTS = [
+    # relative, absolute, protocol-relative, query/fragment
+    "/p1.html", "p2.html", "../up/x", "?q=1&q=2", "#frag", "", " ",
+    "//cdn.example.net/a.js", "https://b.example/x?y=1#z",
+    "HTTP://UPPER.example:80/A", "https://h.example:443//a//b",
+    # traps and block-list hits
+    "/fonts/fonts/fonts/a.woff", "/a/b/a/b/a/b/", "/images/images/images/images/x",
+    "https://fonts.gstatic.com/s.css",
+    # embedded schemes
+    "javascript:void(0)", "JavaScript:alert(1)", "data:image/png;base64,iVBOR",
+    "blob:https://x/1", "about:blank",
+    # mailto and misspellings (valid and invalid addresses)
+    "mailto:john.doe@example.com", "MAILTO:a@b.org", "maillto:a@b.org",
+    "mail to:x@y.com", "E-mail: x@y.com", "email :x@y.com", "Email para:x@y.com.br",
+    '"mailto:q@r.com', "mail.to:m@n.org", "mailto:not-an-email", "mailto:bad@@x.com",
+    "mailto:", "%22mailto:a@b.com", "mailtop:x@y.com",
+    # non-ASCII: Unicode case folding must not turn these into mailto links
+    "MAİLTO:tr@example.com", "maılto:tr@example.com", "ｍａｉｌｔｏ:fw@example.com",
+    "/pfad/über/straße", "https://bücher.example/ß", "/日本語/ページ",
+    # urljoin rejects these (ValueError)
+    "http://[::1", "https://[bad/x",
+    # scheme typos sanitize_url repairs
+    "htps://typo.example/a", "ttps://typo.example/b", "'https://q.example/p'",
+]
+
+
+def _old_chain(parent, hrefs):
+    """resolve_link → JVM mailto filter → extract_email | sanitize_url →
+    has_repeated_segments, the per-link steps before they were folded."""
+    links, emails = [], []
+    for h in hrefs:
+        try:
+            raw = urltools.resolve_link(parent, h)
+        except ValueError:
+            continue
+        if _JAVA_MAILTO_RX.match(raw):
+            email = urltools.extract_email(raw)
+            if email is not None:
+                emails.append(email)
+            continue
+        url = urltools.sanitize_url(raw)
+        links.append((raw, url, urltools.has_repeated_segments(url)))
+    return links, emails
+
+
+def _fuzz_hrefs(seed: int, n: int) -> list[str]:
+    import random
+
+    rng = random.Random(seed)
+    out = list(_HREF_PARTS)
+    out.append("/long/" + "q" * 4200)
+    out.append("data:text/plain;base64," + "A" * 5000)
+    for _ in range(n):
+        a, b = rng.choice(_HREF_PARTS), rng.choice(_HREF_PARTS)
+        out.append(rng.choice([a + b, a.upper(), a + "/" + b, b[:3] + a]))
+    return out
+
+
+@pytest.mark.parametrize("seed, parent", enumerate([
+    "https://a.example/dir/page.html", "http://b.example:8080/", "https://c.example/x/y/z/",
+]))
+def test_page_links_equal_old_chain(seed, parent):
+    hrefs = _fuzz_hrefs(seed=seed, n=400)
+    got = urltools.page_links(parent, hrefs)
+    assert got == _old_chain(parent, hrefs)
+    links, emails = got
+    assert emails and any(r for _, _, r in links)  # both branches exercised
+    assert urltools.page_links(None, hrefs) == ([], [])
+
+
+def test_link_record_without_parent_is_seed_hygiene():
+    """Seeds: no resolution, no mailto split — canonicalize_url then
+    has_repeated_segments, raising where that chain raised."""
+    for u in _fuzz_hrefs(seed=3, n=200) + [None]:
+        url = urltools.sanitize_url(u)
+        try:
+            want = (u, url, urltools.has_repeated_segments(url), None)
+        except ValueError:
+            with pytest.raises(ValueError):
+                urltools.link_record(u)
+            continue
+        assert urltools.link_record(u) == want
+
+
+def test_mailto_filter_matches_java_regex(spark):
+    """The kernel's mailto split equals Spark's rlike with the (?i) pattern
+    the engine used, on every fuzz href (non-ASCII case folds included)."""
+    from pyspark.sql import functions as F
+
+    hrefs = _fuzz_hrefs(seed=5, n=300)
+    java = "(?i)" + _JAVA_MAILTO_RX.pattern
+    got = spark.createDataFrame([(i, h) for i, h in enumerate(hrefs)], "i int, h string")
+    rows = got.select("i", F.col("h").rlike(java).alias("m")).collect()
+    java_match = {r["i"]: r["m"] for r in rows}
+    for i, h in enumerate(hrefs):
+        assert bool(urltools._MAILTO_LINK.match(h)) == java_match[i], h
