@@ -209,15 +209,13 @@ def run_crawl_bench(cpus: int) -> dict:
     # politeness quota > 1 so waves are full-sized (3000 hosts, 4000/wave);
     # open-dir tree hunting off: the bench corpus has no directory pages,
     # so hunting would only inject guaranteed fetch-misses into the metric
-    # rebalance_fetch OFF (the engine default): extraction is fused into
-    # the scan stage, so its parallelism = scan splits (~375 fine tasks at
-    # the session's 16 MB maxPartitionBytes) and a repartition would only
-    # shuffle the wave's page bytes. The round-3 inversion (local[32] <
-    # local[8]) came from the old two-pass shape quantizing extraction
-    # into shuffle.partitions coarse tasks, not from the scan layout.
+    # extraction is fused into the scan stage, so its parallelism = scan
+    # splits (~375 fine tasks at the session's 16 MB maxPartitionBytes).
+    # The round-3 inversion (local[32] < local[8]) came from the old
+    # two-pass shape quantizing extraction into shuffle.partitions coarse
+    # tasks, not from the scan layout.
     eng = CrawlEngine(spark, pages, wh, wave_size=WAVE_SIZE,
                       per_host_quota=PAGES_PER_HOST, bucket_lineage=False,
-                      rebalance_fetch=os.environ.get("SPARK_GRAFT_BENCH_REBALANCE", "0") == "1",
                       method_weights={"oldest": 1}, hunt_open_directories=False)
     # frontier pre-populated with the whole corpus (S5 seed ingestion at
     # scale): the timed wave is pure fetch+extract+discover+commit work,
@@ -368,7 +366,7 @@ def plan_guard(spark, qmap, pages_path: str | None = None,
             .withColumn("depth", F.lit(0))
             .withColumn("discovered_at", F.current_timestamp())
         )
-        out["crawl_wave"] = _plan_fields(eng._fused_fetch_extract(wave_df, npart=8))
+        out["crawl_wave"] = _plan_fields(eng._fused_fetch_extract(wave_df))
     finally:
         shutil.rmtree(wh, ignore_errors=True)
     return out

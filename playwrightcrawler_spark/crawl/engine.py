@@ -33,6 +33,12 @@ Scale design:
   O(wave) too);
 - host_salt spreads mega-domains across tasks for hashing work while
   politeness aggregates on the raw host (SURVEY.md §7 hard part 4).
+
+The stages are named methods (``_robots_step``, ``_fused_fetch_extract``,
+``_append_crawled``/``_build_crawled``, ``_commit_links``), and ``run_wave``
+is one selector followed by them. The fast-extension pass (X7/X8) runs the
+same stages after its own extension-filtered selector, so there is one
+extraction UDF and one crawled/frontier commit sequence.
 """
 
 from __future__ import annotations
@@ -115,7 +121,6 @@ class CrawlEngine:
         hunt_open_directories: bool = config.HUNT_OPEN_DIRECTORIES,
         robots_rules: DataFrame | None = None,
         bucket_lineage: bool = True,
-        rebalance_fetch: bool = False,
         use_bloom: bool = False,
         bloom_items_per_bucket: int = config.BLOOM_ITEMS_PER_BUCKET,
         compact_every: int = 16,
@@ -143,13 +148,6 @@ class CrawlEngine:
         # per-salt-bucket lineage rows cost one extra tiny job per wave;
         # throughput benches may turn them off (scalar metrics remain)
         self.bucket_lineage = bucket_lineage
-        # rebalance_fetch: round-robin the fetch-join output before the
-        # python extraction stage. OFF by default — extraction runs inside
-        # the scan stage, so parallelism comes from scan splits
-        # (maxPartitionBytes, session.py) and the shuffle would move the
-        # whole wave's page bytes for nothing. Turn on only for layouts
-        # whose files can't split (few huge row groups).
-        self.rebalance_fetch = rebalance_fetch
         # Bloom seen-set pre-filter (north_rule). Off by default in the
         # sandbox: the exact anti-join is cheaper below ~10^7 frontier rows
         # (BENCH notes); at cluster scale this flag is the difference
@@ -439,81 +437,19 @@ class CrawlEngine:
         new_rows.unpersist()
         return n
 
-    # ------------------------------------------------------------- one wave
-    def _fused_fetch_extract(self, wave_df: DataFrame, npart: int) -> DataFrame:
-        """The wave hot path, unexecuted: broadcast the (small) wave against
-        the pages table and run sniff → route → extraction inside the scan
-        stage itself — one pages scan, zero shuffles, one Arrow crossing
-        (html routes only), payload bytes dropped unless a downstream route
-        consumes them. A named method (round-4 verdict #5) so plan audits —
-        the bench plan-guard and tests — can assert the physical shape
-        (BroadcastHashJoin, no Exchange, ArrowEvalPython only) without
-        running a wave; run_wave caches the returned frame."""
-        hits = self._pages_for_wave(wave_df).join(
-            F.broadcast(wave_df), on="url", how="inner"
-        )
-        if self.rebalance_fetch:
-            # pathological layouts only (few huge files that defeat split
-            # planning): round-robin the joined rows before extraction.
-            # Costs a full shuffle of the wave's page bytes — prefer a
-            # smaller maxPartitionBytes when the table layout allows.
-            hits = hits.repartition(npart)
-        fetched = (
-            hits
-            .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
-            .withColumn("content_type", sniff.sniff_content_type(F.col("html"), F.col("file_extension")))
-            .withColumn("route", routing.route_col(routing.sanitize_content_type_col(F.col("content_type"))))
-            .withColumn("_exhtml", F.when(
-                F.col("route").isin("html", "plain_text"), F.col("html")))
-        )
-        if self.extract_raw:
-            # Reference gates raw_webcontent on is_html_content
-            # (playwrightcrawler.py:5150-5153); its plain-text handler records
-            # none — so guard on route, not on the widened _exhtml (which also
-            # carries plain_text bytes for the fused extraction UDF).
-            fetched = fetched.withColumn(
-                "raw_webcontent",
-                F.substring(
-                    sniff.decode_utf8_replace(
-                        F.when(F.col("route") == "html", F.col("_exhtml"))
-                    ),
-                    1, config.MAX_WEBCONTENT_SIZE,
-                ),
-            )
-        return (
-            udfs.with_extraction(fetched, html_col="_exhtml", url_col="url",
-                                 route_col="route")
-            # plain-text decode rides the same Arrow crossing (route-aware
-            # UDF), so NO route's payload bytes survive into the cache —
-            # the commit stage downstream is pure JVM column work
-            .drop("_exhtml", "html")
-        )
-
-    def run_wave(self, wave: int) -> dict:
-        t0 = time.time()
-        tmarks = {}
-
-        def mark(label):
-            tmarks[label] = round(time.time() - t0 - sum(tmarks.values()), 2)
-
-        spark = self.spark
-        frontier_df = self._frontier()
-        candidates = frontier_df.filter(~F.col("visited"))
-
-        method, selected = fr.weighted_select(
-            candidates,
-            size=self.wave_size,
-            seed=self.seed + wave,
-            quota=self.quota,
-            weights=self.method_weights,
-        )
-        selected = selected.select("url", "url_hash", "host", "depth", "discovered_at")
-        robots_denied = 0
+    # ----------------------------------------------------------- wave stages
+    def _robots_step(self, selected: DataFrame) -> tuple[DataFrame, int, int]:
+        """Robots + crawl-delay politeness over a selection of frontier rows
+        (url, url_hash, host, depth, discovered_at). Returns the selection,
+        cached, with a ``_denied`` flag — every row in it is consumed by
+        the frontier commit — and the counts of denied and allowed rows,
+        from ONE aggregate action."""
         if self.robots is not None:
             # north_rule: broadcast the (tiny) robots table. Disallowed rows
-            # are NOT crawled but ARE consumed (visited-flipped below) —
-            # otherwise the same denied rows win the selection every wave
-            # and a fully-denied wave would masquerade as frontier-exhausted.
+            # are NOT crawled but ARE consumed (visited-flipped by the
+            # frontier commit) — otherwise the same denied rows win the
+            # selection every wave and a fully-denied wave would masquerade
+            # as frontier-exhausted.
             selected = (
                 selected.join(F.broadcast(self.robots), on="host", how="left")
                 .withColumn(
@@ -550,74 +486,80 @@ class CrawlEngine:
         else:
             selected = selected.withColumn("_denied", F.lit(False))
         selected = selected.cache()
-        # ACTION 1: one aggregate gives pre-robots total + denied split
         sel_counts = {
             bool(r["_denied"]): r["n"]
             for r in selected.groupBy("_denied").agg(F.count("*").alias("n")).collect()
         }
-        candidates_selected = sum(sel_counts.values())
-        robots_denied = sel_counts.get(True, 0)
-        urls_selected = sel_counts.get(False, 0)
-        mark("t_select")
-        if candidates_selected == 0:
-            # terminal ONLY when the pre-robots selection is empty — a wave
-            # in which every selected URL is robots-denied still progresses
-            # (the denied rows are flipped visited below via `selected`)
-            selected.unpersist()
-            return {"wave": wave, "method": method, "urls_selected": 0, "done": True}
-        wave_df = selected.filter(~F.col("_denied")).drop("_denied")
+        return selected, sel_counts.get(True, 0), sel_counts.get(False, 0)
 
-        # partition target for the wave-sized frames: enough slices to use
-        # the cores, never hundreds of near-empty python-UDF tasks
-        npart = max(1, min(
+    def _npart(self, urls_selected: int) -> int:
+        """Partition target for the wave-sized frames: enough slices to use
+        the cores, never hundreds of near-empty python-UDF tasks."""
+        return max(1, min(
             int(self.spark.conf.get("spark.sql.shuffle.partitions")),
             urls_selected // 128 + 1,
         ))
 
-        # ---- fetch+extract, ONE PASS: broadcast the small wave against the
-        # big pages table and run sniff → route → extraction inside the
-        # scan stage itself. INNER join (either side buildable) — a
-        # left-outer can't broadcast its preserved side; dead links are
-        # recovered afterwards by a tiny anti-join of the wave against the
-        # fetched urls, so the 10^10-row pages table is scanned exactly
-        # once and NEVER shuffled, and the page bytes never leave the scan
-        # stage: they cross the Arrow boundary once (html routes only, via
-        # a when() guard) and are dropped before the cache. The earlier
-        # two-pass shape (cache the joined html, then extract from the
-        # cache) tripled the byte traffic — shuffle + cache build + cache
-        # re-read — and quantized the python-heavy extraction into
-        # shuffle.partitions coarse tasks, whose straggler tail idled most
-        # cores at low parallelism (round-4 probe: a 190 s 8-task
-        # extraction stage on 4 cores with a 40 s one-task tail).
-        # Parallelism here comes from SCAN SPLITS — maxPartitionBytes is
-        # sized (session.py) so a wave's pages span hundreds of fine tasks
-        # (~1-2 s of python each), which pack evenly at any core count.
-        fetched = self._fused_fetch_extract(wave_df, npart).cache()
-        mark("t_fetch")
-        # ACTION 1: populate the cache once — every downstream consumer
-        # (missing anti-join, crawled write, email branch, link pipeline)
-        # reads extraction RESULTS from the InMemoryRelation; without the
-        # explicit materialization AQE submits their query stages
-        # concurrently and each recomputes the scan+extract pipeline.
-        fetched.count()
-        mark("t_extract")
-        missing = (
-            wave_df.join(F.broadcast(fetched.select("url")), on="url", how="left_anti")
+    def _fused_fetch_extract(self, wave_df: DataFrame) -> DataFrame:
+        """The wave hot path, unexecuted: broadcast the (small) wave against
+        the pages table and run sniff → route → extraction inside the scan
+        stage itself — one pages scan, zero shuffles, one Arrow crossing
+        (html routes only), payload bytes dropped unless a downstream route
+        consumes them. A named method (round-4 verdict #5) so plan audits —
+        the bench plan-guard and tests — can assert the physical shape
+        (BroadcastHashJoin, no Exchange, ArrowEvalPython only) without
+        running a wave; the caller caches the returned frame.
+
+        INNER join (either side buildable) — a left-outer can't broadcast
+        its preserved side; dead links are recovered by a tiny anti-join
+        of the wave against the fetched urls (``_build_crawled``), so the
+        10^10-row pages table is scanned exactly once and NEVER shuffled.
+        The earlier two-pass shape (cache the joined html, then extract
+        from the cache) tripled the byte traffic and quantized the
+        python-heavy extraction into shuffle.partitions coarse tasks
+        (round-4 probe: a 190 s 8-task extraction stage on 4 cores with a
+        40 s one-task tail). Parallelism here comes from SCAN SPLITS —
+        maxPartitionBytes is sized (session.py) so a wave's pages span
+        many fine tasks, which pack evenly at any core count."""
+        fetched = (
+            self._pages_for_wave(wave_df).join(F.broadcast(wave_df), on="url", how="inner")
             .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
-            .withColumn("content_type", F.lit(""))
-            .withColumn("route", F.lit("missing"))
+            .withColumn("content_type", sniff.sniff_content_type(F.col("html"), F.col("file_extension")))
+            .withColumn("route", routing.route_col(routing.sanitize_content_type_col(F.col("content_type"))))
+            .withColumn("_exhtml", F.when(
+                F.col("route").isin("html", "plain_text"), F.col("html")))
+        )
+        if self.extract_raw:
+            # Reference gates raw_webcontent on is_html_content
+            # (playwrightcrawler.py:5150-5153); its plain-text handler records
+            # none — so guard on route, not on the widened _exhtml (which also
+            # carries plain_text bytes for the fused extraction UDF).
+            fetched = fetched.withColumn(
+                "raw_webcontent",
+                F.substring(
+                    sniff.decode_utf8_replace(
+                        F.when(F.col("route") == "html", F.col("_exhtml"))
+                    ),
+                    1, config.MAX_WEBCONTENT_SIZE,
+                ),
+            )
+        return (
+            udfs.with_extraction(fetched, html_col="_exhtml", url_col="url",
+                                 route_col="route")
+            # plain-text decode rides the same Arrow crossing (route-aware
+            # UDF), so NO route's payload bytes survive into the cache —
+            # the commit stage downstream is pure JVM column work
+            .drop("_exhtml", "html")
         )
 
-        html_pages = fetched.filter(F.col("route") == "html")
-
-        # ---- crawled rows (A4 schema, reference §1.1b) — ACTION 2 (write)
-        crawled_all = self._build_crawled(fetched, html_pages, missing, wave, fused=True)
-        obs_crawl = Observation()
-        crawled_all = crawled_all.observe(
-            obs_crawl,
-            F.count(F.lit(1)).alias("rows"),
-            F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)).alias("fetched_ok"),
-            F.count(F.when(F.col("route") == "email", 1)).alias("emails"),
+    def _append_crawled(self, fetched: DataFrame, wave_df: DataFrame, wave: int,
+                        urls_selected: int, meta: dict, **counters) -> tuple[int, dict]:
+        """Crawled commit: the wave's A4 rows (``_build_crawled``) appended
+        as one delta, with ``counters`` (name → aggregate column) riding
+        the write as an Observation. Returns (version, counter values)."""
+        obs = Observation()
+        crawled_all = self._build_crawled(fetched, wave_df, wave).observe(
+            obs, *[c.alias(n) for n, c in counters.items()]
         )
         # Bounded coalesce before the commit (r7, guide §6 small-files /
         # §2.2 fewer-larger tasks): writing straight from the cache
@@ -636,34 +578,21 @@ class CrawlEngine:
         # rounded UP to a multiple of npart: 41 tasks on 32 slots runs
         # 1.28 quantized rounds with 23 slots idle in the tail — the
         # packing loss eats the per-task saving (measured r7)
+        npart = self._npart(urls_selected)
         n_write = npart * max(1, -(-urls_selected // (config.WRITE_TASK_ROWS * npart)))
-        crawled_version = self.lake.crawled.append(
-            spark, crawled_all.coalesce(n_write), meta={"wave": wave})
-        crawl_stats = _obs_get(obs_crawl, {"rows": 0, "fetched_ok": 0, "emails": 0})
-        mark("t_crawled")
+        version = self.lake.crawled.append(
+            self.spark, crawled_all.coalesce(n_write), meta=meta)
+        return version, _obs_get(obs, dict.fromkeys(counters, 0))
 
-        # ---- discovered links → hygiene → anti-join → frontier commit.
-        # The extraction UDF already resolved, split off mailto and
-        # sanitized every href, so the link pipeline reads the cache only.
-        web_links = self._page_links(html_pages).coalesce(npart)
-        if self.hunt:
-            # P16: content URLs and links contribute parent-directory chains
-            # (reference preprocess :1837-1845)
-            def tree_of(df, url_col):
-                return df.select(
-                    F.explode(udfs.directory_tree_links(F.col(url_col))).alias("_l"),
-                    (F.col("depth") + 1).alias("depth"),
-                ).select("_l.*", "depth")
-
-            guarded = web_links.filter(
-                sqlfns.length_ok(F.col("raw")) & ~sqlfns.is_embedded(F.col("raw"))
-            )
-            web_links = (
-                web_links
-                .unionByName(tree_of(wave_df, "url"))
-                .unionByName(tree_of(guarded, "raw"))
-            )
-
+    def _commit_links(self, web_links: DataFrame, selected: DataFrame, wave: int,
+                      meta: dict) -> tuple[int, dict, DataFrame, Observation | None]:
+        """Discovered links → hygiene → seen-set anti-join → ONE O(wave) MoR
+        frontier commit, then compaction on cadence or a Bloom update.
+        ``selected`` is every consumed row (allowed ∪ robots-denied), so
+        denied rows can never win a later selection. Returns (frontier
+        version, link counters, inserted rows, their count Observation);
+        hand the last two to ``_links_new``."""
+        spark = self.spark
         obs_links = Observation()
         # J1/J5 seen-set membership. With use_bloom the frontier is only
         # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
@@ -701,15 +630,13 @@ class CrawlEngine:
 
         # O(wave) MoR commit (north_rule checkpoint/lineage): the increments
         # are the wave's inserts + (url_hash, wave) visited-flips for every
-        # consumed row (`selected` = allowed ∪ robots-denied, so denied rows
-        # can never win a later selection). The frontier table itself is
-        # never rewritten here — read() applies flips as a broadcast join,
-        # and a compaction folds deltas into a fresh base every K waves.
+        # consumed row. The frontier table itself is never rewritten here —
+        # read() applies flips as a broadcast join, and a compaction folds
+        # deltas into a fresh base every K waves.
         flips = selected.select("url_hash").withColumn("wave", F.lit(wave).cast("int"))
         frontier_version = self.lake.frontier.commit_wave(
-            inserts=insert_rows, flips=flips,
-            meta={"wave": wave, "adds_hashes": True},
-        )  # ACTION 3 (two O(wave) writes)
+            inserts=insert_rows, flips=flips, meta={**meta, "adds_hashes": True},
+        )
         if (
             self.lake.frontier.deltas_since_base() >= self.compact_every
             or self.lake.frontier.flip_rows_since_base() >= self.compact_flip_rows
@@ -729,18 +656,115 @@ class CrawlEngine:
             obs_links,
             {"links_seen": 0, **{f"drop_{r}": 0 for r in DROP_REASONS}},
         )
+        return frontier_version, link_stats, insert_rows, obs_insert
+
+    def _links_new(self, insert_rows: DataFrame, obs_insert: Observation | None,
+                   wave: int) -> tuple[int, list]:
+        """links_new and the per-salt-bucket lineage rows (A5/A6) of one
+        ``_commit_links``: one tiny aggregate over the cached inserts with
+        bucket lineage, else the write's Observation."""
+        if obs_insert is not None:
+            return int(_obs_get(obs_insert, {"links_new": 0})["links_new"]), []
+        bucket_rows = [
+            (wave, f"bucket:{r['host_salt']}", "links_new", r["count"])
+            for r in insert_rows.groupBy("host_salt").count().collect()
+        ]
+        insert_rows.unpersist()
+        return sum(v for *_, v in bucket_rows), bucket_rows
+
+    def _write_metrics(self, rows, method: str, meta: dict) -> None:
+        """(wave, scope, metric, value) rows → wave_metrics. Metrics are
+        driver-resident counters: write them driver-side (pyarrow) instead
+        of paying a Spark job for ~50 rows."""
+        now = datetime.now(timezone.utc)
+        self.lake.wave_metrics.write_rows(
+            [
+                {"wave": w, "scope": sc, "metric": m, "value": v,
+                 "method": method, "node_id": config.NODE_ID, "committed_at": now}
+                for (w, sc, m, v) in rows
+            ],
+            _METRICS_SCHEMA, meta=meta,
+        )
+
+    # ------------------------------------------------------------- one wave
+    def run_wave(self, wave: int) -> dict:
+        t0 = time.time()
+        tmarks = {}
+
+        def mark(label):
+            tmarks[label] = round(time.time() - t0 - sum(tmarks.values()), 2)
+
+        candidates = self._frontier().filter(~F.col("visited"))
+        method, selected = fr.weighted_select(
+            candidates,
+            size=self.wave_size,
+            seed=self.seed + wave,
+            quota=self.quota,
+            weights=self.method_weights,
+        )
+        # ACTION 1: one aggregate gives the denied/allowed split
+        selected, robots_denied, urls_selected = self._robots_step(
+            selected.select("url", "url_hash", "host", "depth", "discovered_at")
+        )
+        mark("t_select")
+        if robots_denied + urls_selected == 0:
+            # terminal ONLY when the pre-robots selection is empty — a wave
+            # in which every selected URL is robots-denied still progresses
+            # (the denied rows are flipped visited via `selected`)
+            selected.unpersist()
+            return {"wave": wave, "method": method, "urls_selected": 0, "done": True}
+        wave_df = selected.filter(~F.col("_denied")).drop("_denied")
+        npart = self._npart(urls_selected)
+
+        # ---- fetch+extract, ONE PASS inside the pages scan stage
+        fetched = self._fused_fetch_extract(wave_df).cache()
+        mark("t_fetch")
+        # ACTION 2: populate the cache once — every downstream consumer
+        # (missing anti-join, crawled write, email branch, link pipeline)
+        # reads extraction RESULTS from the InMemoryRelation; without the
+        # explicit materialization AQE submits their query stages
+        # concurrently and each recomputes the scan+extract pipeline.
+        fetched.count()
+        mark("t_extract")
+
+        # ---- crawled rows (A4 schema, reference §1.1b) — ACTION 3 (write)
+        crawled_version, crawl_stats = self._append_crawled(
+            fetched, wave_df, wave, urls_selected, meta={"wave": wave},
+            rows=F.count(F.lit(1)),
+            fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
+            emails=F.count(F.when(F.col("route") == "email", 1)),
+        )
+        mark("t_crawled")
+
+        # ---- discovered links → hygiene → anti-join → frontier commit.
+        # The extraction UDF already resolved, split off mailto and
+        # sanitized every href, so the link pipeline reads the cache only.
+        web_links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
+        if self.hunt:
+            # P16: content URLs and links contribute parent-directory chains
+            # (reference preprocess :1837-1845)
+            def tree_of(df, url_col):
+                return df.select(
+                    F.explode(udfs.directory_tree_links(F.col(url_col))).alias("_l"),
+                    (F.col("depth") + 1).alias("depth"),
+                ).select("_l.*", "depth")
+
+            guarded = web_links.filter(
+                sqlfns.length_ok(F.col("raw")) & ~sqlfns.is_embedded(F.col("raw"))
+            )
+            web_links = (
+                web_links
+                .unionByName(tree_of(wave_df, "url"))
+                .unionByName(tree_of(guarded, "raw"))
+            )
+        # ACTION 4 (two O(wave) writes)
+        frontier_version, link_stats, insert_rows, obs_insert = self._commit_links(
+            web_links, selected, wave, meta={"wave": wave}
+        )
         mark("t_frontier")
 
         # ---- metrics + per-bucket lineage (A5/A6) — cached, so cheap
-        if self.bucket_lineage:
-            bucket_rows = [
-                (wave, f"bucket:{r['host_salt']}", "links_new", r["count"])
-                for r in insert_rows.groupBy("host_salt").count().collect()  # ACTION 4
-            ]
-            links_new = sum(v for _, _, _, v in bucket_rows)
-        else:
-            bucket_rows = []
-            links_new = int(_obs_get(obs_insert, {"links_new": 0})["links_new"])
+        links_new, bucket_rows = self._links_new(insert_rows, obs_insert, wave)
         drop_rows = [
             (wave, f"drop:{r}", "links_dropped", int(link_stats[f"drop_{r}"]))
             for r in DROP_REASONS
@@ -756,26 +780,11 @@ class CrawlEngine:
             (wave, "wave", "links_new", links_new),
         ]
         mark("t_buckets")
-        # metrics are driver-resident counters: write them driver-side
-        # (pyarrow) instead of paying a Spark job for ~50 rows
-        now = datetime.now(timezone.utc)
-        metric_rows = [
-            {
-                "wave": w, "scope": sc, "metric": mname, "value": v,
-                "method": method, "node_id": config.NODE_ID, "committed_at": now,
-            }
-            for (w, sc, mname, v) in scalar + bucket_rows + drop_rows
-        ]
-        self.lake.wave_metrics.write_rows(
-            metric_rows, _METRICS_SCHEMA, meta={"wave": wave}
-        )  # ACTION 5 (driver-local)
+        self._write_metrics(scalar + bucket_rows + drop_rows, method, meta={"wave": wave})
         mark("t_metrics")
 
-        unp = [selected, fetched]  # html_pages is a view of fetched
-        if self.bucket_lineage:
-            unp.append(insert_rows)
-        for df in unp:
-            df.unpersist()
+        selected.unpersist()
+        fetched.unpersist()
         return {
             "wave": wave,
             "method": method,
@@ -794,138 +803,61 @@ class CrawlEngine:
     # ------------------------------------------------- fast-extension pass
     def run_fast_extension_pass(self, wave: int, size: int = 50_000) -> dict:
         """X7/X8 (reference run_fast_extension_pass :4596-4768 +
-        fast_extension_crawler :4770-4902): candidates whose URL carries a
-        mapped file extension are routed DIRECTLY — fetch bytes, sniff the
-        actual type, record the extension↔route consistency verdict — with
-        no HTML extraction and no link discovery for rows whose bytes match
-        the extension. Rows that SNIFF AS HTML despite a binary extension
-        (a .png URL serving a page) take the reference's fallback: the full
-        extraction + link-discovery path runs on them inside this pass
-        (reference falls back to get_page on content-type mismatch,
-        :4826-4860) — they must not be consumed without extraction
-        (round-2 advice). Selected rows are consumed via O(wave) flips;
-        discovered links commit as inserts in the same atomic wave."""
-        spark = self.spark
-        frontier_df = self._frontier()
+        fast_extension_crawler :4770-4902): a wave whose selector takes the
+        oldest candidates whose URL carries a mapped file extension, run
+        through the wave's own stages — robots + crawl-delay, fused
+        fetch+extract, crawled commit, link → seen-set → frontier commit.
+        Each crawled row records the extension↔route consistency verdict.
+        Rows whose bytes match the extension carry no text and discover no
+        links. Rows that SNIFF AS HTML despite a binary extension (a .png
+        URL serving a page) get the full extraction + link discovery of
+        the routed UDF, the reference's fallback to get_page on a
+        content-type mismatch (:4826-4860). No open-directory hunting."""
         cand = (
-            frontier_df.filter(~F.col("visited"))
+            self._frontier().filter(~F.col("visited"))
             .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
             .withColumn("expected_route", routing.expected_route_for_extension_col(F.col("file_extension")))
             .filter(F.col("expected_route") != "")
         )
         sel = fr.per_host_quota(cand, F.col("discovered_at").asc(), self.quota)
-        sel = (
+        selected, robots_denied, urls_selected = self._robots_step(
             fr.filter_blocked_hosts(sel)
             .orderBy("discovered_at", "url")
             .limit(size)
-            .select("url", "url_hash", "host", "depth", "file_extension")
-            .cache()
+            .select("url", "url_hash", "host", "depth", "discovered_at")
         )
-        n = sel.count()
-        if n == 0:
-            sel.unpersist()
+        if robots_denied + urls_selected == 0:
+            selected.unpersist()
             return {"wave": wave, "op": "fast_pass", "urls_selected": 0, "done": True}
-
-        fetched = (
-            self._pages_for_wave(sel).join(F.broadcast(sel), on="url", how="inner")
-            .withColumn("content_type", sniff.sniff_content_type(F.col("html"), F.col("file_extension")))
-            .withColumn("route", routing.route_col(routing.sanitize_content_type_col(F.col("content_type"))))
-            # cache hygiene (same rule as the wave): the only downstream
-            # consumers of payload bytes are the plain-text decode and the
-            # html-mismatch extraction fallback — a fast-pass wave is
-            # mostly binary assets whose bytes would otherwise sit in the
-            # cache for nothing (the byte sink is the downloader
-            # operator's write_root path, not this pass)
-            .withColumn("html", F.when(F.col("route").isin("plain_text", "html"), F.col("html")))
-        ).cache()
-        fetched.count()  # populate before dependent jobs (broadcast races)
-        missing = (
-            sel.join(F.broadcast(fetched.select("url")), on="url", how="left_anti")
-            .withColumn("html", F.lit(None).cast("binary"))
-            .withColumn("content_type", F.lit(""))
-            .withColumn("route", F.lit("missing"))
+        wave_df = selected.filter(~F.col("_denied")).drop("_denied")
+        npart = self._npart(urls_selected)
+        fetched = self._fused_fetch_extract(wave_df).cache()
+        fetched.count()
+        meta = {"wave": wave, "op": "fast_pass"}
+        _, stats = self._append_crawled(
+            fetched, wave_df, wave, urls_selected, meta=meta,
+            fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
+            consistent=F.count(F.when(F.col("ext_consistent"), 1)),
         )
-
-        # mismatch fallback: html-sniffed rows get the full extraction path
-        html_pages = None
-        html_rows_in = fetched.filter(F.col("route") == "html")
-        if html_rows_in.limit(1).count():
-            if self.extract_raw:
-                html_rows_in = html_rows_in.withColumn(
-                    "raw_webcontent",
-                    F.substring(
-                        sniff.decode_utf8_replace(F.col("html")), 1, config.MAX_WEBCONTENT_SIZE
-                    ),
-                )
-            html_pages = udfs.with_extraction(
-                html_rows_in, html_col="html", url_col="url"
-            ).drop("html").cache()
-            html_pages.count()
-
-        crawled_all = self._build_crawled(fetched, html_pages, missing, wave)
-        obs = Observation()
-        crawled_all = crawled_all.observe(
-            obs,
-            # same predicate as the normal wave: email records synthesized
-            # from mailto links on fallback-extracted pages are not fetches
-            F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)).alias("fetched_ok"),
-            F.count(F.when(F.col("ext_consistent"), 1)).alias("consistent"),
-        )
-        self.lake.crawled.append(spark, crawled_all, meta={"wave": wave, "op": "fast_pass"})
-        stats = _obs_get(obs, {"fetched_ok": 0, "consistent": 0})
-
-        # discovered links from fallback-extracted pages → same hygiene +
-        # seen-set pipeline as a normal wave, committed with the flips
-        insert_rows = None
-        links_new = 0
-        if html_pages is not None:
-            hashed = with_host_salt(
-                self._dedupe_links(self._classify_links(self._page_links(html_pages))),
-                buckets=config.HOST_SALT_BUCKETS,
-            ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
-            insert_rows = (
-                seen.anti_join_seen(
-                    hashed, self.lake.frontier.read_keys(spark), spark,
-                    blooms=self._bloom_rows if self.use_bloom else None,
-                )
-                .withColumn("visited", F.lit(False))
-                .withColumns(self._frontier_row_cols(wave))
-                .select(*FRONTIER_COLS)
-                .cache()
-            )
-            links_new = insert_rows.count()
-
-        flips = sel.select("url_hash").withColumn("wave", F.lit(wave).cast("int"))
-        self.lake.frontier.commit_wave(
-            inserts=insert_rows, flips=flips,
-            meta={"wave": wave, "op": "fast_pass",
-                  "adds_hashes": insert_rows is not None},
-        )
-        self._frontier_cur = self.lake.frontier.read(spark)
-        if insert_rows is not None:
-            self._bloom_update(insert_rows)
-            insert_rows.unpersist()
-        now = datetime.now(timezone.utc)
-        self.lake.wave_metrics.write_rows(
+        links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
+        _, _, insert_rows, obs_insert = self._commit_links(links, selected, wave, meta=meta)
+        links_new, _ = self._links_new(insert_rows, obs_insert, wave)
+        self._write_metrics(
             [
-                {"wave": wave, "scope": "fast_pass", "metric": m, "value": v,
-                 "method": "fast_extension", "node_id": config.NODE_ID,
-                 "committed_at": now}
+                (wave, "fast_pass", m, v)
                 for m, v in (
-                    ("urls_selected", n),
+                    ("urls_selected", urls_selected),
                     ("urls_fetched", int(stats["fetched_ok"])),
                     ("ext_consistent", int(stats["consistent"])),
                     ("links_new", links_new),
                 )
             ],
-            _METRICS_SCHEMA, meta={"wave": wave, "op": "fast_pass"},
+            "fast_extension", meta=meta,
         )
-        sel.unpersist()
+        selected.unpersist()
         fetched.unpersist()
-        if html_pages is not None:
-            html_pages.unpersist()
         return {
-            "wave": wave, "op": "fast_pass", "urls_selected": n,
+            "wave": wave, "op": "fast_pass", "urls_selected": urls_selected,
             "ext_consistent": int(stats["consistent"]),
             "links_new": links_new, "done": False,
         }
@@ -951,38 +883,31 @@ class CrawlEngine:
                 kept.select(*FRONTIER_COLS), meta={"op": "cleanup", "adds_hashes": False}
             )
             self._frontier_cur = self.lake.frontier.read(self.spark)
-            now = datetime.now(timezone.utc)
-            self.lake.wave_metrics.write_rows(
-                [
-                    {"wave": wave, "scope": f"cleanup:{rule}", "metric": "deleted",
-                     "value": v, "method": "cleanup", "node_id": config.NODE_ID,
-                     "committed_at": now}
-                    for rule, v in counts.items()
-                ],
-                _METRICS_SCHEMA, meta={"op": "cleanup"},
+            self._write_metrics(
+                [(wave, f"cleanup:{rule}", "deleted", v) for rule, v in counts.items()],
+                "cleanup", meta={"op": "cleanup"},
             )
         return {"wave": wave, "op": "cleanup", "deleted": deleted, "rules": counts}
 
     # ----------------------------------------------------- crawled assembly
-    def _build_crawled(self, fetched, html_pages, missing, wave: int,
-                       fused: bool = False) -> DataFrame:
-        """A4-schema rows, JOIN-FREE: the extraction output already carries
-        every fetched column, so html rows, non-html rows, dead links and
-        email records are four unions over a MINIMAL common shape — the
-        obvious alternative (join text/words back onto fetched) shuffles
-        2× the wave's bytes. The enrichment projection is applied ONCE to
-        the union so whole-stage codegen stays under the method-size
-        limit."""
-        # charset-ladder decode (X5): strict-UTF-8 fast path, then BOM/meta
-        # charset/detector — the reference chardet-decodes every text body
-        # (playwrightcrawler.py:5091-5097), so a Latin-1 page must yield
-        # its decoded text, not U+FFFD runs; never strict-only (an invalid
-        # payload would abort the wave under ANSI). The html column is
-        # when()-guarded so only plain-text rows cross the Arrow boundary.
-        plain_text = F.substring(
-            udfs.decode_text(F.when(F.col("route") == "plain_text", F.col("html"))),
-            1, config.MAX_WEBCONTENT_SIZE,
+    def _build_crawled(self, fetched: DataFrame, wave_df: DataFrame, wave: int) -> DataFrame:
+        """A4-schema rows of one wave, JOIN-FREE: ``fetched`` (the cached
+        ``_fused_fetch_extract`` output) already carries the extraction
+        columns of both text routes, so fetched rows, dead links (the
+        ``wave_df`` rows ``fetched`` lacks) and email records are three
+        unions over a MINIMAL common shape — the obvious alternative (join
+        text/words back onto fetched) shuffles 2× the wave's bytes. The
+        enrichment projection is applied ONCE to the union so whole-stage
+        codegen stays under the method-size limit. Pure JVM: no python
+        node rides the commit stage, whose task count is the scan-split
+        count."""
+        missing = (
+            wave_df.join(F.broadcast(fetched.select("url")), on="url", how="left_anti")
+            .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
+            .withColumn("content_type", F.lit(""))
+            .withColumn("route", F.lit("missing"))
         )
+        html_pages = fetched.filter(F.col("route") == "html")
 
         def shape(df, text_col, words_col, od_col, od_pat_col, source_col):
             cols = [
@@ -1009,40 +934,16 @@ class CrawlEngine:
             .when(F.col("route") == "image", "content_type_images_no_download")
             .otherwise(F.concat(F.lit("content_type_"), F.col("route")))
         )
-        # html rows are extracted separately when html_pages is given; in
-        # the fast pass (html_pages=None) an html-sniffed row is recorded
-        # visited WITHOUT extraction (reference fast pass defers those to
-        # the full crawl) — it must not vanish from crawled
-        if fused:
-            # wave path: `fetched` already carries the extraction columns
-            # for BOTH text routes (html walk + plain-text charset decode,
-            # computed in the scan pass's single Arrow crossing), so this
-            # projection is pure JVM — no python node rides the commit
-            # stage, whose task count is the scan-split count
-            is_html = F.col("route") == "html"
-            is_text = F.col("route").isin("html", "plain_text")
-            rows = shape(
-                fetched,
-                F.when(is_text, F.col("text_extracted")).otherwise(F.lit(None).cast("string")),
-                F.when(is_text, F.col("words")).otherwise(F.lit(None).cast("array<string>")),
-                F.when(is_html, F.col("isopendir")).otherwise(F.lit(False)),
-                F.when(is_html, F.col("opendir_pattern")).otherwise(F.lit("")),
-                F.when(is_html, F.lit("content_type_download")).otherwise(other_source),
-            )
-        else:
-            non_html = fetched if html_pages is None else fetched.filter(F.col("route") != "html")
-            rows = shape(
-                non_html,
-                plain_text, udfs.top_words(plain_text),
-                F.lit(False), F.lit(""), other_source,
-            )
-            if html_pages is not None:
-                rows = shape(
-                    html_pages,
-                    F.col("text_extracted"), F.col("words"),
-                    F.col("isopendir"), F.col("opendir_pattern"),
-                    F.lit("content_type_download"),
-                ).unionByName(rows)
+        is_html = F.col("route") == "html"
+        is_text = F.col("route").isin("html", "plain_text")
+        rows = shape(
+            fetched,
+            F.when(is_text, F.col("text_extracted")).otherwise(F.lit(None).cast("string")),
+            F.when(is_text, F.col("words")).otherwise(F.lit(None).cast("array<string>")),
+            F.when(is_html, F.col("isopendir")).otherwise(F.lit(False)),
+            F.when(is_html, F.col("opendir_pattern")).otherwise(F.lit("")),
+            F.when(is_html, F.lit("content_type_download")).otherwise(other_source),
+        )
         missing_rows = shape(
             missing,
             F.lit(None).cast("string"), F.lit(None).cast("array<string>"),
@@ -1053,7 +954,7 @@ class CrawlEngine:
             if self.extract_raw else []
         )
         # one email record per valid mailto link on an extracted html page
-        email_rows = None if html_pages is None else (
+        email_rows = (
             html_pages.select(
                 F.col("url").alias("parent_url"),
                 F.col("host").alias("parent_host"),
@@ -1081,9 +982,7 @@ class CrawlEngine:
             for k, v in sqlfns.enrichment_base_columns(F.col("enrich_url")).items()
             if k != "file_extension"  # page rows keep the fetch-time extension
         }
-        rows = rows.unionByName(missing_rows)
-        if email_rows is not None:
-            rows = rows.unionByName(email_rows)
+        rows = rows.unionByName(missing_rows).unionByName(email_rows)
         # extension↔route consistency (reference handle_content_type
         # :2794-2801 / fast_extension_crawler :4826-4829): NULL when the
         # page was never fetched, true when the extension is unmapped

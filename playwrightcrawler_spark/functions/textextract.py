@@ -450,13 +450,13 @@ def _fast_parse(html: str):
 def parse_html(html: str) -> tuple[list[str], list[str]]:
     """THE single parser-selection point: html string → (text_parts, links).
 
-    Every extraction path (``extract_text``, ``extract_links``,
-    ``words_from_html`` and the fused crawl-hot-path UDF ``extract_all``)
-    goes through here, so the engine can never use different parsers on
-    different paths. When bs4 is importable (production clusters — the
-    reference's requirements.txt ships it) the parse is BeautifulSoup
-    ``html.parser`` — the very library the reference uses
-    (get_min_webcontent, playwrightcrawler.py:3733-3768); otherwise the
+    Every extraction path (``extract_text``, ``words_from_html`` and the
+    per-page kernel ``udfs._extract_page_row`` behind the crawl's one
+    extraction UDF) goes through here, so the engine can never use
+    different parsers on different paths. When bs4 is importable
+    (production clusters — the reference's requirements.txt ships it) the
+    parse is BeautifulSoup ``html.parser`` — the very library the reference
+    uses (get_min_webcontent, playwrightcrawler.py:3733-3768); otherwise the
     fast scanner handles the well-formed subset and the stdlib walker the
     rest, both implementing the identical spec (pinned to the bs4 path by
     golden fixtures in tests/test_textextract.py, and to each other by the

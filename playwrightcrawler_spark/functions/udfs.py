@@ -75,23 +75,6 @@ def extract_text(html: pd.Series) -> pd.Series:
     return html.map(textextract.extract_text, na_action="ignore").fillna("")
 
 
-@pandas_udf(T.StringType())
-def decode_text(raw: pd.Series) -> pd.Series:
-    """Charset-ladder decode for text payloads (X5; reference
-    handle_response chardet path, playwrightcrawler.py:5091-5097). Feed a
-    when()-guarded column so only text-route rows' bytes cross the Arrow
-    boundary — python UDFs are not short-circuited by F.when."""
-    return raw.map(
-        lambda b: textextract.detect_decode(bytes(b)), na_action="ignore"
-    )
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def top_words(texts: pd.Series) -> pd.Series:
-    """Per-document top-24k token list (E5; Counter tiebreak parity)."""
-    return texts.map(textextract.top_words, na_action="ignore")
-
-
 @pandas_udf(T.BooleanType())
 def fast_scan_bails(html: pd.Series) -> pd.Series:
     """Diagnostic (round-5 verdict #4): whether each page bails out of the
@@ -116,10 +99,9 @@ _EXTRACT_ALL_SCHEMA = T.StructType([
 
 
 def _extract_page_row(raw, url, route: str = "html"):
-    """THE per-page extraction kernel, shared by ``extract_all`` and
-    ``extract_all_routed`` so the invariant path and the wave hot path
-    cannot drift (round-5 verdict #2 / advice: the two UDFs used to carry
-    separate copies of this body).
+    """THE per-page extraction kernel behind ``extract_all_routed``, the
+    one extraction UDF (the wave and the fast-extension pass both run it);
+    benches and checks call it directly outside Spark.
 
     html (default) route — fused E1+E2/E5+E4+E6+U1+U3+P1+P4: ONE decode +
     ONE DOM walk produces text, word list and the open-dir verdict; each
@@ -130,9 +112,10 @@ def _extract_page_row(raw, url, route: str = "html"):
     ``textextract.parse_html`` (bs4 when installed, fast-scan/stdlib
     walker here).
 
-    plain_text route — charset-ladder decode (X5) + top_words, exactly the
-    column pipeline it replaced: substring(decode,1,MAX) then top_words of
-    the TRUNCATED text; null bytes → null text/words.
+    plain_text route — charset-ladder decode (X5: strict UTF-8, then
+    BOM/meta charset/detector; the reference chardet-decodes every text
+    body, playwrightcrawler.py:5091-5097) cut to MAX_WEBCONTENT_SIZE, then
+    top_words of the TRUNCATED text; null bytes → null text/words.
     """
     if route == "plain_text":
         if raw is None:
@@ -152,15 +135,6 @@ def _extract_page_row(raw, url, route: str = "html"):
 
 
 @pandas_udf(_EXTRACT_ALL_SCHEMA)
-def extract_all(html: pd.Series, urls: pd.Series) -> pd.DataFrame:
-    """Fused single-parse extraction over html rows (no routing) — thin
-    Arrow wrapper over ``_extract_page_row``; the crawl hot path uses the
-    routed variant below, same kernel."""
-    rows = [_extract_page_row(raw, url) for raw, url in zip(html, urls)]
-    return pd.DataFrame(rows, columns=_EXTRACT_ALL_SCHEMA.fieldNames())
-
-
-@pandas_udf(_EXTRACT_ALL_SCHEMA)
 def extract_all_routed(html: pd.Series, urls: pd.Series, routes: pd.Series) -> pd.DataFrame:
     """Route-aware fused extraction: html rows take the DOM walk,
     plain_text rows the charset-ladder decode + top_words — so the ENTIRE
@@ -176,18 +150,13 @@ def extract_all_routed(html: pd.Series, urls: pd.Series, routes: pd.Series) -> p
     return pd.DataFrame(rows, columns=_EXTRACT_ALL_SCHEMA.fieldNames())
 
 
-def with_extraction(df, html_col: str = "html", url_col: str = "url",
-                    route_col: str | None = None):
-    """Append text/words/links/emails/opendir columns via the fused single-parse
-    UDF (one Arrow transfer of ``html``, one HTMLParser walk per page).
-    With ``route_col`` the route-aware UDF also folds the plain-text
-    decode into the same crossing. The struct is bound to a column first
-    so the plan holds exactly one ArrowEvalPython node — field access
-    never re-invokes the UDF."""
-    if route_col is not None:
-        ex = extract_all_routed(F.col(html_col), F.col(url_col), F.col(route_col))
-    else:
-        ex = extract_all(F.col(html_col), F.col(url_col))
+def with_extraction(df, html_col: str, url_col: str, route_col: str):
+    """Append text/words/links/emails/opendir columns via the route-aware
+    fused UDF (one Arrow transfer of ``html``, one HTMLParser walk per html
+    page, the plain-text decode in the same crossing). The struct is bound
+    to a column first so the plan holds exactly one ArrowEvalPython node —
+    field access never re-invokes the UDF."""
+    ex = extract_all_routed(F.col(html_col), F.col(url_col), F.col(route_col))
     out = df.withColumn("_ex", ex)
     for field in _EXTRACT_ALL_SCHEMA.fieldNames():
         out = out.withColumn(field, F.col(f"_ex.{field}"))

@@ -178,6 +178,48 @@ def test_fast_extension_pass_engine(spark, pages_dir, tmp_path_factory):
     assert m2["urls_selected"] == 0 and m2["done"]
 
 
+def test_fast_extension_pass_honours_robots(spark, pages_dir, tmp_path_factory):
+    """The fast pass runs the wave's robots step: a disallowed URL is
+    consumed (visited) but never fetched into crawled, and a crawl-delay
+    host gets one URL per pass while the rest stay unvisited for later."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+
+    robots = spark.createDataFrame(
+        [("cdn.example.com", ["/assets/"], None),
+         ("media.example.com", [], 1000)],
+        "host string, disallow_prefixes array<string>, crawl_delay_ms int",
+    )
+    wh = tmp_path_factory.mktemp("wh_fast_robots")
+    eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=100,
+                      per_host_quota=5, method_weights={"oldest": 1},
+                      robots_rules=robots)
+    eng.bootstrap([
+        "https://cdn.example.com/assets/logo.png",
+        "https://cdn.example.com/assets/fake.png",
+        "https://cdn.example.com/assets/page.png",
+        "https://docs.example.com/manual.pdf",
+        "https://media.example.com/clip.mp4",
+        "https://media.example.com/song.mp3",           # crawl-delay overflow
+        "https://dead.example.net/gone.pdf",
+        "https://seed0.example.org/",
+    ])
+    m = eng.run_fast_extension_pass(wave=1)
+    assert m["urls_selected"] == 3                      # pdf, mp4, dead pdf
+    crawled = {r.url for r in eng.lake.crawled.read(spark).select("url").collect()}
+    assert crawled == {
+        "https://docs.example.com/manual.pdf",
+        "https://media.example.com/clip.mp4",
+        "https://dead.example.net/gone.pdf",
+    }
+    fr = {r.url: r.visited for r in eng.lake.frontier.read(spark).collect()}
+    assert fr["https://cdn.example.com/assets/logo.png"]
+    assert fr["https://cdn.example.com/assets/page.png"]
+    assert not fr["https://media.example.com/song.mp3"]
+    # the disallowed html page was never extracted: no link discovered
+    assert m["links_new"] == 0
+    assert "https://hidden.example.org/found.html" not in fr
+
+
 def test_mirror_sink_writes_contained_tree(spark, tmp_path):
     """S6 byte sink: bytes land at the P19 mirror path under the root,
     hostile URLs (traversal, encoded traversal, unsafe chars, queries,

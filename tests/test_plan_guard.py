@@ -64,7 +64,7 @@ def test_wave_plan_broadcasts_the_wave_side(spark, pages_dir, tmp_path):
         .withColumn("depth", F.lit(0))
         .withColumn("discovered_at", F.current_timestamp())
     )
-    df = eng._fused_fetch_extract(wave_df, npart=4)
+    df = eng._fused_fetch_extract(wave_df)
     assert audit.has_broadcast_join(df)
     assert audit.shuffle_count(df) == 0
     assert audit.uses_arrow_udfs_only(df)

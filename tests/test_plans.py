@@ -47,8 +47,8 @@ def test_python_workers_are_reused(spark):
 def test_extraction_is_arrow_vectorized(spark, pages_dir):
     from playwrightcrawler_spark.functions import udfs
 
-    pages = spark.read.parquet(pages_dir)
-    out = udfs.with_extraction(pages, "html", "url")
+    pages = spark.read.parquet(pages_dir).withColumn("route", F.lit("html"))
+    out = udfs.with_extraction(pages, "html", "url", "route")
     plan = audit.physical_plan(out)
     assert "ArrowEvalPython" in plan
     assert audit.uses_arrow_udfs_only(out)
@@ -172,7 +172,7 @@ def test_bucketed_pages_wave_scan_prunes(spark, tmp_path):
                         method_weights={"oldest": 1})
     assert eng_b._url_buckets == 16 and eng_f._url_buckets is None
 
-    fetched_b = eng_b._fused_fetch_extract(wave, npart=2)
+    fetched_b = eng_b._fused_fetch_extract(wave)
 
     # (a) the bucket predicate is a PartitionFilter on the pages scan
     pf = " ".join(audit.partition_filters(fetched_b))
@@ -203,7 +203,7 @@ def test_bucketed_pages_wave_scan_prunes(spark, tmp_path):
     got = sorted(tuple(r) for r in fetched_b.select(cols).collect())
     want = sorted(
         tuple(r)
-        for r in eng_f._fused_fetch_extract(wave, npart=2).select(cols).collect()
+        for r in eng_f._fused_fetch_extract(wave).select(cols).collect()
     )
     assert got == want and len(got) == len(wave_urls)
 
@@ -228,21 +228,9 @@ def _digest(df) -> tuple[int, int]:
     return int(r["n"]), int(r["s"])
 
 
-def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
-    """With Bloom and hunting off, the only python a wave evaluates is the
-    routed extraction UDF: the crawled append and the frontier inserts
-    each hold exactly that one ArrowEvalPython (link resolution,
-    sanitize_url, the repeated-segments check and mailto extraction ride
-    inside it), the visited flips none. The tables equal those the engine
-    wrote for the same seed when those per-link steps were separate UDFs
-    (digests recorded from that engine)."""
-    from playwrightcrawler_spark.crawl.engine import CrawlEngine
-    from playwrightcrawler_spark.sources import pages_gen
-
-    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=300,
-                      per_host_quota=2, seed=7, hunt_open_directories=False,
-                      use_bloom=False)
-    eng.bootstrap(pages_gen.seed_urls())
+def _record_commit_plans(monkeypatch, lake) -> list:
+    """Wrap the crawled append and the frontier commit: every frame either
+    receives is recorded as (argument name, its python eval nodes)."""
     plans = []
 
     def capture(obj, meth):
@@ -258,18 +246,78 @@ def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
 
         monkeypatch.setattr(obj, meth, wrapped)
 
-    capture(eng.lake.crawled, "append")
-    capture(eng.lake.frontier, "commit_wave")
-    metrics = eng.run(3)
-    assert [m["done"] for m in metrics] == [False] * 3
+    capture(lake.crawled, "append")
+    capture(lake.frontier, "commit_wave")
+    return plans
 
-    # per wave: the crawled frame (append's second argument), the frontier
-    # inserts and the visited flips, which read the selection only
+
+def _assert_one_extraction_crossing(plans, passes: int) -> None:
+    """Per pass: the crawled frame (append's second argument) and the
+    frontier inserts each hold exactly the routed extraction UDF; the
+    visited flips read the selection only."""
     want = {"append[1]": 1, "inserts": 1, "flips": 0}
-    assert sorted(name for name, _ in plans) == sorted(list(want) * 3)
+    assert sorted(name for name, _ in plans) == sorted(list(want) * passes)
     for name, nodes in plans:
         assert len(nodes) == want[name], (name, nodes)
         assert all("extract_all_routed" in n for n in nodes), nodes
 
+
+def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
+    """With Bloom and hunting off, the only python a wave evaluates is the
+    routed extraction UDF: the crawled append and the frontier inserts
+    each hold exactly that one ArrowEvalPython (link resolution,
+    sanitize_url, the repeated-segments check and mailto extraction ride
+    inside it), the visited flips none. The tables equal those the engine
+    wrote for the same seed when those per-link steps were separate UDFs
+    (digests recorded from that engine)."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.sources import pages_gen
+
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=300,
+                      per_host_quota=2, seed=7, hunt_open_directories=False,
+                      use_bloom=False)
+    eng.bootstrap(pages_gen.seed_urls())
+    plans = _record_commit_plans(monkeypatch, eng.lake)
+    metrics = eng.run(3)
+    assert [m["done"] for m in metrics] == [False] * 3
+    _assert_one_extraction_crossing(plans, passes=3)
+
     assert _digest(eng.lake.crawled.read(spark)) == (45, 44496452326)
     assert _digest(eng.lake.frontier.read(spark)) == (78, 78469828928)
+
+
+def test_fast_pass_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
+    """The fast-extension pass runs the wave's stages, so it too crosses
+    into python once: the routed extraction UDF in the crawled append and
+    the frontier inserts, nothing in the flips. Its tables equal those the
+    engine wrote when the pass had its own fetch join, an unrouted html
+    fallback UDF and separate decode/top_words UDFs for plain text:
+    crawled (10, 12429592925), frontier (12, 11592585278), recorded from
+    that engine on these seeds (binary routes, a pdf behind a .png, an
+    html page behind a .png whose link is discovered, a dead URL and an
+    html seed the pass never selects)."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=100,
+                      per_host_quota=5, method_weights={"oldest": 1},
+                      hunt_open_directories=False, use_bloom=False)
+    eng.bootstrap([
+        "https://cdn.example.com/assets/logo.png",
+        "https://cdn.example.com/assets/fake.png",
+        "https://cdn.example.com/assets/page.png",
+        "https://docs.example.com/manual.pdf",
+        "https://media.example.com/clip.mp4",
+        "https://dead.example.net/gone.pdf",
+        "https://seed0.example.org/",
+        "https://cdn.example.com/assets/photo.jpg",
+        "https://dl.example.com/bundle.zip",
+        "https://media.example.com/song.mp3",
+        "https://tracker.example.com/seed.torrent",
+    ])
+    plans = _record_commit_plans(monkeypatch, eng.lake)
+    m = eng.run_fast_extension_pass(wave=1)
+    assert (m["urls_selected"], m["ext_consistent"], m["links_new"]) == (10, 7, 1)
+    _assert_one_extraction_crossing(plans, passes=1)
+
+    assert _digest(eng.lake.crawled.read(spark)) == (10, 12429592925)
+    assert _digest(eng.lake.frontier.read(spark)) == (12, 11592585278)

@@ -1,11 +1,10 @@
 """Round-4 regression guards for the fused wave hot path.
 
-The round-4 rewrite moved extraction into the scan stage and replaced
-_build_crawled's two cache scans with one route-conditional projection
-(fused=True). These tests pin (a) fused == union semantics row-for-row,
-(b) the fixture writer's n_files layout (scan-split granularity IS
-extraction parallelism — a few single-row-group files silently cap the
-whole crawl), and (c) the engine's no-shuffle default.
+The round-4 rewrite moved extraction into the scan stage and built the
+crawled rows with one route-conditional projection. These tests pin (a)
+that projection's output for every row class, and (b) the fixture
+writer's n_files layout (scan-split granularity IS extraction
+parallelism — a few single-row-group files silently cap the whole crawl).
 """
 
 from __future__ import annotations
@@ -29,22 +28,19 @@ def _fetched_frame(spark):
     """A post-extraction wave frame the way the fused scan pass shapes it:
     extraction columns populated for BOTH text routes (the route-aware UDF
     decodes plain_text in the same Arrow crossing as the html walk),
-    empty-extraction sentinels ('', [], [], False, '') for the rest. The
-    html bytes column survives here only because the NON-fused comparison
-    branch recomputes the plain-text decode from it. One html page carries
-    a mailto address, which becomes an email record."""
+    empty-extraction sentinels ('', [], [], False, '') for the rest. One
+    html page carries a mailto address, which becomes an email record."""
     rows = [
-        # url, host, ctype, route, ext, depth, html(plain-text only), text,
-        # words, emails, isopendir, odpat
+        # url, host, ctype, route, ext, depth, text, words, emails,
+        # isopendir, odpat
         ("https://a.example/p0.html", "a.example", "text/html", "html", "html", 0,
-         None, "hello world", ["hello", "world"], ["someone@example.org"], False, ""),
+         "hello world", ["hello", "world"], ["someone@example.org"], False, ""),
         ("https://a.example/dir/", "a.example", "text/html", "html", "", 1,
-         None, "Index of /dir", ["index", "of", "dir"], [], True, "index of"),
+         "Index of /dir", ["index", "of", "dir"], [], True, "index of"),
         ("https://b.example/notes.txt", "b.example", "text/plain", "plain_text", "txt", 1,
-         bytearray(b"plain body text"), "plain body text",
-         ["plain", "body", "text"], [], False, ""),
+         "plain body text", ["plain", "body", "text"], [], False, ""),
         ("https://b.example/logo.png", "b.example", "image/png", "image", "png", 2,
-         None, "", [], [], False, ""),
+         "", [], [], False, ""),
     ]
     schema = T.StructType([
         T.StructField("url", T.StringType()),
@@ -53,7 +49,6 @@ def _fetched_frame(spark):
         T.StructField("route", T.StringType()),
         T.StructField("file_extension", T.StringType()),
         T.StructField("depth", T.IntegerType()),
-        T.StructField("html", T.BinaryType()),
         T.StructField("text_extracted", T.StringType()),
         T.StructField("words", T.ArrayType(T.StringType())),
         T.StructField("emails", T.ArrayType(T.StringType())),
@@ -63,36 +58,44 @@ def _fetched_frame(spark):
     return spark.createDataFrame(rows, schema)
 
 
-def _missing_frame(spark):
-    return (
-        spark.createDataFrame(
-            [("https://c.example/gone.html", 3)], "url string, depth int")
-        .withColumn("html", F.lit(None).cast("binary"))
-        .withColumn("file_extension", F.lit("html"))
-        .withColumn("content_type", F.lit(""))
-        .withColumn("route", F.lit("missing"))
-    )
-
-
-def test_fused_build_crawled_matches_union_shape(idle_engine, spark):
-    """fused=True (one conditional projection) must emit exactly the rows
-    the original two-branch union emitted, for every route class at once:
-    html, plain_text, binary, fetch-miss and email."""
+def test_build_crawled_rows_per_route_class(idle_engine, spark):
+    """The one route-conditional projection, row class by row class: html
+    rows keep their extraction, plain_text its decoded text, binaries and
+    dead links (wave rows missing from the fetch) get no text, and each
+    mailto address on an html page becomes an email record."""
     fetched = _fetched_frame(spark)
-    missing = _missing_frame(spark)
-    html_pages = fetched.filter(F.col("route") == "html")
-
-    fused = idle_engine._build_crawled(fetched, html_pages, missing, wave=7, fused=True)
-    union = idle_engine._build_crawled(fetched, html_pages, missing, wave=7, fused=False)
-
-    assert fused.columns == union.columns
-    cols = sorted(fused.columns)
-    a = sorted(map(repr, fused.select(*cols).collect()))
-    b = sorted(map(repr, union.select(*cols).collect()))
-    assert a == b
-    # all five row classes actually present (guards a vacuous pass)
-    routes = {r["route"] for r in fused.select("route").collect()}
-    assert routes == {"html", "plain_text", "image", "missing", "email"}
+    wave_df = fetched.select("url", "host", "depth").unionByName(
+        spark.createDataFrame(
+            [("https://c.example/gone.html", "c.example", 3)],
+            "url string, host string, depth int",
+        )
+    )
+    crawled = idle_engine._build_crawled(fetched, wave_df, wave=7)
+    cols = ["route", "depth", "text", "words", "source", "isopendir",
+            "opendir_pattern", "emails", "parent_host", "ext_consistent"]
+    got = {r["url"]: tuple(r[c] for c in cols)
+           for r in crawled.select("url", *cols).collect()}
+    assert got == {
+        "https://a.example/p0.html": (
+            "html", 0, "hello world", ["hello", "world"], "content_type_download",
+            False, "", None, None, True),
+        "https://a.example/dir/": (
+            "html", 1, "Index of /dir", ["index", "of", "dir"], "content_type_download",
+            True, "index of", None, None, True),
+        "https://b.example/notes.txt": (
+            "plain_text", 1, "plain body text", ["plain", "body", "text"],
+            "content_type_plain_text", False, "", None, None, True),
+        "https://b.example/logo.png": (
+            "image", 2, None, None, "content_type_images_no_download",
+            False, "", None, None, True),
+        "https://c.example/gone.html": (
+            "missing", 3, None, None, "fetch_miss", False, "", None, None, None),
+        "https://a.example/p0.html|someone@example.org": (
+            "email", None, None, None, "email_url", False, "",
+            ["someone@example.org"], "a.example", True),
+    }
+    assert crawled.filter(~F.col("visited")).count() == 0
+    assert {r["wave"] for r in crawled.select("wave").collect()} == {7}
 
 
 def test_pages_gen_n_files_layout(spark, tmp_path):
@@ -105,9 +108,3 @@ def test_pages_gen_n_files_layout(spark, tmp_path):
     parts = [f for f in os.listdir(out) if f.startswith("part-")]
     assert len(parts) == 8
     assert spark.read.parquet(out).count() == n == 60
-
-
-def test_engine_defaults_no_fetch_shuffle(idle_engine):
-    """rebalance_fetch defaults OFF: extraction parallelism comes from
-    scan splits, not a wave-bytes shuffle."""
-    assert idle_engine.rebalance_fetch is False
