@@ -25,9 +25,10 @@ Scale design:
   flips writes); a bucketed pages table, bucket lineage, the Bloom
   update and a compaction add one each. Each action runs as one or more
   Spark JOBS (AQE submits every query stage and broadcast as its own
-  job: 18 jobs per wave on the benchmark's crawl_extract shape). Counters
-  ride on Observations attached to the write actions instead of
-  separate count() actions;
+  job: 13 jobs per wave on the benchmark's crawl_extract shape). Table
+  reads and the pages scan add none: they are planned from recorded
+  schemas, not inferred. Counters ride on Observations attached to the
+  write actions instead of separate count() actions;
 - crawled/wave_metrics are fast-append (delta) tables: commit cost is
   O(wave), only the frontier pays a rewrite (Iceberg MoR would make that
   O(wave) too);
@@ -184,7 +185,12 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ util
     def _pages(self) -> DataFrame:
-        return self.spark.read.parquet(self.pages_path).select("url", "html")
+        """The pages table, read with the input contract's schema
+        (BASELINE.json input_hint) plus the bucket partition column when
+        the table has one, so planning the scan launches no
+        schema-inference job."""
+        schema = "url string, html binary" + (", url_bucket int" if self._url_buckets else "")
+        return self.spark.read.schema(schema).parquet(self.pages_path)
 
     def _pages_for_wave(self, wave_df: DataFrame) -> DataFrame:
         """The pages scan for ONE wave. On a bucketed table, collect the
@@ -203,7 +209,7 @@ class CrawlEngine:
             ).distinct().collect()
         ]
         return (
-            self.spark.read.parquet(self.pages_path)
+            self._pages()
             .filter(F.col("url_bucket").isin(buckets))
             .select("url", "html")
         )
@@ -317,7 +323,7 @@ class CrawlEngine:
         )
         self._frontier_cur = self.lake.frontier.read(self.spark)
         self._bloom_update(self._frontier_cur)
-        return self._frontier_cur.count()
+        return self.lake.frontier.key_rows()
 
     # ---------------------------------------------------- bloom sidecar life
     def _bloom_sync(self) -> None:
@@ -360,11 +366,10 @@ class CrawlEngine:
         if not self.use_bloom:
             return
         # keys-only read: the Bloom covers url_hashes, which flips never
-        # change — no need to pay the MoR flip join for a rebuild scan
-        keys = self.lake.frontier.read_keys(
-            self.spark, cols=("host_salt", "url_hash")
-        ).cache()
-        n = keys.count()
+        # change — no need to pay the MoR flip join for a rebuild scan;
+        # sized from parquet footers, so the build is the only scan
+        keys = self.lake.frontier.read_keys(self.spark, cols=("host_salt", "url_hash"))
+        n = self.lake.frontier.key_rows()
         per_bucket = max(
             -(-n * 2 // config.HOST_SALT_BUCKETS),  # ceil, 2x headroom
             self.bloom_items,
@@ -374,7 +379,6 @@ class CrawlEngine:
             expected_items_per_bucket=per_bucket,
         )
         rows = [r.asDict() for r in new.collect()]
-        keys.unpersist()
         self.lake.seen_bloom.write_rows(
             rows, seen.SIDECAR_PA_SCHEMA,
             meta={"frontier_version": self.lake.frontier.latest_version,

@@ -13,7 +13,22 @@ module provides the same *semantics* over bare parquet:
   point (test: kill between waves → relaunch → identical tables);
 - ``merge_upsert`` = last-writer-wins by key via anti-join + union —
   exactly the ES ``_id`` overwrite semantics (reference
-  playwrightcrawler.py:1628-1651).
+  playwrightcrawler.py:1628-1651);
+- reads are planned from the manifest, as Iceberg plans scans from table
+  metadata. ``manifest.json`` holds every distinct read schema once
+  (version entries name theirs by index, a merge-on-read table keeps a
+  second one for flips) and each partitioned snapshot's partition
+  directories. Every relation is built with ``spark.read.schema(...)``,
+  so no read launches a schema-inference job or opens a footer, and a
+  partitioned delta table is one relation per partition value (the
+  partition column a literal, so value filters prune whole relations),
+  not one per snapshot. Spark still lists the directories a relation
+  reads, in a job once they pass
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32); an
+  Iceberg manifest list removes that listing too;
+- a delta or merge-on-read commit whose columns differ from the recorded
+  schema in name or type raises before it writes; full-table writes may
+  change the schema, which is recorded for that version.
 
 The interface is deliberately the subset that maps 1:1 onto Iceberg calls
 (``writeTo(...).append()``, ``MERGE INTO``, ``VERSION AS OF``) so swapping
@@ -26,10 +41,26 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _read_schema(schema: StructType, partition_by=()) -> StructType:
+    """``schema`` in the form ``spark.read.parquet`` infers it for files
+    written from a frame of that schema: data columns in file order,
+    partition columns last, every field nullable."""
+    data = [f for f in schema.fields if f.name not in partition_by]
+    return StructType(data + [schema[c] for c in partition_by]).toNullable()
+
+
+def _partition_value(raw: str) -> str | None:
+    """A hive partition directory value as Spark wrote it."""
+    return None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
 
 
 class SnapshotTable:
@@ -46,7 +77,7 @@ class SnapshotTable:
         # hive-style partition columns per snapshot — the bare-parquet
         # analogue of Iceberg's hidden months(ts) partitioning (S3:
         # reference monthly indices, playwrightcrawler.py:1458-1481);
-        # Catalyst prunes partition directories on matching filters
+        # a filter on them prunes whole relations (see read)
         self.partition_by = partition_by or []
         self.dir.mkdir(parents=True, exist_ok=True)
 
@@ -57,17 +88,58 @@ class SnapshotTable:
 
     def _read_manifest(self) -> dict:
         if not self._manifest_path.exists():
-            return {"versions": []}
+            return {"schemas": [], "versions": []}
         return json.loads(self._manifest_path.read_text())
 
-    def _commit(self, version: int, meta: dict | None = None) -> None:
+    def _commit(self, version: int, meta: dict | None = None, **schemas: StructType) -> None:
+        """Publish ``version``. Its entry names each of its schemas (``schema``
+        for the data, ``flips_schema`` for MoR flips) by index into the
+        manifest's ``schemas`` list, which holds every distinct schema once;
+        a partitioned snapshot also lists its partition directories."""
         m = self._read_manifest()
-        m["versions"].append(
-            {"version": version, "committed_at": time.time(), **(meta or {})}
-        )
+        entry = {"version": version, "committed_at": time.time(), **(meta or {})}
+        for key, schema in schemas.items():
+            js = schema.jsonValue()
+            if js not in m["schemas"]:
+                m["schemas"].append(js)
+            entry[key] = m["schemas"].index(js)
+        if self.partition_by:
+            root = Path(self._snap_dir(version))
+            entry["partitions"] = sorted(
+                p.relative_to(root).as_posix()
+                for p in root.glob("/".join(f"{c}=*" for c in self.partition_by))
+            )
+        m["versions"].append(entry)
         tmp = self._manifest_path.with_suffix(".tmp")
         tmp.write_text(json.dumps(m, indent=1))
         os.replace(tmp, self._manifest_path)  # atomic commit point
+
+    @staticmethod
+    def _schema(m: dict, upto: int | None = None, key: str = "schema") -> StructType | None:
+        """The ``key`` schema in force at version ``upto`` (default: the
+        latest), None before the first commit that records one."""
+        for e in reversed(m["versions"]):
+            if key in e and (upto is None or e["version"] <= upto):
+                return StructType.fromJson(m["schemas"][e[key]])
+        return None
+
+    def _check_drift(self, m: dict, new: StructType, key: str = "schema") -> None:
+        """Refuse a commit whose read schema ``new`` differs from the
+        recorded ``key`` schema in a column's name or type: the table's
+        readers would drop or misread that column."""
+        old = self._schema(m, key=key)
+        if old is None:
+            return
+        was = {f.name: f.dataType.simpleString() for f in old.fields}
+        now = {f.name: f.dataType.simpleString() for f in new.fields}
+        drift = sorted(c for c in was.keys() | now.keys() if was.get(c) != now.get(c))
+        if drift:
+            raise ValueError(
+                f"table {self.name}: commit schema differs from the recorded {key} "
+                "in columns " + ", ".join(
+                    f"{c} ({was.get(c, 'absent')} -> {now.get(c, 'absent')})" for c in drift
+                )
+            )
 
     @property
     def latest_version(self) -> int | None:
@@ -85,31 +157,47 @@ class SnapshotTable:
 
     # -- IO -------------------------------------------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        v = self.latest_version if version is None else version
-        if v is None:
+        m = self._read_manifest()
+        snaps = [e for e in m["versions"] if version is None or e["version"] <= version]
+        if not snaps:
             raise FileNotFoundError(f"table {self.name} has no snapshots")
-        if self.kind == "delta":
-            dirs = [self._snap_dir(e["version"]) for e in self.versions()
-                    if e["version"] <= v]
-            if not self.partition_by:
-                return spark.read.parquet(*dirs)
-            # partitioned snapshots: discovery must run per snapshot root
-            # (multi-root reads raise CONFLICTING_DIRECTORY_STRUCTURES);
-            # Iceberg replaces this with manifest-based planning
-            out = spark.read.parquet(dirs[0])
-            for d in dirs[1:]:
-                out = out.unionByName(spark.read.parquet(d))
-            return out
-        return spark.read.parquet(self._snap_dir(v))
+        if self.kind != "delta":
+            snaps = snaps[-1:]
+        schema = self._schema(m, upto=snaps[-1]["version"])
+        if not self.partition_by:
+            return spark.read.schema(schema).parquet(
+                *[self._snap_dir(e["version"]) for e in snaps])
+        # one relation per partition value over every snapshot directory
+        # holding it, the partition columns added as literals (a value
+        # filter folds to false on the other relations and prunes them)
+        data = StructType([f for f in schema.fields if f.name not in self.partition_by])
+        paths: dict[str, list[str]] = {}
+        for e in snaps:
+            for p in e["partitions"]:
+                paths.setdefault(p, []).append(f"{self._snap_dir(e['version'])}/{p}")
+        parts = []
+        for p, dirs in paths.items():
+            values = dict(kv.split("=", 1) for kv in p.split("/"))
+            parts.append(spark.read.schema(data).parquet(*dirs).select("*", *[
+                F.lit(_partition_value(values[c])).cast(schema[c].dataType).alias(c)
+                for c in self.partition_by
+            ]))
+        if not parts:
+            return spark.createDataFrame([], schema)
+        return reduce(DataFrame.unionByName, parts)
 
     def write(self, df: DataFrame, meta: dict | None = None) -> int:
-        """Full-table snapshot write (Iceberg: overwritePartitions)."""
+        """Full-table snapshot write (Iceberg: overwritePartitions); on a
+        delta table, one increment."""
         v = (self.latest_version or 0) + 1
+        schema = _read_schema(df.schema, self.partition_by)
+        if self.kind == "delta":
+            self._check_drift(self._read_manifest(), schema)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(self._snap_dir(v))
-        self._commit(v, meta)
+        self._commit(v, meta, schema=schema)
         return v
 
     def append(self, spark: SparkSession, df: DataFrame, meta: dict | None = None) -> int:
@@ -144,12 +232,19 @@ class SnapshotTable:
         the 64-row bloom sidecar)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        # the Spark form of the file schema: a timestamp without a time zone
+        # reads back as timestamp_ntz
+        read_schema = from_arrow_schema(schema, prefer_timestamp_ntz=True).toNullable()
+        if self.kind == "delta":
+            self._check_drift(self._read_manifest(), read_schema)
         v = (self.latest_version or 0) + 1
         d = Path(self._snap_dir(v))
         d.mkdir(parents=True, exist_ok=True)
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
         pq.write_table(pa.table(cols, schema=schema), d / "part-00000.parquet")
-        self._commit(v, meta)
+        self._commit(v, meta, schema=read_schema)
         return v
 
     def truncate(self) -> None:
@@ -193,7 +288,7 @@ class MorTable(SnapshotTable):
         """Full base snapshot (bootstrap / compaction)."""
         v = (self.latest_version or 0) + 1
         df.write.mode("overwrite").parquet(self._snap_dir(v))
-        self._commit(v, {**(meta or {}), "base": True})
+        self._commit(v, {**(meta or {}), "base": True}, schema=_read_schema(df.schema))
         return v
 
     def commit_wave(
@@ -204,14 +299,24 @@ class MorTable(SnapshotTable):
     ) -> int:
         """One atomic O(wave) commit: write increment files, then the
         manifest rename publishes both (a kill mid-write leaves an
-        unreferenced directory, never a corrupt table)."""
+        unreferenced directory, never a corrupt table). Inserts must carry
+        the schema in force, flips the recorded flips schema."""
+        m = self._read_manifest()
         v = (self.latest_version or 0) + 1
         d = self._snap_dir(v)
+        schemas = {}
+        if inserts is not None:
+            schemas["schema"] = _read_schema(inserts.schema)
+            self._check_drift(m, schemas["schema"])
+        if flips is not None:
+            flips = flips.select(*self.FLIP_COLS)
+            schemas["flips_schema"] = _read_schema(flips.schema)
+            self._check_drift(m, schemas["flips_schema"], key="flips_schema")
         if inserts is not None:
             inserts.write.mode("overwrite").parquet(f"{d}/inserts")
         if flips is not None:
-            flips.select(*self.FLIP_COLS).write.mode("overwrite").parquet(f"{d}/flips")
-        self._commit(v, {**(meta or {}), "base": False})
+            flips.write.mode("overwrite").parquet(f"{d}/flips")
+        self._commit(v, {**(meta or {}), "base": False}, **schemas)
         return v
 
     def append(self, spark: SparkSession, df: DataFrame, meta: dict | None = None) -> int:
@@ -219,18 +324,25 @@ class MorTable(SnapshotTable):
         return self.commit_wave(inserts=df, flips=None, meta=meta)
 
     # -- reconstruction ---------------------------------------------------------
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        v = self.latest_version if version is None else version
-        if v is None:
+    def _since_base(self, m: dict, version: int | None) -> tuple[int, list[int]]:
+        """(base version, delta versions after it) of the table at
+        ``version`` (default: the latest)."""
+        entries = [e for e in m["versions"] if version is None or e["version"] <= version]
+        if not entries:
             raise FileNotFoundError(f"table {self.name} has no snapshots")
-        entries = [e for e in self.versions() if e["version"] <= v]
         base_vs = [e["version"] for e in entries if self._is_base(e)]
         if not base_vs:
-            raise FileNotFoundError(f"table {self.name} has no base snapshot <= v{v}")
+            raise FileNotFoundError(
+                f"table {self.name} has no base snapshot <= v{entries[-1]['version']}")
         base_v = max(base_vs)
-        delta_vs = [e["version"] for e in entries if e["version"] > base_v]
+        return base_v, [e["version"] for e in entries if e["version"] > base_v]
 
-        rows = spark.read.parquet(self._snap_dir(base_v))
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+        m = self._read_manifest()
+        base_v, delta_vs = self._since_base(m, version)
+        schema = self._schema(m, upto=version)
+
+        rows = spark.read.schema(schema).parquet(self._snap_dir(base_v))
         insert_dirs, flip_dirs = [], []
         for dv in delta_vs:
             d = Path(self._snap_dir(dv))
@@ -239,10 +351,11 @@ class MorTable(SnapshotTable):
             if (d / "flips").exists():
                 flip_dirs.append(str(d / "flips"))
         if insert_dirs:
-            rows = rows.unionByName(spark.read.parquet(*insert_dirs))
+            rows = rows.unionByName(spark.read.schema(schema).parquet(*insert_dirs))
         if flip_dirs:
             flips = (
-                spark.read.parquet(*flip_dirs)
+                spark.read.schema(self._schema(m, upto=version, key="flips_schema"))
+                .parquet(*flip_dirs)
                 .groupBy("url_hash")
                 .agg(F.max("wave").alias("_flip_wave"))
             )
@@ -250,7 +363,7 @@ class MorTable(SnapshotTable):
             # beyond the threshold fall back to a shuffle join (the flip
             # set is still orders of magnitude below the frontier, and
             # compaction triggered on flip volume keeps this path rare)
-            if self.flip_rows_since_base(upto=v) <= self.FLIP_BROADCAST_ROWS:
+            if self.flip_rows_since_base(upto=version) <= self.FLIP_BROADCAST_ROWS:
                 flips = F.broadcast(flips)
             rows = (
                 rows.join(flips, on="url_hash", how="left")
@@ -277,21 +390,13 @@ class MorTable(SnapshotTable):
         use. At 10^10 rows that removes one whole join from every wave's
         dedup path (on Iceberg: a data-file scan that skips the positional
         delete merge)."""
-        v = self.latest_version if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"table {self.name} has no snapshots")
-        entries = [e for e in self.versions() if e["version"] <= v]
-        base_vs = [e["version"] for e in entries if self._is_base(e)]
-        if not base_vs:
-            raise FileNotFoundError(f"table {self.name} has no base snapshot <= v{v}")
-        base_v = max(base_vs)
-        dirs = [self._snap_dir(base_v)]
-        for e in entries:
-            if e["version"] > base_v:
-                d = Path(self._snap_dir(e["version"])) / "inserts"
-                if d.exists():
-                    dirs.append(str(d))
-        return spark.read.parquet(*dirs).select(*cols)
+        m = self._read_manifest()
+        base_v, delta_vs = self._since_base(m, version)
+        dirs = [self._snap_dir(base_v)] + [
+            d for d in (f"{self._snap_dir(dv)}/inserts" for dv in delta_vs)
+            if Path(d).exists()
+        ]
+        return spark.read.schema(self._schema(m, upto=version)).parquet(*dirs).select(*cols)
 
     def deltas_since_base(self) -> int:
         entries = self.versions()
@@ -300,28 +405,32 @@ class MorTable(SnapshotTable):
             return len(entries)
         return len([e for e in entries if e["version"] > max(base_vs)])
 
-    def flip_rows_since_base(self, upto: int | None = None) -> int:
-        """Cumulative flip rows in deltas after the last base — the size of
-        the merge-on-read join side. Counted from parquet footers (driver-
-        side metadata reads, no Spark job), so it is exact regardless of
-        who committed the flips."""
+    def _footer_rows(self, sub: str, upto: int | None, with_base: bool = False) -> int:
+        """Rows of the ``sub`` increments after the last base (and of the
+        base itself with ``with_base``) up to version ``upto``, summed from
+        parquet footers: driver-side metadata reads, no Spark job, exact
+        whoever committed them."""
         import pyarrow.parquet as pq
 
         entries = [e for e in self.versions()
                    if upto is None or e["version"] <= upto]
         base_vs = [e["version"] for e in entries if self._is_base(e)]
         base_v = max(base_vs) if base_vs else -1
-        total = 0
-        for e in entries:
-            if e["version"] <= base_v:
-                continue
-            d = Path(self._snap_dir(e["version"])) / "flips"
-            if d.exists():
-                total += sum(
-                    pq.ParquetFile(p).metadata.num_rows
-                    for p in d.glob("*.parquet")
-                )
-        return total
+        dirs = [Path(self._snap_dir(base_v))] if with_base and base_vs else []
+        dirs += [Path(self._snap_dir(e["version"])) / sub
+                 for e in entries if e["version"] > base_v]
+        return sum(pq.ParquetFile(p).metadata.num_rows
+                   for d in dirs for p in d.glob("*.parquet"))
+
+    def flip_rows_since_base(self, upto: int | None = None) -> int:
+        """Cumulative flip rows in deltas after the last base — the size of
+        the merge-on-read join side."""
+        return self._footer_rows("flips", upto)
+
+    def key_rows(self, upto: int | None = None) -> int:
+        """Rows of the key set ``read_keys`` scans (base ∪ insert deltas),
+        which is the table's row count: flips never add keys."""
+        return self._footer_rows("inserts", upto, with_base=True)
 
     def compact(self, spark: SparkSession, meta: dict | None = None) -> int:
         """Fold base+deltas into a new base (Iceberg rewrite_data_files)."""

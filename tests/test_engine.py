@@ -386,11 +386,15 @@ def test_monthly_partition_routing(crawl_result, spark):
     snap = eng.lake.crawled._snap_dir(1)
     parts = glob.glob(f"{snap}/month=*")
     assert parts and all("month=2025-06" in p for p in parts), parts
+    # one relation per month, the month a literal: a month filter keeps or
+    # drops whole relations at planning, before any file is read
     df = eng.lake.crawled.read(spark).filter(F.col("month") == "2025-06")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(month" in plan, plan[:800]
+    assert "FileScan parquet" in df._jdf.queryExecution().executedPlan().toString()
+    assert df.inputFiles() and all("/month=2025-06/" in f for f in df.inputFiles())
     assert df.count() > 0
-    assert eng.lake.crawled.read(spark).filter(F.col("month") == "1999-01").count() == 0
+    pruned = eng.lake.crawled.read(spark).filter(F.col("month") == "1999-01")
+    assert "FileScan" not in pruned._jdf.queryExecution().executedPlan().toString()
+    assert pruned.count() == 0
 
 
 def test_raw_webcontent_flag(spark, pages_dir, tmp_path_factory):
@@ -414,6 +418,22 @@ def test_raw_webcontent_flag(spark, pages_dir, tmp_path_factory):
                        method_weights={"oldest": 1})
     eng2.run(1, seed_urls=pages_gen.seed_urls())
     assert "raw_webcontent" not in eng2.lake.crawled.read(spark).columns
+
+
+def test_raw_webcontent_change_refused_at_commit(spark, pages_dir, tmp_path_factory):
+    """extract_raw_webcontent must stay constant per warehouse: rerunning a
+    warehouse made without the column with it on raises at the crawled
+    commit, naming the column. The commit used to succeed, after which
+    every read of the month-partitioned table failed."""
+    wh = str(tmp_path_factory.mktemp("wh_raw_drift"))
+    CrawlEngine(spark, pages_dir, wh, wave_size=20, method_weights={"oldest": 1}).run(
+        1, seed_urls=pages_gen.seed_urls())
+    eng = CrawlEngine(spark, pages_dir, wh, wave_size=20, method_weights={"oldest": 1},
+                      extract_raw_webcontent=True)
+    with pytest.raises(ValueError, match=r"table crawled: .*raw_webcontent \(absent -> string\)"):
+        eng.run(1)
+    assert [e["wave"] for e in eng.lake.crawled.versions()] == [1]
+    assert eng.lake.crawled.read(spark).count() > 0
 
 
 def test_run_orchestrates_maintenance_phases(spark, pages_dir, tmp_path_factory, tmp_path):

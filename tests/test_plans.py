@@ -286,6 +286,37 @@ def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
     assert _digest(eng.lake.frontier.read(spark)) == (78, 78469828928)
 
 
+@pytest.mark.parametrize("engine_kw,jobs", [
+    (dict(use_bloom=False), [16, 20, 20]),
+    (dict(use_bloom=True, compact_every=1), [23, 23, 23]),
+], ids=["extract_like", "discover_like"])
+def test_jobs_per_wave(spark, pages_dir, tmp_path, engine_kw, jobs):
+    """Spark jobs in each of three waves, pinned: an extract-like engine
+    (Bloom off) and a discover-like one (Bloom on, compaction every wave).
+    When every table read and the pages scan inferred their schemas with a
+    Spark job, and the Bloom rebuild counted the frontier keys with one,
+    these engines ran [21, 25, 25] and [33, 33, 33] jobs. A change here is
+    a change in the work a wave does: calling ``spark.read.parquet`` on a
+    warehouse path adds one job per read."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.sources import pages_gen
+
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=300,
+                      per_host_quota=2, seed=7, hunt_open_directories=False, **engine_kw)
+    eng.bootstrap(pages_gen.seed_urls())
+    sc = spark.sparkContext
+    got = []
+    for wave in (1, 2, 3):
+        group = f"jobs-per-wave-{tmp_path.name}-{wave}"
+        sc.setJobGroup(group, group)
+        try:
+            assert not eng.run_wave(wave)["done"]
+        finally:
+            sc._jsc.clearJobGroup()
+        got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert got == jobs
+
+
 def test_fast_pass_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
     """The fast-extension pass runs the wave's stages, so it too crosses
     into python once: the routed extraction UDF in the crawled append and

@@ -1,15 +1,21 @@
 """MoR frontier table: O(wave) commits, broadcast-merge reconstruction,
 compaction equivalence, time travel — and the engine-level evidence that
-wave commit cost is independent of frontier size."""
+wave commit cost is independent of frontier size. Also the manifest-planned
+reads every table shares: recorded schemas (no Spark job per read, each
+read equal to a ``spark.read.parquet`` reference), one relation per
+partition value, and schema drift refused at commit."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
+import uuid
+from datetime import datetime, timezone
+
 import pytest
 from pyspark.sql import functions as F
 
-from playwrightcrawler_spark.sources.tables import MorTable
+from playwrightcrawler_spark.sources.tables import Lakehouse, MorTable, SnapshotTable
 
 COLS = "url string, url_hash long, host string, host_salt int, depth int, score double, visited boolean, discovered_at timestamp, wave int"
 
@@ -179,3 +185,162 @@ def test_wave_commit_bytes_independent_of_frontier_size(spark, pages_dir, tmp_pa
         }
     assert sizes["big"]["base"] > 5 * sizes["small"]["base"], sizes
     assert sizes["big"]["commit"] < 3 * sizes["small"]["commit"], sizes
+
+
+# -------------------------------------------------- manifest-planned reads
+def _jobs(spark, build):
+    """``build()``'s frame with its optimized plan, and the Spark jobs that
+    creating and planning it launched."""
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        df._jdf.queryExecution().optimizedPlan()
+    finally:
+        sc._jsc.clearJobGroup()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fields(df) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+def _assert_same(df, ref) -> None:
+    """Column names, order and types, and rows, equal the reference."""
+    assert _fields(df) == _fields(ref)
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, ref.collect()))
+
+
+def _crawled_rows(spark, wave: int, month: str, n: int = 3):
+    return spark.createDataFrame(
+        [(f"https://h{wave}/{i}", f"text {i}", ["a", "b"], wave,
+          datetime(2025, 6, 1, tzinfo=timezone.utc), month) for i in range(n)],
+        "url string, text string, words array<string>, wave int, "
+        "fetched_at timestamp, month string",
+    ).withColumn("visited", F.lit(True))
+
+
+def test_frontier_reads_plan_without_jobs(spark, mor):
+    """read() and read_keys() over a base + two deltas with flips launch no
+    Spark job and equal the state rebuilt from ``spark.read.parquet``."""
+    mor.write(_rows(spark, range(10)), meta={"wave": 0})
+    mor.commit_wave(_rows(spark, [10, 11], wave=1),
+                    spark.createDataFrame([(0, 1), (3, 1)], "url_hash long, wave int"))
+    mor.commit_wave(_rows(spark, [12], wave=2),
+                    spark.createDataFrame([(3, 2), (11, 2)], "url_hash long, wave int"))
+    snaps = [mor._snap_dir(v) for v in (1, 2, 3)]
+    keys_ref = spark.read.parquet(snaps[0], *[f"{d}/inserts" for d in snaps[1:]])
+    flipped = (spark.read.parquet(*[f"{d}/flips" for d in snaps[1:]])
+               .groupBy("url_hash").agg(F.max("wave").alias("fw")))
+    state = (
+        keys_ref.join(flipped, "url_hash", "left")
+        .withColumn("visited", F.col("fw").isNotNull() | F.col("visited"))
+        .withColumn("wave", F.coalesce("fw", "wave"))
+        .drop("fw")
+    )
+
+    got, jobs = _jobs(spark, lambda: mor.read(spark))
+    assert jobs == 0
+    _assert_same(got, state)
+    got, jobs = _jobs(spark, lambda: mor.read_keys(spark, cols=("host_salt", "url_hash")))
+    assert jobs == 0
+    _assert_same(got, keys_ref.select("host_salt", "url_hash"))
+    assert mor.key_rows() == 13 and mor.flip_rows_since_base() == 4
+
+
+def test_lakehouse_reads_plan_without_jobs(spark, tmp_path):
+    """crawled (snapshots in two months), wave_metrics and seen_bloom read
+    with their recorded schemas: no Spark job, and columns and rows equal
+    ``spark.read.parquet`` over the same snapshots."""
+    from playwrightcrawler_spark.crawl.engine import _METRICS_SCHEMA
+    from playwrightcrawler_spark.operators.seen import SIDECAR_PA_SCHEMA
+
+    lake = Lakehouse(str(tmp_path))
+    for wave, month in [(1, "2025-06"), (2, "2025-07"), (3, "2025-06")]:
+        lake.crawled.append(spark, _crawled_rows(spark, wave, month), meta={"wave": wave})
+        lake.wave_metrics.write_rows(
+            [{"wave": wave, "scope": "wave", "metric": "urls_selected", "value": 3,
+              "method": "oldest", "node_id": "n", "committed_at": datetime.now(timezone.utc)}],
+            _METRICS_SCHEMA,
+        )
+    lake.seen_bloom.write_rows(
+        [{"host_salt": 0, "m_bits": 64, "k": 3, "n_items": 2, "bits": bytes(8)}],
+        SIDECAR_PA_SCHEMA,
+    )
+    snaps = lambda t: [t._snap_dir(e["version"]) for e in t.versions()]
+
+    crawled_ref = spark.read.parquet(snaps(lake.crawled)[0])
+    for d in snaps(lake.crawled)[1:]:
+        crawled_ref = crawled_ref.unionByName(spark.read.parquet(d))
+    refs = {
+        "crawled": crawled_ref,
+        "wave_metrics": spark.read.parquet(*snaps(lake.wave_metrics)),
+        "seen_bloom": spark.read.parquet(snaps(lake.seen_bloom)[-1]),
+    }
+    for name, ref in refs.items():
+        got, jobs = _jobs(spark, lambda: getattr(lake, name).read(spark))
+        assert jobs == 0, name
+        _assert_same(got, ref)
+    # time travel reads the snapshots visible at that version
+    _assert_same(lake.crawled.read(spark, version=2),
+                 crawled_ref.filter(F.col("wave") <= 2))
+
+
+def test_partitioned_delta_reads_one_relation_per_month(spark, tmp_path):
+    """40 snapshots over 2 months plan as 2 file relations and no Spark job
+    (one relation and one schema-inference job per snapshot before the
+    manifest recorded schemas and partition directories). Each month has
+    20 snapshot directories, under the 32 past which Spark lists a
+    relation's directories in a job."""
+    lake = Lakehouse(str(tmp_path))
+    for wave in range(1, 41):
+        lake.crawled.append(
+            spark, _crawled_rows(spark, wave, "2025-06" if wave % 2 else "2025-07", n=1))
+    df, jobs = _jobs(spark, lambda: lake.crawled.read(spark))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert jobs == 0
+    assert plan.count("Relation [") == 2, plan
+    assert df.count() == 40
+    july = df.filter(F.col("month") == "2025-07")
+    plan = july._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 1 and "month=2025-06" not in plan
+    assert july.count() == 20
+
+
+@pytest.mark.parametrize("partition_by", [None, ["month"]])
+def test_delta_append_with_new_column_raises(spark, tmp_path, partition_by):
+    """A delta append whose frame adds a column raises at commit, naming it.
+    Unpartitioned, the append used to succeed and reads silently dropped the
+    column; partitioned, it used to succeed and every later read failed."""
+    t = SnapshotTable(str(tmp_path), "crawled", kind="delta", partition_by=partition_by)
+    t.append(spark, _crawled_rows(spark, 1, "2025-06"))
+    with pytest.raises(ValueError, match=r"table crawled: .*\bextra \(absent -> string\)"):
+        t.append(spark, _crawled_rows(spark, 2, "2025-06").withColumn("extra", F.lit("x")))
+    assert [e["version"] for e in t.versions()] == [1]
+    assert t.read(spark).count() == 3
+
+
+def test_schema_drift_rules(spark, tmp_path, mor):
+    """A type change is drift; nullability alone is not. MoR inserts and
+    flips are held to their recorded schemas. Full-table writes may change
+    the schema, and each version reads with its own."""
+    t = SnapshotTable(str(tmp_path), "log", kind="delta")
+    t.append(spark, spark.range(2).select(F.col("id"), F.lit(1).alias("n")))
+    t.append(spark, spark.range(1).select(F.col("id"), F.lit(None).cast("int").alias("n")))
+    with pytest.raises(ValueError, match=r"\bn \(int -> bigint\)"):
+        t.append(spark, spark.range(1).select(F.col("id"), F.col("id").alias("n")))
+
+    mor.write(_rows(spark, range(3)))
+    with pytest.raises(ValueError, match="host_salt"):
+        mor.commit_wave(_rows(spark, [5]).drop("host_salt"), None)
+    mor.commit_wave(None, spark.createDataFrame([(1, 1)], "url_hash long, wave int"))
+    with pytest.raises(ValueError, match=r"flips_schema in columns wave \(int -> bigint\)"):
+        mor.commit_wave(None, spark.createDataFrame([(2, 2)], "url_hash long, wave long"))
+    assert mor.latest_version == 2
+
+    full = SnapshotTable(str(tmp_path), "kv")
+    full.write(spark.createDataFrame([(1, "a")], "k int, v string"))
+    full.write(spark.createDataFrame([(1, 2.0)], "k int, w double"))
+    assert _fields(full.read(spark, version=1)) == [("k", "int"), ("v", "string")]
+    assert _fields(full.read(spark)) == [("k", "int"), ("w", "double")]
