@@ -219,17 +219,21 @@ class CrawlEngine:
             self._frontier_cur = self.lake.frontier.read(self.spark)
         return self._frontier_cur
 
-    def _frontier_row_cols(self, wave: int):
-        return dict(
+    @staticmethod
+    def _frontier_rows(links: DataFrame, wave: int) -> DataFrame:
+        """Hashed links (``_hashed_links``) → unvisited frontier rows
+        discovered in ``wave``."""
+        return links.withColumn("visited", F.lit(False)).withColumns(dict(
             url_hash=sqlfns.url_hash(F.col("url")),
             depth=F.col("depth").cast("int"),
             score=(F.lit(1.0) / (F.lit(1.0) + F.col("depth"))).cast("double"),
             discovered_at=F.lit(_wave_ts(wave)),
             wave=F.lit(wave).cast("int"),
-        )
+        )).select(*FRONTIER_COLS)
 
     # ------------------------------------------------- link hygiene pipeline
-    def _classify_links(self, links: DataFrame) -> DataFrame:
+    @staticmethod
+    def _classify_links(links: DataFrame) -> DataFrame:
         """P4-P10 hygiene with a ``drop_reason`` column (NULL = keep), all
         JVM-side. Input: ``udfs.LINK_TYPE`` columns (raw, url = its
         sanitize_url form, repeated) + depth, as the extraction UDF or
@@ -298,31 +302,37 @@ class CrawlEngine:
             )
         return grouped.filter(F.col("url").isNotNull()).drop(*counts)
 
-    # ------------------------------------------------------------- bootstrap
-    def _seed_rows(self, urls: DataFrame | list[str], wave: int) -> DataFrame:
-        """urls (list or DataFrame with a ``url`` column) → frontier-shaped
-        rows through the same hygiene as discovered links."""
+    @classmethod
+    def _hashed_links(cls, links: DataFrame, obs: Observation | None = None) -> DataFrame:
+        """The link stage's front half: hygiene → ``_dedupe_links`` (counters
+        into ``obs``) → ``host_salt`` + ``url_hash``."""
+        return with_host_salt(
+            cls._dedupe_links(cls._classify_links(links), obs),
+            buckets=config.HOST_SALT_BUCKETS,
+        ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
+
+    def _seed_links(self, urls: DataFrame | list[str]) -> DataFrame:
+        """Seed URLs (a list, or a DataFrame with a ``url`` column) → link
+        rows at depth 0, the shape ``_page_links`` gives discovered links."""
         if not isinstance(urls, DataFrame):
             urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        seeds = urls.select(udfs.seed_link(F.col("url")).alias("_l"), F.lit(0).alias("depth"))
-        links = self._dedupe_links(self._classify_links(seeds.select("_l.*", "depth")))
-        return (
-            with_host_salt(links, buckets=config.HOST_SALT_BUCKETS)
-            .withColumn("visited", F.lit(False))
-            .withColumns(self._frontier_row_cols(wave=wave))
-            .dropDuplicates(["url_hash"])
-            .select(*FRONTIER_COLS)
-        )
+        return urls.select(
+            udfs.seed_link(F.col("url")).alias("_l"), F.lit(0).alias("depth")
+        ).select("_l.*", "depth")
 
+    # ------------------------------------------------------------- bootstrap
     def bootstrap(self, seed_urls: DataFrame | list[str]) -> int:
         """S5: seed ingestion → frontier v1 (same hygiene as links). Accepts
         a DataFrame so a 10^8-line seed folder never touches the driver."""
-        rows = self._seed_rows(seed_urls, wave=0)
+        rows = self._frontier_rows(
+            self._hashed_links(self._seed_links(seed_urls)), wave=0
+        ).dropDuplicates(["url_hash"])
         self.lake.frontier.write(
             rows, meta={"wave": 0, "op": "bootstrap", "adds_hashes": True}
         )
         self._frontier_cur = self.lake.frontier.read(self.spark)
-        self._bloom_update(self._frontier_cur)
+        self._bloom_update(
+            self.lake.frontier.read_keys(self.spark, cols=("host_salt", "url_hash")))
         return self.lake.frontier.key_rows()
 
     # ---------------------------------------------------- bloom sidecar life
@@ -386,8 +396,9 @@ class CrawlEngine:
         )
         self._bloom_rows = rows
 
-    def _bloom_update(self, insert_rows: DataFrame) -> None:
-        """OR-merge a Bloom over freshly inserted url_hashes into the
+    def _bloom_update(self, keys: DataFrame) -> None:
+        """OR-merge a Bloom over freshly inserted ``(host_salt, url_hash)``
+        keys, read back from the files their commit wrote, into the
         per-bucket sidecar: O(wave) build where the data lives, one collect
         of the 64-row sidecar, driver-side parquet write (no extra Spark
         write job). The increment is built with the LIVE sidecar's (m, k)
@@ -404,7 +415,7 @@ class CrawlEngine:
                 k=int(self._bloom_rows[0]["k"]),
             )
         new = seen.build_blooms(
-            insert_rows.select("host_salt", "url_hash"),
+            keys,
             expected_items_per_bucket=self.bloom_items,
             **params,
         )
@@ -419,27 +430,18 @@ class CrawlEngine:
 
     def ingest(self, seed_urls: DataFrame | list[str]) -> int:
         """S5 on a LIVE crawl (reference process_input_url_files runs
-        continuously): merge new seed rows into the existing frontier —
-        anti-join against it, never overwrite it. Falls back to bootstrap
-        when the frontier doesn't exist yet."""
+        continuously): seed URLs enter the existing frontier through the
+        wave's link stage (``_commit_links`` with nothing consumed) — the
+        seen-set anti-join keeps known URLs as they are, and a batch of only
+        known URLs commits nothing. Falls back to bootstrap when the
+        frontier doesn't exist yet. Returns the number of new rows."""
         if not self.lake.frontier.exists():
             return self.bootstrap(seed_urls)
         wave = self.last_committed_wave() + 1
-        new_rows = seen.anti_join_seen(
-            self._seed_rows(seed_urls, wave=wave),
-            self.lake.frontier.read_keys(self.spark),
-            self.spark,
-            blooms=self._bloom_rows if self.use_bloom else None,
-        ).cache()
-        n = new_rows.count()
-        if n:  # no empty delta commits when ingest runs every wave
-            self.lake.frontier.append(
-                self.spark, new_rows, meta={"op": "ingest", "adds_hashes": True}
-            )
-            self._frontier_cur = self.lake.frontier.read(self.spark)
-            self._bloom_update(new_rows)
-        new_rows.unpersist()
-        return n
+        _, _, insert_rows, obs_insert = self._commit_links(
+            self._seed_links(seed_urls), None, wave, meta={"op": "ingest"}
+        )
+        return self._links_new(insert_rows, obs_insert, wave)[0]
 
     # ----------------------------------------------------------- wave stages
     def _robots_step(self, selected: DataFrame) -> tuple[DataFrame, int, int]:
@@ -588,24 +590,24 @@ class CrawlEngine:
             self.spark, crawled_all.coalesce(n_write), meta=meta)
         return version, _obs_get(obs, dict.fromkeys(counters, 0))
 
-    def _commit_links(self, web_links: DataFrame, selected: DataFrame, wave: int,
-                      meta: dict) -> tuple[int, dict, DataFrame, Observation | None]:
-        """Discovered links → hygiene → seen-set anti-join → ONE O(wave) MoR
-        frontier commit, then compaction on cadence or a Bloom update.
-        ``selected`` is every consumed row (allowed ∪ robots-denied), so
-        denied rows can never win a later selection. Returns (frontier
-        version, link counters, inserted rows, their count Observation);
-        hand the last two to ``_links_new``."""
+    def _commit_links(self, web_links: DataFrame, selected: DataFrame | None, wave: int,
+                      meta: dict) -> tuple[int | None, dict, DataFrame, Observation | None]:
+        """Links → hygiene → seen-set anti-join → ONE O(wave) MoR frontier
+        commit, then compaction on cadence or a Bloom update. The one way
+        rows enter an existing frontier: discovered links of a wave, live
+        seeds (``ingest``) and streamed links. ``selected`` is every
+        consumed row (allowed ∪ robots-denied), so denied rows can never win
+        a later selection; None (ingestion) consumes nothing, and then a
+        commit with no new row publishes nothing (version None, no sidecar
+        write). Returns (frontier version, link counters, inserted rows,
+        their count Observation); hand the last two to ``_links_new``."""
         spark = self.spark
         obs_links = Observation()
         # J1/J5 seen-set membership. With use_bloom the frontier is only
         # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
         # without, the exact anti-join (right side = frontier) is cheaper
         # at sub-10^7 frontier sizes.
-        hashed = with_host_salt(
-            self._dedupe_links(self._classify_links(web_links), obs_links),
-            buckets=config.HOST_SALT_BUCKETS,
-        ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
+        hashed = self._hashed_links(web_links, obs_links)
         # read_keys, not the MoR view: flips never add url_hashes, so the
         # seen-set is base ∪ insert-deltas — skipping the flip join removes
         # a per-wave aggregation + broadcast build from the commit path
@@ -613,12 +615,7 @@ class CrawlEngine:
             hashed, self.lake.frontier.read_keys(spark), spark,
             blooms=self._bloom_rows if self.use_bloom else None,
         )
-        insert_rows = (
-            new_links
-            .withColumn("visited", F.lit(False))
-            .withColumns(self._frontier_row_cols(wave))
-            .select(*FRONTIER_COLS)
-        )
+        insert_rows = self._frontier_rows(new_links, wave)
         obs_insert = None
         if self.bucket_lineage:
             # cached: bucket counts reuse it; links_new derived from them
@@ -637,17 +634,20 @@ class CrawlEngine:
         # consumed row. The frontier table itself is never rewritten here —
         # read() applies flips as a broadcast join, and a compaction folds
         # deltas into a fresh base every K waves.
-        flips = selected.select("url_hash").withColumn("wave", F.lit(wave).cast("int"))
+        flips = None if selected is None else (
+            selected.select("url_hash").withColumn("wave", F.lit(wave).cast("int")))
         frontier_version = self.lake.frontier.commit_wave(
             inserts=insert_rows, flips=flips, meta={**meta, "adds_hashes": True},
         )
-        if (
+        if frontier_version is None:
+            pass  # nothing new: no version, no sidecar write
+        elif (
             self.lake.frontier.deltas_since_base() >= self.compact_every
             or self.lake.frontier.flip_rows_since_base() >= self.compact_flip_rows
         ):
-            self.lake.frontier.compact(
-                spark, meta={"wave": wave, "adds_hashes": False}
-            )
+            # an ingest carries no wave: its compaction must not mark the
+            # wave it precedes committed (last_committed_wave)
+            self.lake.frontier.compact(spark, meta={**meta, "adds_hashes": False})
             self._frontier_cur = self.lake.frontier.read(spark)
             # compaction scans the full key set anyway — the moment to
             # re-derive (m, k) from actual counts instead of OR-merging
@@ -655,7 +655,8 @@ class CrawlEngine:
             self._bloom_rebuild()
         else:
             self._frontier_cur = self.lake.frontier.read(spark)
-            self._bloom_update(insert_rows)
+            self._bloom_update(self.lake.frontier.read_inserts(
+                spark, frontier_version, cols=("host_salt", "url_hash")))
         link_stats = _obs_get(
             obs_links,
             {"links_seen": 0, **{f"drop_{r}": 0 for r in DROP_REASONS}},

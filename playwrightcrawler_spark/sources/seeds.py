@@ -5,8 +5,8 @@ The reference tails text files from INPUT_FOLDER 100 URLs at a time,
 rewrites the remainder and tolerates broken UTF-8. On Spark the whole
 folder is one distributed read with set semantics — batching and
 remainder bookkeeping disappear (SURVEY.md S5); bad bytes are handled by
-the permissive text source. The per-URL hygiene is exactly the discovered-
-link pipeline, so seeds can never bypass the block lists.
+the permissive text source. Seeds enter the frontier through the wave's
+link stage, so they can never bypass the block lists.
 """
 
 from __future__ import annotations
@@ -15,19 +15,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_seed_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """One URL per line, blank lines and '#' comments dropped."""
-    lines = spark.read.text(folder)
+def seed_lines(lines: DataFrame) -> DataFrame:
+    """A text source's ``value`` lines → one trimmed ``url`` per line,
+    blank lines and '#' comments dropped. Stateless, so the batch folder
+    reader and the streaming link source share it."""
     return (
         lines.select(F.trim(F.col("value")).alias("url"))
         .filter((F.col("url") != "") & ~F.col("url").startswith("#"))
-        .dropDuplicates(["url"])
     )
 
 
+def read_seed_folder(spark: SparkSession, folder: str) -> DataFrame:
+    """One URL per line (``seed_lines``), duplicates collapsed."""
+    return seed_lines(spark.read.text(folder)).dropDuplicates(["url"])
+
+
 def ingest_seeds(engine, folder: str) -> int:
-    """Folder → frontier MERGE, fully distributed: the seed DataFrame flows
-    through the engine's link hygiene and is anti-joined against the live
+    """Folder → frontier via ``engine.ingest``, fully distributed: the seed
+    DataFrame takes the wave's link hygiene and is anti-joined against the live
     frontier (never collected to the driver, never overwriting the
     frontier — reference process_input_url_files runs DURING a crawl).
     Returns the number of NEW frontier rows."""

@@ -2,18 +2,16 @@
 
 Production design (SURVEY.md §1.3): Iceberg tables with hidden partitioning
 (``months(discovered_at)`` for the monthly-index parity,
-``bucket(N, host_salt)`` for the frontier), MERGE INTO for the idempotent
-`_id`-style upsert, snapshots + time travel for backup/restore (S8) and
-wave checkpointing. No Iceberg runtime ships in this sandbox, so this
-module provides the same *semantics* over bare parquet:
+``bucket(N, host_salt)`` for the frontier), MERGE INTO … WHEN NOT
+MATCHED THEN INSERT for the `_id` seen-set, snapshots + time travel for
+backup/restore (S8) and wave checkpointing. No Iceberg runtime ships in
+this sandbox, so this module provides the same *semantics* over bare
+parquet:
 
 - every write creates ``snapshots/v{N}`` + updates ``manifest.json``
   atomically (rename), so a killed job never corrupts the table;
 - ``read(version=...)`` is time travel; ``latest_version`` is the resume
   point (test: kill between waves → relaunch → identical tables);
-- ``merge_upsert`` = last-writer-wins by key via anti-join + union —
-  exactly the ES ``_id`` overwrite semantics (reference
-  playwrightcrawler.py:1628-1651);
 - reads are planned from the manifest, as Iceberg plans scans from table
   metadata. ``manifest.json`` holds every distinct read schema once
   (version entries name theirs by index, a merge-on-read table keeps a
@@ -28,7 +26,10 @@ module provides the same *semantics* over bare parquet:
   Iceberg manifest list removes that listing too;
 - a delta or merge-on-read commit whose columns differ from the recorded
   schema in name or type raises before it writes; full-table writes may
-  change the schema, which is recorded for that version.
+  change the schema, which is recorded for that version;
+- a merge-on-read commit with no flips whose inserts hold no rows
+  publishes nothing (an insert-only commit is the seen-set MERGE: the
+  caller anti-joins its rows against the key set first).
 
 The interface is deliberately the subset that maps 1:1 onto Iceberg calls
 (``writeTo(...).append()``, ``MERGE INTO``, ``VERSION AS OF``) so swapping
@@ -56,6 +57,13 @@ def _read_schema(schema: StructType, partition_by=()) -> StructType:
     partition columns last, every field nullable."""
     data = [f for f in schema.fields if f.name not in partition_by]
     return StructType(data + [schema[c] for c in partition_by]).toNullable()
+
+
+def _dir_rows(d: Path) -> int:
+    """Rows in the parquet files of directory ``d``, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in d.glob("*.parquet"))
 
 
 def _partition_value(raw: str) -> str | None:
@@ -207,24 +215,6 @@ class SnapshotTable:
             df = self.read(spark).unionByName(df, allowMissingColumns=True)
         return self.write(df, meta)
 
-    def merge_upsert(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        key: str,
-        meta: dict | None = None,
-    ) -> int:
-        """MERGE INTO … WHEN MATCHED UPDATE / NOT MATCHED INSERT with
-        last-writer-wins — the `_id` overwrite semantics of save_batch."""
-        updates = updates.dropDuplicates([key])
-        if self.exists():
-            current = self.read(spark)
-            kept = current.join(updates.select(key), on=key, how="left_anti")
-            merged = kept.unionByName(updates, allowMissingColumns=True)
-        else:
-            merged = updates
-        return self.write(merged, meta)
-
     def write_rows(self, rows: list[dict], schema, meta: dict | None = None) -> int:
         """Driver-local write for tiny frames: straight pyarrow parquet, no
         Spark job. ``schema`` is a pyarrow schema. For delta tables the rows
@@ -300,7 +290,9 @@ class MorTable(SnapshotTable):
         """One atomic O(wave) commit: write increment files, then the
         manifest rename publishes both (a kill mid-write leaves an
         unreferenced directory, never a corrupt table). Inserts must carry
-        the schema in force, flips the recorded flips schema."""
+        the schema in force, flips the recorded flips schema. With no flips
+        and inserts holding no rows (read from the file footers) nothing is
+        published and the result is None."""
         m = self._read_manifest()
         v = (self.latest_version or 0) + 1
         d = self._snap_dir(v)
@@ -314,13 +306,16 @@ class MorTable(SnapshotTable):
             self._check_drift(m, schemas["flips_schema"], key="flips_schema")
         if inserts is not None:
             inserts.write.mode("overwrite").parquet(f"{d}/inserts")
+            if flips is None and not _dir_rows(Path(d) / "inserts"):
+                shutil.rmtree(d)
+                return None
         if flips is not None:
             flips.write.mode("overwrite").parquet(f"{d}/flips")
         self._commit(v, {**(meta or {}), "base": False}, **schemas)
         return v
 
     def append(self, spark: SparkSession, df: DataFrame, meta: dict | None = None) -> int:
-        """Insert-only increment (seed ingestion)."""
+        """Insert-only increment; None when ``df`` is empty."""
         return self.commit_wave(inserts=df, flips=None, meta=meta)
 
     # -- reconstruction ---------------------------------------------------------
@@ -398,6 +393,14 @@ class MorTable(SnapshotTable):
         ]
         return spark.read.schema(self._schema(m, upto=version)).parquet(*dirs).select(*cols)
 
+    def read_inserts(self, spark: SparkSession, version: int,
+                     cols: tuple[str, ...]) -> DataFrame:
+        """The rows delta ``version`` inserted, read back from its files
+        with the schema in force at that version."""
+        schema = self._schema(self._read_manifest(), upto=version)
+        return spark.read.schema(schema).parquet(
+            f"{self._snap_dir(version)}/inserts").select(*cols)
+
     def deltas_since_base(self) -> int:
         entries = self.versions()
         base_vs = [e["version"] for e in entries if self._is_base(e)]
@@ -410,8 +413,6 @@ class MorTable(SnapshotTable):
         base itself with ``with_base``) up to version ``upto``, summed from
         parquet footers: driver-side metadata reads, no Spark job, exact
         whoever committed them."""
-        import pyarrow.parquet as pq
-
         entries = [e for e in self.versions()
                    if upto is None or e["version"] <= upto]
         base_vs = [e["version"] for e in entries if self._is_base(e)]
@@ -419,8 +420,7 @@ class MorTable(SnapshotTable):
         dirs = [Path(self._snap_dir(base_v))] if with_base and base_vs else []
         dirs += [Path(self._snap_dir(e["version"])) / sub
                  for e in entries if e["version"] > base_v]
-        return sum(pq.ParquetFile(p).metadata.num_rows
-                   for d in dirs for p in d.glob("*.parquet"))
+        return sum(_dir_rows(d) for d in dirs)
 
     def flip_rows_since_base(self, upto: int | None = None) -> int:
         """Cumulative flip rows in deltas after the last base — the size of

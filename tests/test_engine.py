@@ -3,6 +3,8 @@ invariant, frontier invariants, politeness, determinism and resume."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -263,6 +265,24 @@ def test_seed_ingest_merges_into_live_frontier(spark, pages_dir, tmp_path_factor
     assert m["urls_selected"] > 0
 
 
+def test_ingest_of_known_seeds_publishes_nothing(spark, pages_dir, tmp_path_factory):
+    """The seed folder is re-read every wave: an ingest that finds no new
+    URL must publish no frontier version and write no Bloom sidecar, or
+    every wave would add an empty delta and halve the compaction
+    interval."""
+    wh = tmp_path_factory.mktemp("wh_ingest_known")
+    eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=50,
+                      method_weights={"oldest": 1}, use_bloom=True,
+                      bloom_items_per_bucket=1000)
+    eng.run(1, seed_urls=pages_gen.seed_urls())
+    fr, side = eng.lake.frontier, eng.lake.seen_bloom
+    before = (fr.latest_version, side.latest_version)
+    assert eng.ingest(pages_gen.seed_urls()) == 0
+    assert (fr.latest_version, side.latest_version) == before
+    # the unpublished increment leaves no directory behind
+    assert not Path(fr._snap_dir(before[0] + 1)).exists()
+
+
 def test_bloom_crawl_identical_to_exact(spark, pages_dir, tmp_path_factory):
     """use_bloom=True (pre-filter + broadcast confirm) must yield tables
     identical to the exact anti-join path — the Bloom is a pre-filter only,
@@ -312,7 +332,10 @@ def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_
     assert cover.filter(~F.col("m")).count() == 0            # zero false negatives
 
     # (b) simulate the kill: inserts committed, sidecar write never ran
-    extra = eng2._seed_rows(["https://tail009.example.io/fresh.html"], wave=99)
+    extra = eng2._frontier_rows(
+        eng2._hashed_links(eng2._seed_links(["https://tail009.example.io/fresh.html"])),
+        wave=99,
+    )
     eng2.lake.frontier.commit_wave(inserts=extra, flips=None,
                                    meta={"wave": 99, "adds_hashes": True})
     eng3 = CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,

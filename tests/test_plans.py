@@ -317,6 +317,41 @@ def test_jobs_per_wave(spark, pages_dir, tmp_path, engine_kw, jobs):
     assert got == jobs
 
 
+def test_bloom_update_jobs_do_not_depend_on_bucket_lineage(spark, pages_dir, tmp_path):
+    """The Bloom increment is built from the insert files its commit just
+    wrote, so its Spark jobs are the same whether or not bucket lineage
+    caches the inserts. Built from the inserts' lineage, an uncached wave
+    re-ran the link pipeline, the Bloom probe and the confirm scan inside
+    the update: 5 jobs per wave here against 3 with the cache."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.sources import pages_gen
+
+    sc = spark.sparkContext
+    jobs = {}
+    for lineage in (True, False):
+        eng = CrawlEngine(spark, pages_dir, str(tmp_path / f"wh_{lineage}"), wave_size=300,
+                          per_host_quota=2, seed=7, hunt_open_directories=False,
+                          use_bloom=True, bucket_lineage=lineage)
+        eng.bootstrap(pages_gen.seed_urls())
+        update, counts = eng._bloom_update, []
+
+        def counted(keys, update=update, counts=counts, lineage=lineage):
+            group = f"bloom-update-{tmp_path.name}-{lineage}-{len(counts)}"
+            sc.setJobGroup(group, group)
+            try:
+                update(keys)
+            finally:
+                sc._jsc.clearJobGroup()
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+        eng._bloom_update = counted
+        for wave in (1, 2):
+            assert not eng.run_wave(wave)["done"]
+        jobs[lineage] = counts
+    assert len(jobs[True]) == 2
+    assert jobs[True] == jobs[False]
+
+
 def test_fast_pass_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
     """The fast-extension pass runs the wave's stages, so it too crosses
     into python once: the routed extraction UDF in the crawled append and

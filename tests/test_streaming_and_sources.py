@@ -24,12 +24,13 @@ def test_seed_folder(spark, tmp_path):
     assert urls == {"https://a.example/", "https://b.example/x"}
 
 
-def test_streaming_frontier_ingest(spark, tmp_path):
+def test_streaming_frontier_ingest(spark, pages_dir, tmp_path):
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
     from playwrightcrawler_spark.streaming.frontier_stream import start_frontier_ingest
 
     links_dir = tmp_path / "links"
     links_dir.mkdir()
-    frontier = SnapshotTable(str(tmp_path / "wh"), "frontier")
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"))
     (links_dir / "batch1.txt").write_text(
         "https://s1.example/a\n"
         "htpps://typo.example/b\n"            # scheme typo → canonicalized
@@ -37,19 +38,56 @@ def test_streaming_frontier_ingest(spark, tmp_path):
         "https://www.gstatic.com/blocked\n"   # blocked host → dropped
         "https://s1.example/a\n"              # dup → collapsed
     )
-    q = start_frontier_ingest(
-        spark, str(links_dir), frontier, str(tmp_path / "ckpt"), trigger_seconds=1
-    )
+    q = start_frontier_ingest(eng, str(links_dir), str(tmp_path / "ckpt"), trigger_seconds=1)
     try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if frontier.exists() and frontier.read(spark).count() >= 2:
-                break
-            time.sleep(1)
-        rows = {r.url for r in frontier.read(spark).collect()}
-        assert rows == {"https://s1.example/a", "https://typo.example/b"}
+        q.processAllAvailable()
     finally:
         q.stop()
+    rows = {r.url for r in eng.lake.frontier.read(spark).collect()}
+    assert rows == {"https://s1.example/a", "https://typo.example/b"}
+
+
+def test_streaming_ingest_commits_through_the_link_stage(spark, pages_dir, tmp_path):
+    """A micro-batch into a live frontier is an ingest: a URL the crawl
+    already visited stays visited, the engine's hygiene drops a crawler
+    trap, the batch publishes an O(batch) delta instead of rewriting the
+    frontier as a new base, and the Bloom sidecar covers the new rows, so
+    an engine restarted on the warehouse keeps it instead of rebuilding."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.operators import seen
+    from playwrightcrawler_spark.sources import pages_gen
+    from playwrightcrawler_spark.streaming.frontier_stream import start_frontier_ingest
+
+    kw = dict(wave_size=50, method_weights={"oldest": 1}, use_bloom=True,
+              bloom_items_per_bucket=1000)
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), **kw)
+    eng.run(1, seed_urls=pages_gen.seed_urls())
+    fr, side = eng.lake.frontier, eng.lake.seen_bloom
+    visited = fr.read(spark).filter(F.col("visited") & (F.col("wave") == 1)).first()["url"]
+    trap = "https://tail007.example.io/a/b/a/b/a/b/a/b/a/b/"
+    fresh = "https://tail005.example.io/p1.html"
+    v_before = fr.latest_version
+
+    links_dir = tmp_path / "links"
+    links_dir.mkdir()
+    (links_dir / "batch1.txt").write_text(f"{visited}\n{trap}\n{fresh}\n")
+    q = start_frontier_ingest(eng, str(links_dir), str(tmp_path / "ckpt"), trigger_seconds=1)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    rows = {r["url"]: r for r in fr.read(spark).collect()}
+    assert (rows[visited]["visited"], rows[visited]["wave"]) == (True, 1)
+    assert trap not in rows
+    assert fresh in rows
+    assert [e["base"] for e in fr.versions() if e["version"] > v_before] == [False]
+    assert side.versions()[-1]["frontier_version"] == fr.latest_version
+    cover = fr.read(spark).withColumn("m", seen.maybe_seen_col(spark, side.read(spark).collect()))
+    assert cover.filter(~F.col("m")).count() == 0
+    side_v = side.latest_version
+    CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), **kw)
+    assert side.latest_version == side_v
 
 
 def test_streaming_politeness_gate(spark, tmp_path):
@@ -200,18 +238,6 @@ def test_snapshot_delta_semantics(spark, tmp_path):
     t.append(spark, spark.range(3, 5).select(F.col("id")))
     assert t.read(spark).count() == 5
     assert t.read(spark, version=1).count() == 3  # time travel on deltas
-
-
-def test_snapshot_merge_upsert(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path), "kv")
-    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
-    t.merge_upsert(
-        spark,
-        spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"),
-        key="k",
-    )
-    got = {r.k: r.v for r in t.read(spark).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}  # _id overwrite semantics (J5)
 
 
 @pytest.mark.parametrize(
