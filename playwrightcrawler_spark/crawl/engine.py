@@ -12,22 +12,23 @@ One wave =
     discover: explode links + open-dir tree expansion (P16) → JVM-side
               hygiene filters with drop accounting (P4-P10, A5)
     dedup   : dropDuplicates + anti-join against the frontier (J1/J2/J5)
-    commit  : crawled delta-append + frontier snapshot + wave_metrics,
-              atomic per wave (resumable — north_rule checkpoint/lineage)
+    commit  : crawled delta-append + frontier increments + Bloom sidecar +
+              wave_metrics, published together by one lakehouse
+              transaction per wave (resumable from a kill anywhere —
+              north_rule checkpoint/lineage)
 
 Scale design:
 - the wave side of every join is <= wave_size rows and broadcast, so the
   10^10-row pages/frontier tables are never shuffled on the fetch path;
 - the wide shuffles are the per-host window (bounded by the candidate
   set) and the frontier rewrite (bucketed by host_salt on Iceberg);
-- five Spark ACTIONS per wave with bucket lineage, Bloom and compaction
-  off (selection counts, cache fill, crawled write, frontier inserts and
-  flips writes); a bucketed pages table, bucket lineage, the Bloom
-  update and a compaction add one each. Each action runs as one or more
-  Spark JOBS (AQE submits every query stage and broadcast as its own
-  job: 13 jobs per wave on the benchmark's crawl_extract shape). Table
-  reads and the pages scan add none: they are planned from recorded
-  schemas, not inferred. Counters ride on Observations attached to the
+- five Spark ACTIONS per wave with Bloom and compaction off (selection
+  counts, cache fill, crawled write, frontier inserts and flips writes);
+  a bucketed pages table, the Bloom update and a compaction add one
+  each. Each action runs as one or more Spark JOBS (AQE submits every
+  query stage and broadcast as its own job: 13 jobs per wave on the
+  benchmark's crawl_extract shape). Table reads and the pages scan add
+  none: they are planned from recorded schemas, not inferred. Counters ride on Observations attached to the
   write actions instead of separate count() actions;
 - crawled/wave_metrics are fast-append (delta) tables: commit cost is
   O(wave), only the frontier pays a rewrite (Iceberg MoR would make that
@@ -44,6 +45,7 @@ extraction UDF and one crawled/frontier commit sequence.
 
 from __future__ import annotations
 
+import functools
 import time
 from datetime import datetime, timedelta, timezone
 
@@ -87,12 +89,10 @@ _LOG = logging.getLogger(__name__)
 
 
 def _obs_get(obs: Observation, defaults: dict) -> dict:
-    """Observation.get, tolerating elided metrics: when AQE collapses an
-    empty join branch it can prune the CollectMetrics node entirely, and
-    the JVM then fails to convert the (schemaless) result row. Empty input
-    means every counter is 0, which is exactly ``defaults`` — but any
-    OTHER failure is logged so a genuine Observation bug can't silently
-    zero a whole wave's metrics (round-2 verdict)."""
+    """Observation.get, tolerating elided metrics: AQE can prune the
+    CollectMetrics node of an empty join branch, and reading it then
+    fails. Empty input means every counter is 0, exactly ``defaults``;
+    the failure is logged so a genuine Observation bug can't hide."""
     try:
         got = obs.get
         return {**defaults, **got} if got else dict(defaults)
@@ -107,6 +107,28 @@ def _obs_get(obs: Observation, defaults: dict) -> dict:
 def _wave_ts(wave: int):
     """Deterministic timestamps: reruns produce identical tables."""
     return _BASE_TS + timedelta(hours=wave)
+
+
+def _atomic(op):
+    """Run the engine operation ``op`` as one lakehouse transaction: the
+    table commits it makes are published together when it returns, or not
+    at all if it raises, so a kill anywhere resumes from the last whole
+    operation. A nested operation (``ingest`` → ``bootstrap``) joins the
+    outer one."""
+
+    @functools.wraps(op)
+    def run(self, *args, **kwargs):
+        try:
+            with self.lake.transaction():
+                self._bloom_sync()
+                return op(self, *args, **kwargs)
+        except BaseException:
+            # built on the discarded commits: re-derived from the published
+            # tables by the next operation
+            self._frontier_cur = self._bloom_rows = None
+            raise
+
+    return run
 
 
 class CrawlEngine:
@@ -146,8 +168,8 @@ class CrawlEngine:
                 spark.read.parquet(pages_path)
             ).cache()
         self.robots = robots_rules
-        # per-salt-bucket lineage rows cost one extra tiny job per wave;
-        # throughput benches may turn them off (scalar metrics remain)
+        # write the per-salt-bucket links_new rows (A5/A6); they are counted
+        # either way, by the insert write's Observation
         self.bucket_lineage = bucket_lineage
         # Bloom seen-set pre-filter (north_rule). Off by default in the
         # sandbox: the exact anti-join is cheaper below ~10^7 frontier rows
@@ -155,12 +177,9 @@ class CrawlEngine:
         # between scanning and SHUFFLING a 10^10-row table per wave.
         self.use_bloom = use_bloom
         self.bloom_items = bloom_items_per_bucket
-        # fold MoR deltas into a fresh base every K waves — OR as soon as
-        # the accumulated flip rows exceed compact_flip_rows: the flip set
-        # is read()'s merge-join side, and at wave_size 10^7 a count-based
-        # cadence alone would let it grow past any broadcast budget
-        # (round-2 verdict; read() also degrades to a shuffle join past
-        # MorTable.FLIP_BROADCAST_ROWS as the belt-and-braces bound)
+        # fold MoR deltas into a fresh base every K commits, or once the
+        # flip rows (read()'s merge-join side) pass compact_flip_rows: at
+        # wave_size 10^7 a count cadence alone outgrows any broadcast
         self.compact_every = compact_every
         self.compact_flip_rows = compact_flip_rows
         # raw_webcontent column (reference EXTRACT_RAW_WEBCONTENT,
@@ -168,20 +187,18 @@ class CrawlEngine:
         # html rows only; default off matches the reference. Must stay
         # constant per warehouse (delta-table schema stability).
         self.extract_raw = extract_raw_webcontent
-        self._frontier_cur: DataFrame | None = None
+        self._frontier_cur: tuple[int, DataFrame] | None = None
         self._bloom_rows: list | None = None
-        # wave-membership pruning (round-5 verdict #2): a pages table
-        # written hive-partitioned by pmod(xxhash64(url), N) carries a
-        # marker with N; each wave then pushes its bucket membership into
-        # the scan as a PartitionFilter, so the per-wave read is
-        # min(wave_size, N)/N of the table's files instead of all of them
-        # — THE scan-side lever at 10^10 pages. None → unbucketed table,
-        # full scan (the broadcast join still never shuffles it).
+        # wave-membership pruning: a pages table hive-partitioned by
+        # pmod(xxhash64(url), N) carries a marker with N; a wave pushes its
+        # buckets into the scan as a PartitionFilter and reads
+        # min(wave_size, N)/N of the files. None → unbucketed, full scan.
         from playwrightcrawler_spark.sources import pages_gen as _pg
 
         self._url_buckets = _pg.read_bucket_marker(pages_path)
-        if use_bloom and self.lake.frontier.exists():
-            self._bloom_sync()
+        # seed-folder files this engine has ingested (``run(seed_folder=)``)
+        self._seed_files: set[str] = set()
+        self._bloom_sync()
 
     # ------------------------------------------------------------------ util
     def _pages(self) -> DataFrame:
@@ -201,23 +218,17 @@ class CrawlEngine:
         tests/test_plans.py::test_bucketed_pages_wave_scan_prunes."""
         if not self._url_buckets:
             return self._pages()
-        buckets = [
-            r[0]
-            for r in wave_df.select(
-                F.pmod(F.xxhash64("url"), F.lit(self._url_buckets))
-                .cast("int").alias("b")
-            ).distinct().collect()
-        ]
-        return (
-            self._pages()
-            .filter(F.col("url_bucket").isin(buckets))
-            .select("url", "html")
-        )
+        buckets = [r[0] for r in wave_df.select(
+            F.pmod(F.xxhash64("url"), F.lit(self._url_buckets)).cast("int").alias("b")
+        ).distinct().collect()]
+        return self._pages().filter(F.col("url_bucket").isin(buckets)).select("url", "html")
 
     def _frontier(self) -> DataFrame:
-        if self._frontier_cur is None:
-            self._frontier_cur = self.lake.frontier.read(self.spark)
-        return self._frontier_cur
+        """The frontier's merge-on-read view, read again after a commit."""
+        v = self.lake.frontier.latest_version
+        if self._frontier_cur is None or self._frontier_cur[0] != v:
+            self._frontier_cur = (v, self.lake.frontier.read(self.spark))
+        return self._frontier_cur[1]
 
     @staticmethod
     def _frontier_rows(links: DataFrame, wave: int) -> DataFrame:
@@ -316,54 +327,42 @@ class CrawlEngine:
         rows at depth 0, the shape ``_page_links`` gives discovered links."""
         if not isinstance(urls, DataFrame):
             urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
+        # a generator's output is not an alias of the UDF call, so the url
+        # filter of ``_dedupe_links`` cannot be pushed below it and copy the
+        # UDF: seed_link runs once per seed
         return urls.select(
-            udfs.seed_link(F.col("url")).alias("_l"), F.lit(0).alias("depth")
-        ).select("_l.*", "depth")
+            F.inline(F.array(udfs.seed_link(F.col("url")))), F.lit(0).alias("depth"))
 
     # ------------------------------------------------------------- bootstrap
+    @_atomic
     def bootstrap(self, seed_urls: DataFrame | list[str]) -> int:
         """S5: seed ingestion → frontier v1 (same hygiene as links). Accepts
         a DataFrame so a 10^8-line seed folder never touches the driver."""
         rows = self._frontier_rows(
             self._hashed_links(self._seed_links(seed_urls)), wave=0
         ).dropDuplicates(["url_hash"])
-        self.lake.frontier.write(
-            rows, meta={"wave": 0, "op": "bootstrap", "adds_hashes": True}
-        )
-        self._frontier_cur = self.lake.frontier.read(self.spark)
+        self.lake.frontier.write(rows, meta={"wave": 0, "op": "bootstrap"})
         self._bloom_update(
             self.lake.frontier.read_keys(self.spark, cols=("host_salt", "url_hash")))
         return self.lake.frontier.key_rows()
 
     # ---------------------------------------------------- bloom sidecar life
     def _bloom_sync(self) -> None:
-        """Make the sidecar exactly cover the frontier on engine start.
-
-        The sidecar records the frontier version it covers; any LATER
-        frontier commit that added url_hashes (``adds_hashes`` meta —
-        flip-only and compaction commits add none) means hashes exist that
-        the Bloom has never seen, which would be flagged 'definitely new'
-        and re-inserted — violating the exactness contract. That happens
-        when (a) use_bloom is enabled mid-life on a warehouse without a
-        sidecar, or (b) a kill landed between the frontier commit and the
-        sidecar write (they are separate commits). Either way: rebuild
-        from the FULL frontier (round-2 advice)."""
+        """Hold the sidecar covering the published frontier (at start, and
+        after an aborted operation dropped it). A Bloom engine follows each
+        frontier commit, in the same transaction, with a sidecar stamped
+        with that version: one stamped with the latest version is loaded.
+        Otherwise (Bloom enabled mid-life, commits by a Bloom-off engine)
+        hashes may exist that the Bloom never saw and would call 'new'
+        (exactness contract): rebuild from the FULL frontier."""
+        if not self.use_bloom or self._bloom_rows is not None or not self.lake.frontier.exists():
+            return
         side = self.lake.seen_bloom
-        covered = side.versions()[-1].get("frontier_version") if side.exists() else None
-        if covered is not None:
-            stale = any(
-                # unknown provenance (pre-lifecycle warehouses) counts as
-                # hash-adding — rebuild is the safe default
-                e.get("adds_hashes", True)
-                for e in self.lake.frontier.versions()
-                if e["version"] > covered
-            )
-        else:
-            stale = True
-        if stale:
-            self._bloom_rebuild()
-        else:
+        if (side.exists() and side.versions()[-1].get("frontier_version")
+                == self.lake.frontier.latest_version):
             self._bloom_rows = side.read(self.spark).collect()
+        else:
+            self._bloom_rebuild()
 
     def _bloom_rebuild(self) -> None:
         """Full sidecar rebuild with (m, k) re-derived from the ACTUAL
@@ -371,8 +370,8 @@ class CrawlEngine:
         saturate once the frontier outgrows them — FPP degrades toward 1
         and every candidate takes the broadcast-confirm path, silently
         un-filtering the pre-filter (round-2 verdict). Called at
-        compaction (the moment the full key set is being scanned anyway)
-        and when the sidecar is missing/stale."""
+        compaction and cleanup (new bases: the full key set is scanned
+        anyway) and when the sidecar is missing or stale."""
         if not self.use_bloom:
             return
         # keys-only read: the Bloom covers url_hashes, which flips never
@@ -384,17 +383,8 @@ class CrawlEngine:
             -(-n * 2 // config.HOST_SALT_BUCKETS),  # ceil, 2x headroom
             self.bloom_items,
         )
-        new = seen.build_blooms(
-            keys,
-            expected_items_per_bucket=per_bucket,
-        )
-        rows = [r.asDict() for r in new.collect()]
-        self.lake.seen_bloom.write_rows(
-            rows, seen.SIDECAR_PA_SCHEMA,
-            meta={"frontier_version": self.lake.frontier.latest_version,
-                  "per_bucket": int(per_bucket), "op": "rebuild"},
-        )
-        self._bloom_rows = rows
+        self._bloom_write(seen.build_blooms(keys, expected_items_per_bucket=per_bucket),
+                          per_bucket=int(per_bucket), op="rebuild")
 
     def _bloom_update(self, keys: DataFrame) -> None:
         """OR-merge a Bloom over freshly inserted ``(host_salt, url_hash)``
@@ -404,30 +394,26 @@ class CrawlEngine:
         write job). The increment is built with the LIVE sidecar's (m, k)
         — after a resize they differ from the config-derived defaults.
         The sidecar is part of the checkpoint — resume reloads it instead
-        of rebuilding — and records the frontier version it covers so a
-        kill between the two commits is detected (``_bloom_sync``)."""
+        of rebuilding — and records the frontier version it covers
+        (``_bloom_sync``)."""
         if not self.use_bloom:
             return
-        params = {}
-        if self._bloom_rows:
-            params = dict(
-                m_bits=int(self._bloom_rows[0]["m_bits"]),
-                k=int(self._bloom_rows[0]["k"]),
-            )
-        new = seen.build_blooms(
-            keys,
-            expected_items_per_bucket=self.bloom_items,
-            **params,
-        )
-        if self._bloom_rows:
+        live = self._bloom_rows
+        params = dict(m_bits=int(live[0]["m_bits"]), k=int(live[0]["k"])) if live else {}
+        new = seen.build_blooms(keys, expected_items_per_bucket=self.bloom_items, **params)
+        if live:
             new = seen.merge_blooms(self.lake.seen_bloom.read(self.spark), new)
-        rows = [r.asDict() for r in new.collect()]
-        self.lake.seen_bloom.write_rows(
-            rows, seen.SIDECAR_PA_SCHEMA,
-            meta={"frontier_version": self.lake.frontier.latest_version},
-        )
+        self._bloom_write(new)
+
+    def _bloom_write(self, blooms: DataFrame, **meta) -> None:
+        """Collect the per-bucket sidecar (64 rows) and write it
+        driver-side, stamped with the frontier version it covers."""
+        rows = [r.asDict() for r in blooms.collect()]
+        self.lake.seen_bloom.write_rows(rows, seen.SIDECAR_PA_SCHEMA, meta={
+            "frontier_version": self.lake.frontier.latest_version, **meta})
         self._bloom_rows = rows
 
+    @_atomic
     def ingest(self, seed_urls: DataFrame | list[str]) -> int:
         """S5 on a LIVE crawl (reference process_input_url_files runs
         continuously): seed URLs enter the existing frontier through the
@@ -438,10 +424,9 @@ class CrawlEngine:
         if not self.lake.frontier.exists():
             return self.bootstrap(seed_urls)
         wave = self.last_committed_wave() + 1
-        _, _, insert_rows, obs_insert = self._commit_links(
-            self._seed_links(seed_urls), None, wave, meta={"op": "ingest"}
-        )
-        return self._links_new(insert_rows, obs_insert, wave)[0]
+        _, link_stats, _ = self._commit_links(
+            self._seed_links(seed_urls), None, wave, meta={"op": "ingest"})
+        return link_stats["links_new"]
 
     # ----------------------------------------------------------- wave stages
     def _robots_step(self, selected: DataFrame) -> tuple[DataFrame, int, int]:
@@ -467,14 +452,10 @@ class CrawlEngine:
                 )
             )
             # crawl_delay_ms (north_rule politeness): a host that asks for a
-            # delay gets at most one URL per wave regardless of the quota.
-            # Overflow rows are DEFERRED (dropped from the wave, stay
-            # unvisited for later waves) — unlike robots-denied rows, which
-            # are consumed. The slot rank counts NON-DENIED rows only: a
-            # denied row winning row 1 would otherwise consume the host's
-            # single slot and defer the actually-crawlable URL (round-2
-            # advice) — denied rows never crawl, so they must not occupy
-            # the politeness slot.
+            # delay gets one URL per wave whatever the quota. Overflow rows
+            # are DEFERRED (stay unvisited), unlike robots-denied rows,
+            # which are consumed. The slot rank counts NON-DENIED rows only,
+            # so a denied row can't take the slot of a crawlable URL.
             w_delay = Window.partitionBy("host").orderBy("discovered_at", "url")
             allowed_rank = F.sum(
                 F.when(F.col("_denied"), 0).otherwise(1)
@@ -511,22 +492,18 @@ class CrawlEngine:
         the pages table and run sniff → route → extraction inside the scan
         stage itself — one pages scan, zero shuffles, one Arrow crossing
         (html routes only), payload bytes dropped unless a downstream route
-        consumes them. A named method (round-4 verdict #5) so plan audits —
-        the bench plan-guard and tests — can assert the physical shape
-        (BroadcastHashJoin, no Exchange, ArrowEvalPython only) without
-        running a wave; the caller caches the returned frame.
+        consumes them. A named method so plan audits can assert the
+        physical shape (BroadcastHashJoin, no Exchange, ArrowEvalPython
+        only) without running a wave; the caller caches the result.
 
-        INNER join (either side buildable) — a left-outer can't broadcast
-        its preserved side; dead links are recovered by a tiny anti-join
-        of the wave against the fetched urls (``_build_crawled``), so the
-        10^10-row pages table is scanned exactly once and NEVER shuffled.
-        The earlier two-pass shape (cache the joined html, then extract
-        from the cache) tripled the byte traffic and quantized the
-        python-heavy extraction into shuffle.partitions coarse tasks
-        (round-4 probe: a 190 s 8-task extraction stage on 4 cores with a
-        40 s one-task tail). Parallelism here comes from SCAN SPLITS —
-        maxPartitionBytes is sized (session.py) so a wave's pages span
-        many fine tasks, which pack evenly at any core count."""
+        INNER join (either side buildable; a left-outer can't broadcast its
+        preserved side): dead links are recovered by a tiny anti-join of
+        the wave against the fetched urls (``_build_crawled``), so the
+        10^10-row pages table is scanned once and NEVER shuffled.
+        Extracting from a cache of the joined html instead tripled the byte
+        traffic and quantized extraction into shuffle.partitions coarse
+        tasks; parallelism comes from SCAN SPLITS (session.py sizes
+        maxPartitionBytes), which pack evenly at any core count."""
         fetched = (
             self._pages_for_wave(wave_df).join(F.broadcast(wave_df), on="url", how="inner")
             .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
@@ -567,23 +544,14 @@ class CrawlEngine:
         crawled_all = self._build_crawled(fetched, wave_df, wave).observe(
             obs, *[c.alias(n) for n, c in counters.items()]
         )
-        # Bounded coalesce before the commit (r7, guide §6 small-files /
-        # §2.2 fewer-larger tasks): writing straight from the cache
-        # partitions launched scan-splits + email-branch tasks (~481 at
-        # bench shape) each re-deserializing the wave's very large
-        # serialized plan — event-log metrics showed ~36 core-s of task
-        # deserialization + a python roundtrip per email task against
-        # only ~21 core-s of actual cpu. Coalescing to ~WRITE_TASK_ROWS
-        # rows per task cuts that fixed per-task cost ~10× while keeping
-        # each write task's dynamic-partition sort buffer bounded
-        # (~100 MB of text at CC page weight) — coalescing to CORE WIDTH
-        # was tried in round 4 and rejected because unbounded rows/task
-        # (~5k at local[2]) blew execution memory; the row-bound keeps
-        # the buffer flat at any core count. Floor at npart so narrow
-        # waves still use the cores.
-        # rounded UP to a multiple of npart: 41 tasks on 32 slots runs
-        # 1.28 quantized rounds with 23 slots idle in the tail — the
-        # packing loss eats the per-task saving (measured r7)
+        # Bounded coalesce before the commit: writing straight from the
+        # cache partitions launched ~481 tasks at bench shape, each
+        # re-deserializing the wave's large plan (~36 core-s against ~21 of
+        # work). ~WRITE_TASK_ROWS rows per task cuts that ~10× and keeps
+        # each task's dynamic-partition sort buffer bounded at any core
+        # count (coalescing to core width blew execution memory). At least
+        # npart tasks, rounded UP to a multiple of it: 41 tasks on 32 slots
+        # idle 23 slots in the tail.
         npart = self._npart(urls_selected)
         n_write = npart * max(1, -(-urls_selected // (config.WRITE_TASK_ROWS * npart)))
         version = self.lake.crawled.append(
@@ -591,7 +559,7 @@ class CrawlEngine:
         return version, _obs_get(obs, dict.fromkeys(counters, 0))
 
     def _commit_links(self, web_links: DataFrame, selected: DataFrame | None, wave: int,
-                      meta: dict) -> tuple[int | None, dict, DataFrame, Observation | None]:
+                      meta: dict) -> tuple[int | None, dict, list]:
         """Links → hygiene → seen-set anti-join → ONE O(wave) MoR frontier
         commit, then compaction on cadence or a Bloom update. The one way
         rows enter an existing frontier: discovered links of a wave, live
@@ -599,10 +567,11 @@ class CrawlEngine:
         consumed row (allowed ∪ robots-denied), so denied rows can never win
         a later selection; None (ingestion) consumes nothing, and then a
         commit with no new row publishes nothing (version None, no sidecar
-        write). Returns (frontier version, link counters, inserted rows,
-        their count Observation); hand the last two to ``_links_new``."""
+        write). Returns (frontier version, link counters with
+        ``links_new``, per-salt-bucket lineage rows (A5/A6): the non-zero
+        buckets, with bucket lineage on)."""
         spark = self.spark
-        obs_links = Observation()
+        obs_links, obs_insert = Observation(), Observation()
         # J1/J5 seen-set membership. With use_bloom the frontier is only
         # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
         # without, the exact anti-join (right side = frontier) is cheaper
@@ -615,19 +584,12 @@ class CrawlEngine:
             hashed, self.lake.frontier.read_keys(spark), spark,
             blooms=self._bloom_rows if self.use_bloom else None,
         )
-        insert_rows = self._frontier_rows(new_links, wave)
-        obs_insert = None
-        if self.bucket_lineage:
-            # cached: bucket counts reuse it; links_new derived from them
-            insert_rows = insert_rows.cache()
-        else:
-            # no cache → the count rides the write action as an observation
-            # (mixing observe() with cache() is unreliable: the metrics
-            # node can end up inside the InMemoryRelation and never fire)
-            obs_insert = Observation()
-            insert_rows = insert_rows.observe(
-                obs_insert, F.count(F.lit(1)).alias("links_new")
-            )
+        # links_new per salt bucket rides the insert write as an Observation
+        buckets = [f"bucket:{b}" for b in range(config.HOST_SALT_BUCKETS)]
+        insert_rows = self._frontier_rows(new_links, wave).observe(obs_insert, *[
+            F.count(F.when(F.col("host_salt") == b, 1)).alias(name)
+            for b, name in enumerate(buckets)
+        ])
 
         # O(wave) MoR commit (north_rule checkpoint/lineage): the increments
         # are the wave's inserts + (url_hash, wave) visited-flips for every
@@ -637,8 +599,7 @@ class CrawlEngine:
         flips = None if selected is None else (
             selected.select("url_hash").withColumn("wave", F.lit(wave).cast("int")))
         frontier_version = self.lake.frontier.commit_wave(
-            inserts=insert_rows, flips=flips, meta={**meta, "adds_hashes": True},
-        )
+            inserts=insert_rows, flips=flips, meta=meta)
         if frontier_version is None:
             pass  # nothing new: no version, no sidecar write
         elif (
@@ -647,35 +608,25 @@ class CrawlEngine:
         ):
             # an ingest carries no wave: its compaction must not mark the
             # wave it precedes committed (last_committed_wave)
-            self.lake.frontier.compact(spark, meta={**meta, "adds_hashes": False})
-            self._frontier_cur = self.lake.frontier.read(spark)
+            self.lake.frontier.compact(spark, meta=meta)
             # compaction scans the full key set anyway — the moment to
             # re-derive (m, k) from actual counts instead of OR-merging
             # into possibly-saturated fixed-size blooms
             self._bloom_rebuild()
         else:
-            self._frontier_cur = self.lake.frontier.read(spark)
             self._bloom_update(self.lake.frontier.read_inserts(
                 spark, frontier_version, cols=("host_salt", "url_hash")))
         link_stats = _obs_get(
             obs_links,
             {"links_seen": 0, **{f"drop_{r}": 0 for r in DROP_REASONS}},
         )
-        return frontier_version, link_stats, insert_rows, obs_insert
-
-    def _links_new(self, insert_rows: DataFrame, obs_insert: Observation | None,
-                   wave: int) -> tuple[int, list]:
-        """links_new and the per-salt-bucket lineage rows (A5/A6) of one
-        ``_commit_links``: one tiny aggregate over the cached inserts with
-        bucket lineage, else the write's Observation."""
-        if obs_insert is not None:
-            return int(_obs_get(obs_insert, {"links_new": 0})["links_new"]), []
+        per_bucket = _obs_get(obs_insert, dict.fromkeys(buckets, 0))
+        link_stats["links_new"] = sum(int(v) for v in per_bucket.values())
         bucket_rows = [
-            (wave, f"bucket:{r['host_salt']}", "links_new", r["count"])
-            for r in insert_rows.groupBy("host_salt").count().collect()
+            (wave, b, "links_new", int(per_bucket[b]))
+            for b in buckets if self.bucket_lineage and per_bucket[b]
         ]
-        insert_rows.unpersist()
-        return sum(v for *_, v in bucket_rows), bucket_rows
+        return frontier_version, link_stats, bucket_rows
 
     def _write_metrics(self, rows, method: str, meta: dict) -> None:
         """(wave, scope, metric, value) rows → wave_metrics. Metrics are
@@ -692,6 +643,7 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------- one wave
+    @_atomic
     def run_wave(self, wave: int) -> dict:
         t0 = time.time()
         tmarks = {}
@@ -763,13 +715,13 @@ class CrawlEngine:
                 .unionByName(tree_of(guarded, "raw"))
             )
         # ACTION 4 (two O(wave) writes)
-        frontier_version, link_stats, insert_rows, obs_insert = self._commit_links(
+        frontier_version, link_stats, bucket_rows = self._commit_links(
             web_links, selected, wave, meta={"wave": wave}
         )
         mark("t_frontier")
 
-        # ---- metrics + per-bucket lineage (A5/A6) — cached, so cheap
-        links_new, bucket_rows = self._links_new(insert_rows, obs_insert, wave)
+        # ---- metrics + per-bucket lineage (A5/A6), all from Observations
+        links_new = link_stats["links_new"]
         drop_rows = [
             (wave, f"drop:{r}", "links_dropped", int(link_stats[f"drop_{r}"]))
             for r in DROP_REASONS
@@ -806,6 +758,7 @@ class CrawlEngine:
         }
 
     # ------------------------------------------------- fast-extension pass
+    @_atomic
     def run_fast_extension_pass(self, wave: int, size: int = 50_000) -> dict:
         """X7/X8 (reference run_fast_extension_pass :4596-4768 +
         fast_extension_crawler :4770-4902): a wave whose selector takes the
@@ -845,20 +798,11 @@ class CrawlEngine:
             consistent=F.count(F.when(F.col("ext_consistent"), 1)),
         )
         links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
-        _, _, insert_rows, obs_insert = self._commit_links(links, selected, wave, meta=meta)
-        links_new, _ = self._links_new(insert_rows, obs_insert, wave)
-        self._write_metrics(
-            [
-                (wave, "fast_pass", m, v)
-                for m, v in (
-                    ("urls_selected", urls_selected),
-                    ("urls_fetched", int(stats["fetched_ok"])),
-                    ("ext_consistent", int(stats["consistent"])),
-                    ("links_new", links_new),
-                )
-            ],
-            "fast_extension", meta=meta,
-        )
+        links_new = self._commit_links(links, selected, wave, meta=meta)[1]["links_new"]
+        counts = {"urls_selected": urls_selected, "urls_fetched": int(stats["fetched_ok"]),
+                  "ext_consistent": int(stats["consistent"]), "links_new": links_new}
+        self._write_metrics([(wave, "fast_pass", m, v) for m, v in counts.items()],
+                            "fast_extension", meta=meta)
         selected.unpersist()
         fetched.unpersist()
         return {
@@ -868,6 +812,7 @@ class CrawlEngine:
         }
 
     # ------------------------------------------------------ cleanup pass
+    @_atomic
     def run_cleanup_pass(self, wave: int, **flags) -> dict:
         """M1 between waves (reference cleanup_elasticsearch_indexes,
         playwrightcrawler.py:3557-3730): apply the enabled delete rules to
@@ -881,13 +826,9 @@ class CrawlEngine:
         counts = {r["drop_reason"]: int(r["deleted"]) for r in stats.collect()}
         deleted = sum(counts.values())
         if deleted:
-            # a cleanup shrinks the frontier: the sidecar becomes a
-            # superset (extra FPs only — exactness holds via the confirm
-            # join), so no rebuild is required
-            self.lake.frontier.write(
-                kept.select(*FRONTIER_COLS), meta={"op": "cleanup", "adds_hashes": False}
-            )
-            self._frontier_cur = self.lake.frontier.read(self.spark)
+            self.lake.frontier.write(kept.select(*FRONTIER_COLS), meta={"op": "cleanup"})
+            # a new base, so a sidecar stamped with it, as after compaction
+            self._bloom_rebuild()
             self._write_metrics(
                 [(wave, f"cleanup:{rule}", "deleted", v) for rule, v in counts.items()],
                 "cleanup", meta={"op": "cleanup"},
@@ -1042,10 +983,11 @@ class CrawlEngine:
         out = []
         for w in range(start, start + waves):
             if seed_folder:
-                # S5 continuous ingestion (reference process_input_url_files)
+                # S5 continuous ingestion (reference process_input_url_files):
+                # each file once per engine, as Spark's file stream source
                 from playwrightcrawler_spark.sources import seeds as seedsrc
 
-                seedsrc.ingest_seeds(self, seed_folder)
+                seedsrc.ingest_seeds(self, seed_folder, self._seed_files)
             m = self.run_wave(w)
             out.append(m)
             if m.get("done"):

@@ -25,15 +25,25 @@ def seed_lines(lines: DataFrame) -> DataFrame:
     )
 
 
-def read_seed_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """One URL per line (``seed_lines``), duplicates collapsed."""
+def read_seed_folder(spark: SparkSession, folder: str | list[str]) -> DataFrame:
+    """One URL per line (``seed_lines``) of a folder or a list of files,
+    duplicates collapsed."""
     return seed_lines(spark.read.text(folder)).dropDuplicates(["url"])
 
 
-def ingest_seeds(engine, folder: str) -> int:
+def ingest_seeds(engine, folder: str, ingested: set[str]) -> int:
     """Folder → frontier via ``engine.ingest``, fully distributed: the seed
     DataFrame takes the wave's link hygiene and is anti-joined against the live
     frontier (never collected to the driver, never overwriting the
     frontier — reference process_input_url_files runs DURING a crawl).
+    Reads only the files whose paths are not in ``ingested`` — the rule of
+    Spark's file stream source — and adds them once their ingest commits;
+    with no new file no Spark job runs. Re-reading a file is harmless (the
+    anti-join keeps it idempotent), so the set need not survive a restart.
     Returns the number of NEW frontier rows."""
-    return engine.ingest(read_seed_folder(engine.spark, folder))
+    files = [f for f in engine.spark.read.text(folder).inputFiles() if f not in ingested]
+    if not files:
+        return 0
+    added = engine.ingest(read_seed_folder(engine.spark, files))
+    ingested.update(files)
+    return added

@@ -8,10 +8,14 @@ backup/restore (S8) and wave checkpointing. No Iceberg runtime ships in
 this sandbox, so this module provides the same *semantics* over bare
 parquet:
 
-- every write creates ``snapshots/v{N}`` + updates ``manifest.json``
-  atomically (rename), so a killed job never corrupts the table;
+- ONE ``manifest.json`` per warehouse holds every table's ``schemas`` and
+  ``versions`` (``Manifest``). An engine operation is one
+  ``Lakehouse.transaction()`` whose table commits publish together in one
+  atomic rename (Iceberg's snapshot commit, spanning tables), so a kill
+  anywhere leaves the last whole operation. A killed operation's version
+  numbers are reused: a table empties a version's directory first;
 - ``read(version=...)`` is time travel; ``latest_version`` is the resume
-  point (test: kill between waves → relaunch → identical tables);
+  point (test: kill anywhere → relaunch → identical tables);
 - reads are planned from the manifest, as Iceberg plans scans from table
   metadata. ``manifest.json`` holds every distinct read schema once
   (version entries name theirs by index, a merge-on-read table keeps a
@@ -41,7 +45,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+from contextlib import contextmanager
 from functools import reduce
 from pathlib import Path
 from urllib.parse import unquote
@@ -71,6 +77,64 @@ def _partition_value(raw: str) -> str | None:
     return None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
 
 
+class Manifest:
+    """The catalog's one commit point: ``manifest.json`` mapping each table
+    name to its section, ``{"schemas": [...], "versions": [...]}``.
+
+    Tables read and commit their section of the in-memory copy. Commits
+    inside ``transaction()`` are visible to this process at once and
+    reach disk together, in one rename, when the outermost transaction
+    exits; an exception inside discards them all and reloads the file.
+    The transaction holds a lock, so operations on one catalog from
+    several threads (a streaming ingest and a wave) commit one after the
+    other. Outside a transaction a read first reloads the file if another
+    writer replaced it."""
+
+    def __init__(self, path: Path):
+        self.path = path
+        self._lock = threading.RLock()
+        self._depth = 0
+        self._load()
+
+    def _stat(self) -> tuple | None:
+        """Identifies the file's content: every publish is a new file."""
+        try:
+            st = os.stat(self.path)
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
+    def _load(self) -> None:
+        """Read the file, dropping commits not yet published."""
+        self._stamp, self.tables, self.pending = self._stat(), {}, False
+        if self._stamp:
+            self.tables = json.loads(self.path.read_text())["tables"]
+
+    def section(self, name: str) -> dict:
+        if not self._depth and self._stat() != self._stamp:
+            self._load()
+        return self.tables.get(name) or {"schemas": [], "versions": []}
+
+    @contextmanager
+    def transaction(self):
+        with self._lock:
+            if not self._depth and self._stat() != self._stamp:
+                self._load()
+            self._depth += 1
+            try:
+                yield
+                if self._depth == 1 and self.pending:
+                    tmp = self.path.with_suffix(".tmp")
+                    tmp.write_text(json.dumps({"tables": self.tables}, indent=1))
+                    os.replace(tmp, self.path)  # atomic commit point
+                    self._stamp, self.pending = self._stat(), False
+            except BaseException:
+                self._load()
+                raise
+            finally:
+                self._depth -= 1
+
+
 class SnapshotTable:
     """kind='full': every snapshot is the whole table (frontier — the
     Iceberg copy-on-write analogue). kind='delta': every snapshot is an
@@ -78,7 +142,7 @@ class SnapshotTable:
     fast-append analogue); append cost is O(wave), not O(table)."""
 
     def __init__(self, root: str, name: str, kind: str = "full",
-                 partition_by: list[str] | None = None):
+                 partition_by: list[str] | None = None, manifest: Manifest | None = None):
         self.dir = Path(root) / name
         self.name = name
         self.kind = kind
@@ -88,39 +152,44 @@ class SnapshotTable:
         # a filter on them prunes whole relations (see read)
         self.partition_by = partition_by or []
         self.dir.mkdir(parents=True, exist_ok=True)
+        # a table built on its own is a one-table catalog in its directory
+        self.manifest = manifest or Manifest(self.dir / "manifest.json")
 
     # -- manifest -----------------------------------------------------------
     @property
-    def _manifest_path(self) -> Path:
-        return self.dir / "manifest.json"
+    def _m(self) -> dict:
+        """This table's manifest section: ``schemas`` and ``versions``."""
+        return self.manifest.section(self.name)
 
-    def _read_manifest(self) -> dict:
-        if not self._manifest_path.exists():
-            return {"schemas": [], "versions": []}
-        return json.loads(self._manifest_path.read_text())
+    def _new_version(self) -> tuple[int, str]:
+        """The next version and its directory, emptied of whatever a killed
+        operation left there (its number is reused)."""
+        v = (self.latest_version or 0) + 1
+        shutil.rmtree(self._snap_dir(v), ignore_errors=True)
+        return v, self._snap_dir(v)
 
     def _commit(self, version: int, meta: dict | None = None, **schemas: StructType) -> None:
-        """Publish ``version``. Its entry names each of its schemas (``schema``
-        for the data, ``flips_schema`` for MoR flips) by index into the
-        manifest's ``schemas`` list, which holds every distinct schema once;
-        a partitioned snapshot also lists its partition directories."""
-        m = self._read_manifest()
-        entry = {"version": version, "committed_at": time.time(), **(meta or {})}
-        for key, schema in schemas.items():
-            js = schema.jsonValue()
-            if js not in m["schemas"]:
-                m["schemas"].append(js)
-            entry[key] = m["schemas"].index(js)
-        if self.partition_by:
-            root = Path(self._snap_dir(version))
-            entry["partitions"] = sorted(
-                p.relative_to(root).as_posix()
-                for p in root.glob("/".join(f"{c}=*" for c in self.partition_by))
-            )
-        m["versions"].append(entry)
-        tmp = self._manifest_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(m, indent=1))
-        os.replace(tmp, self._manifest_path)  # atomic commit point
+        """Commit ``version`` (published with the enclosing transaction).
+        Its entry names each of its schemas (``schema`` for the data,
+        ``flips_schema`` for MoR flips) by index into the section's
+        ``schemas`` list, which holds every distinct schema once; a
+        partitioned snapshot also lists its partition directories."""
+        with self.manifest.transaction():
+            m = self.manifest.tables.setdefault(self.name, {"schemas": [], "versions": []})
+            entry = {"version": version, "committed_at": time.time(), **(meta or {})}
+            for key, schema in schemas.items():
+                js = schema.jsonValue()
+                if js not in m["schemas"]:
+                    m["schemas"].append(js)
+                entry[key] = m["schemas"].index(js)
+            if self.partition_by:
+                root = Path(self._snap_dir(version))
+                entry["partitions"] = sorted(
+                    p.relative_to(root).as_posix()
+                    for p in root.glob("/".join(f"{c}=*" for c in self.partition_by))
+                )
+            m["versions"].append(entry)
+            self.manifest.pending = True
 
     @staticmethod
     def _schema(m: dict, upto: int | None = None, key: str = "schema") -> StructType | None:
@@ -151,11 +220,11 @@ class SnapshotTable:
 
     @property
     def latest_version(self) -> int | None:
-        v = self._read_manifest()["versions"]
+        v = self._m["versions"]
         return v[-1]["version"] if v else None
 
     def versions(self) -> list[dict]:
-        return self._read_manifest()["versions"]
+        return list(self._m["versions"])
 
     def exists(self) -> bool:
         return self.latest_version is not None
@@ -165,7 +234,7 @@ class SnapshotTable:
 
     # -- IO -------------------------------------------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        m = self._read_manifest()
+        m = self._m
         snaps = [e for e in m["versions"] if version is None or e["version"] <= version]
         if not snaps:
             raise FileNotFoundError(f"table {self.name} has no snapshots")
@@ -197,22 +266,22 @@ class SnapshotTable:
     def write(self, df: DataFrame, meta: dict | None = None) -> int:
         """Full-table snapshot write (Iceberg: overwritePartitions); on a
         delta table, one increment."""
-        v = (self.latest_version or 0) + 1
         schema = _read_schema(df.schema, self.partition_by)
         if self.kind == "delta":
-            self._check_drift(self._read_manifest(), schema)
+            self._check_drift(self._m, schema)
+        v, d = self._new_version()
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self._snap_dir(v))
+        writer.parquet(d)
         self._commit(v, meta, schema=schema)
         return v
 
     def append(self, spark: SparkSession, df: DataFrame, meta: dict | None = None) -> int:
-        """delta tables: write just the increment. full tables: previous
-        snapshot ∪ new rows (old snapshots stay immutable either way)."""
-        if self.kind != "delta" and self.exists():
-            df = self.read(spark).unionByName(df, allowMissingColumns=True)
+        """Append ``df`` to a delta table as one increment (old snapshots
+        stay immutable). Other kinds refuse: their write is a new base."""
+        if self.kind != "delta":
+            raise TypeError(f"table {self.name}: only delta tables append")
         return self.write(df, meta)
 
     def write_rows(self, rows: list[dict], schema, meta: dict | None = None) -> int:
@@ -228,18 +297,13 @@ class SnapshotTable:
         # reads back as timestamp_ntz
         read_schema = from_arrow_schema(schema, prefer_timestamp_ntz=True).toNullable()
         if self.kind == "delta":
-            self._check_drift(self._read_manifest(), read_schema)
-        v = (self.latest_version or 0) + 1
-        d = Path(self._snap_dir(v))
-        d.mkdir(parents=True, exist_ok=True)
+            self._check_drift(self._m, read_schema)
+        v, d = self._new_version()
+        Path(d).mkdir(parents=True, exist_ok=True)
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
-        pq.write_table(pa.table(cols, schema=schema), d / "part-00000.parquet")
+        pq.write_table(pa.table(cols, schema=schema), f"{d}/part-00000.parquet")
         self._commit(v, meta, schema=read_schema)
         return v
-
-    def truncate(self) -> None:
-        shutil.rmtree(self.dir, ignore_errors=True)
-        self.dir.mkdir(parents=True, exist_ok=True)
 
 
 class MorTable(SnapshotTable):
@@ -267,17 +331,14 @@ class MorTable(SnapshotTable):
     # positional deletes). Tests/engines may override per instance.
     FLIP_BROADCAST_ROWS = 5_000_000
 
-    def __init__(self, root: str, name: str):
-        super().__init__(root, name, kind="mor")
-
-    def _is_base(self, entry: dict) -> bool:
-        return bool(entry.get("base"))
+    def __init__(self, root: str, name: str, manifest: Manifest | None = None):
+        super().__init__(root, name, kind="mor", manifest=manifest)
 
     # -- commits --------------------------------------------------------------
     def write(self, df: DataFrame, meta: dict | None = None) -> int:
         """Full base snapshot (bootstrap / compaction)."""
-        v = (self.latest_version or 0) + 1
-        df.write.mode("overwrite").parquet(self._snap_dir(v))
+        v, d = self._new_version()
+        df.write.mode("overwrite").parquet(d)
         self._commit(v, {**(meta or {}), "base": True}, schema=_read_schema(df.schema))
         return v
 
@@ -287,15 +348,14 @@ class MorTable(SnapshotTable):
         flips: DataFrame | None,
         meta: dict | None = None,
     ) -> int:
-        """One atomic O(wave) commit: write increment files, then the
-        manifest rename publishes both (a kill mid-write leaves an
-        unreferenced directory, never a corrupt table). Inserts must carry
+        """One O(wave) commit: write increment files, then commit one
+        manifest entry for both (a kill before the enclosing transaction
+        publishes leaves an unreferenced directory, never a corrupt
+        table). Inserts must carry
         the schema in force, flips the recorded flips schema. With no flips
         and inserts holding no rows (read from the file footers) nothing is
         published and the result is None."""
-        m = self._read_manifest()
-        v = (self.latest_version or 0) + 1
-        d = self._snap_dir(v)
+        m = self._m
         schemas = {}
         if inserts is not None:
             schemas["schema"] = _read_schema(inserts.schema)
@@ -304,6 +364,7 @@ class MorTable(SnapshotTable):
             flips = flips.select(*self.FLIP_COLS)
             schemas["flips_schema"] = _read_schema(flips.schema)
             self._check_drift(m, schemas["flips_schema"], key="flips_schema")
+        v, d = self._new_version()
         if inserts is not None:
             inserts.write.mode("overwrite").parquet(f"{d}/inserts")
             if flips is None and not _dir_rows(Path(d) / "inserts"):
@@ -314,37 +375,33 @@ class MorTable(SnapshotTable):
         self._commit(v, {**(meta or {}), "base": False}, **schemas)
         return v
 
-    def append(self, spark: SparkSession, df: DataFrame, meta: dict | None = None) -> int:
-        """Insert-only increment; None when ``df`` is empty."""
-        return self.commit_wave(inserts=df, flips=None, meta=meta)
-
     # -- reconstruction ---------------------------------------------------------
-    def _since_base(self, m: dict, version: int | None) -> tuple[int, list[int]]:
-        """(base version, delta versions after it) of the table at
-        ``version`` (default: the latest)."""
-        entries = [e for e in m["versions"] if version is None or e["version"] <= version]
-        if not entries:
-            raise FileNotFoundError(f"table {self.name} has no snapshots")
-        base_vs = [e["version"] for e in entries if self._is_base(e)]
-        if not base_vs:
-            raise FileNotFoundError(
-                f"table {self.name} has no base snapshot <= v{entries[-1]['version']}")
-        base_v = max(base_vs)
-        return base_v, [e["version"] for e in entries if e["version"] > base_v]
+    def _since_base(self, version: int | None = None) -> tuple[int | None, list[int]]:
+        """(last base version or None, the versions after it) of the table
+        at ``version`` (default: the latest)."""
+        entries = [e for e in self._m["versions"] if version is None or e["version"] <= version]
+        base = max((e["version"] for e in entries if e.get("base")), default=None)
+        return base, [e["version"] for e in entries if base is None or e["version"] > base]
+
+    def _base_dir(self, version: int | None) -> str:
+        base, _ = self._since_base(version)
+        if base is None:
+            raise FileNotFoundError(f"table {self.name} has no base snapshot")
+        return self._snap_dir(base)
+
+    def _delta_dirs(self, version: int | None, sub: str) -> list[str]:
+        """The ``sub`` directories (inserts or flips) of the deltas after
+        the last base, up to ``version``."""
+        dirs = (f"{self._snap_dir(v)}/{sub}" for v in self._since_base(version)[1])
+        return [d for d in dirs if Path(d).exists()]
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        m = self._read_manifest()
-        base_v, delta_vs = self._since_base(m, version)
+        m = self._m
         schema = self._schema(m, upto=version)
 
-        rows = spark.read.schema(schema).parquet(self._snap_dir(base_v))
-        insert_dirs, flip_dirs = [], []
-        for dv in delta_vs:
-            d = Path(self._snap_dir(dv))
-            if (d / "inserts").exists():
-                insert_dirs.append(str(d / "inserts"))
-            if (d / "flips").exists():
-                flip_dirs.append(str(d / "flips"))
+        rows = spark.read.schema(schema).parquet(self._base_dir(version))
+        insert_dirs = self._delta_dirs(version, "inserts")
+        flip_dirs = self._delta_dirs(version, "flips")
         if insert_dirs:
             rows = rows.unionByName(spark.read.schema(schema).parquet(*insert_dirs))
         if flip_dirs:
@@ -385,42 +442,27 @@ class MorTable(SnapshotTable):
         use. At 10^10 rows that removes one whole join from every wave's
         dedup path (on Iceberg: a data-file scan that skips the positional
         delete merge)."""
-        m = self._read_manifest()
-        base_v, delta_vs = self._since_base(m, version)
-        dirs = [self._snap_dir(base_v)] + [
-            d for d in (f"{self._snap_dir(dv)}/inserts" for dv in delta_vs)
-            if Path(d).exists()
-        ]
-        return spark.read.schema(self._schema(m, upto=version)).parquet(*dirs).select(*cols)
+        dirs = [self._base_dir(version), *self._delta_dirs(version, "inserts")]
+        return spark.read.schema(self._schema(self._m, upto=version)).parquet(*dirs).select(*cols)
 
     def read_inserts(self, spark: SparkSession, version: int,
                      cols: tuple[str, ...]) -> DataFrame:
         """The rows delta ``version`` inserted, read back from its files
         with the schema in force at that version."""
-        schema = self._schema(self._read_manifest(), upto=version)
+        schema = self._schema(self._m, upto=version)
         return spark.read.schema(schema).parquet(
             f"{self._snap_dir(version)}/inserts").select(*cols)
 
     def deltas_since_base(self) -> int:
-        entries = self.versions()
-        base_vs = [e["version"] for e in entries if self._is_base(e)]
-        if not base_vs:
-            return len(entries)
-        return len([e for e in entries if e["version"] > max(base_vs)])
+        return len(self._since_base()[1])
 
     def _footer_rows(self, sub: str, upto: int | None, with_base: bool = False) -> int:
         """Rows of the ``sub`` increments after the last base (and of the
         base itself with ``with_base``) up to version ``upto``, summed from
         parquet footers: driver-side metadata reads, no Spark job, exact
         whoever committed them."""
-        entries = [e for e in self.versions()
-                   if upto is None or e["version"] <= upto]
-        base_vs = [e["version"] for e in entries if self._is_base(e)]
-        base_v = max(base_vs) if base_vs else -1
-        dirs = [Path(self._snap_dir(base_v))] if with_base and base_vs else []
-        dirs += [Path(self._snap_dir(e["version"])) / sub
-                 for e in entries if e["version"] > base_v]
-        return sum(_dir_rows(d) for d in dirs)
+        dirs = ([self._base_dir(upto)] if with_base else []) + self._delta_dirs(upto, sub)
+        return sum(_dir_rows(Path(d)) for d in dirs)
 
     def flip_rows_since_base(self, upto: int | None = None) -> int:
         """Cumulative flip rows in deltas after the last base — the size of
@@ -440,7 +482,7 @@ class MorTable(SnapshotTable):
 class Lakehouse:
     """The engine's table set rooted at one directory (FIXTURES.md A3-A6)."""
 
-    TABLES = ("frontier", "crawled", "wave_metrics", "robots_rules", "seen_bloom")
+    TABLES = ("frontier", "crawled", "wave_metrics", "seen_bloom")
     _KINDS = {"crawled": "delta", "wave_metrics": "delta"}
 
     # crawled rows route into month partitions (S3 monthly-index parity)
@@ -448,14 +490,21 @@ class Lakehouse:
 
     def __init__(self, root: str):
         self.root = root
+        Path(root).mkdir(parents=True, exist_ok=True)
+        self.manifest = Manifest(Path(root) / "manifest.json")
         for t in self.TABLES:
             if t == "frontier":
-                setattr(self, t, MorTable(root, t))
+                setattr(self, t, MorTable(root, t, manifest=self.manifest))
             else:
                 setattr(self, t, SnapshotTable(
                     root, t, kind=self._KINDS.get(t, "full"),
-                    partition_by=self._PARTITIONS.get(t),
+                    partition_by=self._PARTITIONS.get(t), manifest=self.manifest,
                 ))
+
+    def transaction(self):
+        """Context manager: every table commit inside publishes together
+        (``Manifest.transaction``); a nested call joins the outer one."""
+        return self.manifest.transaction()
 
     def describe(self) -> dict:
         return {

@@ -266,10 +266,9 @@ def test_seed_ingest_merges_into_live_frontier(spark, pages_dir, tmp_path_factor
 
 
 def test_ingest_of_known_seeds_publishes_nothing(spark, pages_dir, tmp_path_factory):
-    """The seed folder is re-read every wave: an ingest that finds no new
-    URL must publish no frontier version and write no Bloom sidecar, or
-    every wave would add an empty delta and halve the compaction
-    interval."""
+    """An ingest that finds no new URL must publish no frontier version
+    and write no Bloom sidecar, or every such ingest would add an empty
+    delta and shorten the compaction interval."""
     wh = tmp_path_factory.mktemp("wh_ingest_known")
     eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=50,
                       method_weights={"oldest": 1}, use_bloom=True,
@@ -311,50 +310,58 @@ def test_bloom_crawl_identical_to_exact(spark, pages_dir, tmp_path_factory):
 def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_factory):
     """Round-2 advice: (a) enabling use_bloom mid-life on a warehouse with
     no sidecar rebuilds it from the FULL frontier, not just the next wave's
-    inserts; (b) a frontier insert commit with no matching sidecar write
-    (kill between the two separate commits) is detected via the recorded
-    frontier version and triggers a rebuild — no frontier hash may ever be
-    invisible to the Bloom (exactness contract)."""
+    inserts; (b) a frontier commit with no sidecar stamped with its version
+    (made outside a Bloom engine) triggers a rebuild — no frontier hash may
+    ever be invisible to the Bloom (exactness contract); (c) a Bloom engine
+    stamps a sidecar after each of its frontier commits, so after waves, a
+    fast pass and a cleanup a restarted engine loads it without
+    rebuilding."""
     from playwrightcrawler_spark.operators import seen
 
+    kw = dict(wave_size=100, per_host_quota=2, method_weights={"oldest": 1})
+    bloom = dict(kw, use_bloom=True, bloom_items_per_bucket=1000)
     wh = tmp_path_factory.mktemp("wh_bloom_life")
-    eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,
-                      method_weights={"oldest": 1})          # bloom OFF
+    eng = CrawlEngine(spark, pages_dir, str(wh), **kw)          # bloom OFF
     eng.run(2, seed_urls=pages_gen.seed_urls())
 
     # (a) flag enabled mid-life: sidecar missing → rebuilt from full frontier
-    eng2 = CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,
-                       method_weights={"oldest": 1}, use_bloom=True,
-                       bloom_items_per_bucket=1000)
+    eng2 = CrawlEngine(spark, pages_dir, str(wh), **bloom)
     assert eng2._bloom_rows, "sidecar not rebuilt on enable"
     cover = eng2.lake.frontier.read(spark).withColumn(
         "m", seen.maybe_seen_col(spark, eng2._bloom_rows))
     assert cover.filter(~F.col("m")).count() == 0            # zero false negatives
 
-    # (b) simulate the kill: inserts committed, sidecar write never ran
+    # (b) a frontier commit no sidecar covers: rebuilt on the next start
     extra = eng2._frontier_rows(
         eng2._hashed_links(eng2._seed_links(["https://tail009.example.io/fresh.html"])),
         wave=99,
     )
-    eng2.lake.frontier.commit_wave(inserts=extra, flips=None,
-                                   meta={"wave": 99, "adds_hashes": True})
-    eng3 = CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,
-                       method_weights={"oldest": 1}, use_bloom=True,
-                       bloom_items_per_bucket=1000)
+    v = eng2.lake.frontier.commit_wave(inserts=extra, flips=None, meta={"wave": 99})
+    eng3 = CrawlEngine(spark, pages_dir, str(wh), **bloom)
+    side = eng3.lake.seen_bloom.versions()[-1]
+    assert (side["op"], side["frontier_version"]) == ("rebuild", v)
     cover3 = eng3.lake.frontier.read(spark).withColumn(
         "m", seen.maybe_seen_col(spark, eng3._bloom_rows))
     assert cover3.filter(~F.col("m")).count() == 0
-    # flip-only commits (fast pass) add no hashes → NO needless rebuild
-    v_before = eng3.lake.seen_bloom.latest_version
-    eng3.lake.frontier.commit_wave(
-        inserts=None,
-        flips=extra.select("url_hash").withColumn("wave", F.lit(100).cast("int")),
-        meta={"wave": 100, "adds_hashes": False},
+
+    # (c) waves, a fast pass and a cleanup (which deletes an injected
+    # trap row and so writes a new base): the sidecar stays in step
+    wh2 = str(tmp_path_factory.mktemp("wh_bloom_stamped"))
+    eng4 = CrawlEngine(spark, pages_dir, wh2, **bloom)
+    eng4.run(2, seed_urls=pages_gen.seed_urls(), fast_pass_every=1)
+    trap = spark.createDataFrame(
+        [("https://trap.example.net/a/b/a/b/a/b/x", -4242, "trap.example.net",
+          1, 1, 0.5, False, None, 2)],
+        "url string, url_hash long, host string, host_salt int, depth int,"
+        " score double, visited boolean, discovered_at timestamp, wave int",
     )
-    eng4 = CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,
-                       method_weights={"oldest": 1}, use_bloom=True,
-                       bloom_items_per_bucket=1000)
-    assert eng4.lake.seen_bloom.latest_version == v_before
+    eng4.lake.frontier.commit_wave(inserts=trap, flips=None)
+    assert eng4.run_cleanup_pass(wave=2, remove_repeated=True)["deleted"] == 1
+    eng4.run(1)
+    side_v = eng4.lake.seen_bloom.latest_version
+    eng5 = CrawlEngine(spark, pages_dir, wh2, **bloom)
+    assert eng5._bloom_rows
+    assert eng5.lake.seen_bloom.latest_version == side_v
 
 
 def test_bloom_resize_on_compaction(spark, pages_dir, tmp_path_factory):
@@ -492,6 +499,39 @@ def test_run_orchestrates_maintenance_phases(spark, pages_dir, tmp_path_factory,
     assert m3["urls_selected"] >= 0
 
 
+def test_seed_folder_files_are_ingested_once(spark, pages_dir, tmp_path):
+    """``run(seed_folder=...)`` reads each file of the folder once per
+    engine, as Spark's file stream source does: after one wave, an
+    unchanged folder costs no ingest and no Spark job, and a file added
+    between waves is ingested on its own. Every wave used to re-read the
+    whole folder and run the link stage over it."""
+    from playwrightcrawler_spark.sources import seeds
+
+    folder = tmp_path / "seed_folder"
+    folder.mkdir()
+    (folder / "a.txt").write_text("https://tail007.example.io/p2.html\n")
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=50,
+                      method_weights={"oldest": 1}, hunt_open_directories=False)
+    eng.run(1, seed_urls=pages_gen.seed_urls(), seed_folder=str(folder))
+
+    sc = spark.sparkContext
+    group = f"seed-folder-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        assert seeds.ingest_seeds(eng, str(folder), eng._seed_files) == 0
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    (folder / "b.txt").write_text("https://tail005.example.io/p1.html\n")
+    read, ingest = [], eng.ingest
+    eng.ingest = lambda urls: read.append(urls.inputFiles()) or ingest(urls)
+    eng.run(2, seed_folder=str(folder))
+    assert [[Path(f).name for f in files] for files in read] == [["b.txt"]]
+    urls = {r.url for r in eng.lake.frontier.read(spark).select("url").collect()}
+    assert {"https://tail007.example.io/p2.html", "https://tail005.example.io/p1.html"} <= urls
+
+
 def test_cleanup_pass_deletes_and_counts(spark, pages_dir, tmp_path_factory):
     """M1: a frontier row violating an enabled rule is deleted and counted;
     rule disabled → untouched."""
@@ -506,7 +546,7 @@ def test_cleanup_pass_deletes_and_counts(spark, pages_dir, tmp_path_factory):
         "url string, url_hash long, host string, host_salt int, depth int,"
         " score double, visited boolean, discovered_at timestamp, wave int",
     )
-    eng.lake.frontier.append(spark, bad, meta={"op": "test_inject"})
+    eng.lake.frontier.commit_wave(inserts=bad, flips=None, meta={"op": "test_inject"})
     eng._frontier_cur = None
     before = eng._frontier().count()
     m = eng.run_cleanup_pass(wave=0, remove_repeated=True, remove_invalid=False)
@@ -587,3 +627,97 @@ def test_link_counters_when_every_link_is_known(spark, tmp_path, bucket_lineage)
         "drop:embedded": 6, "drop:too_long": 6,
         "drop:blocked_host": 6, "drop:repeated_segments": 6,
     }
+
+
+class _Killed(Exception):
+    pass
+
+
+_FRESH_SEED = "https://tail005.example.io/p1.html"
+_KILL_ENGINES = {
+    "bloom": dict(use_bloom=True, bloom_items_per_bucket=1000),
+    "bloom_compact": dict(use_bloom=True, bloom_items_per_bucket=1000, compact_every=1),
+}
+
+
+@pytest.fixture(scope="module")
+def kill_refs() -> dict:
+    """Uninterrupted runs' warehouses, by (engine, program), built once."""
+    return {}
+
+
+def _step(eng, step: str) -> None:
+    if step == "wave":
+        assert not eng.run_wave(eng.last_committed_wave() + 1)["done"]
+    else:
+        eng.ingest([_FRESH_SEED])
+
+
+def _kill_engine(spark, pages_dir, wh, engine) -> CrawlEngine:
+    return CrawlEngine(spark, pages_dir, str(wh), wave_size=100, per_host_quota=2,
+                       hunt_open_directories=False, **_KILL_ENGINES[engine])
+
+
+def _warehouse(spark, lake) -> dict:
+    """Each table's rows as sorted strings: crawled with multiplicity, the
+    frontier's state columns, wave_metrics without ``committed_at`` and
+    the Bloom sidecar."""
+    frames = {
+        "crawled": lake.crawled.read(spark),
+        "frontier": lake.frontier.read(spark).select(
+            "url", "url_hash", "host", "depth", "visited", "wave"),
+        "wave_metrics": lake.wave_metrics.read(spark).drop("committed_at"),
+        "seen_bloom": lake.seen_bloom.read(spark),
+    }
+    return {name: sorted(map(str, df.collect())) for name, df in frames.items()}
+
+
+@pytest.mark.parametrize("engine,table,method,step,rest", [
+    ("bloom", "crawled", "append", "wave", ["wave", "wave"]),
+    ("bloom", "frontier", "commit_wave", "wave", ["ingest", "wave", "wave"]),
+    ("bloom_compact", "frontier", "compact", "wave", ["wave", "wave"]),
+    ("bloom", "seen_bloom", "write_rows", "wave", ["wave", "wave"]),
+    ("bloom", "wave_metrics", "write_rows", "wave", ["wave", "wave"]),
+    ("bloom", "frontier", "commit_wave", "ingest", ["ingest", "wave", "wave"]),
+], ids=["crawled_append", "frontier_commit", "compaction", "sidecar", "wave_metrics",
+        "ingest_commit"])
+def test_kill_anywhere_resumes_to_the_same_warehouse(
+        spark, pages_dir, tmp_path, kill_refs, engine, table, method, step, rest):
+    """A kill right after any one commit of an operation — the wave's
+    crawled append, frontier commit, compaction, sidecar write or metrics
+    write, or an ingest's commit — publishes none of that operation's
+    commits, so a fresh engine that finishes the run writes the same
+    warehouse, table by table, as an uninterrupted run. In the
+    frontier-commit case the resumed engine first ingests a new seed into
+    the killed wave's version number, whose directory still holds the
+    killed wave's flips. With one manifest per table, a kill after the
+    crawled append duplicated the wave's crawled rows on resume, and one
+    after the frontier commit lost the wave's metrics."""
+    program = ["wave"] + rest
+    key = (engine, tuple(program))
+    if key not in kill_refs:
+        ref = _kill_engine(spark, pages_dir, tmp_path / "ref", engine)
+        ref.bootstrap(pages_gen.seed_urls())
+        for s in program:
+            _step(ref, s)
+        kill_refs[key] = _warehouse(spark, ref.lake)
+
+    eng = _kill_engine(spark, pages_dir, tmp_path / "wh", engine)
+    eng.bootstrap(pages_gen.seed_urls())
+    _step(eng, "wave")
+    target = getattr(eng.lake, table)
+    commit = getattr(target, method)
+
+    def killed(*a, **kw):
+        commit(*a, **kw)
+        raise _Killed(f"{table}.{method}")
+
+    setattr(target, method, killed)
+    with pytest.raises(_Killed):
+        _step(eng, step)
+    spark.catalog.clearCache()
+
+    resumed = _kill_engine(spark, pages_dir, tmp_path / "wh", engine)
+    for s in rest:
+        _step(resumed, s)
+    assert _warehouse(spark, resumed.lake) == kill_refs[key]

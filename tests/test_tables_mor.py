@@ -323,8 +323,9 @@ def test_delta_append_with_new_column_raises(spark, tmp_path, partition_by):
 
 def test_schema_drift_rules(spark, tmp_path, mor):
     """A type change is drift; nullability alone is not. MoR inserts and
-    flips are held to their recorded schemas. Full-table writes may change
-    the schema, and each version reads with its own."""
+    flips are held to their recorded schemas, and only delta tables
+    append. Full-table writes may change the schema, and each version
+    reads with its own."""
     t = SnapshotTable(str(tmp_path), "log", kind="delta")
     t.append(spark, spark.range(2).select(F.col("id"), F.lit(1).alias("n")))
     t.append(spark, spark.range(1).select(F.col("id"), F.lit(None).cast("int").alias("n")))
@@ -338,9 +339,50 @@ def test_schema_drift_rules(spark, tmp_path, mor):
     with pytest.raises(ValueError, match=r"flips_schema in columns wave \(int -> bigint\)"):
         mor.commit_wave(None, spark.createDataFrame([(2, 2)], "url_hash long, wave long"))
     assert mor.latest_version == 2
+    # appending to a merge-on-read table would write a base of the new rows
+    with pytest.raises(TypeError, match="only delta tables append"):
+        mor.append(spark, _rows(spark, [6]))
 
     full = SnapshotTable(str(tmp_path), "kv")
     full.write(spark.createDataFrame([(1, "a")], "k int, v string"))
     full.write(spark.createDataFrame([(1, 2.0)], "k int, w double"))
     assert _fields(full.read(spark, version=1)) == [("k", "int"), ("v", "string")]
     assert _fields(full.read(spark)) == [("k", "int"), ("w", "double")]
+
+
+def test_transactions_from_threads_commit_one_after_the_other(tmp_path):
+    """Operations on one catalog from several threads (a streaming ingest
+    beside a wave) serialise on the transaction: every commit gets its own
+    version, the two commits of one transaction get adjacent ones, and the
+    published file holds them all. Pure driver-side writes, no Spark job."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(str(tmp_path), "log", kind="delta")
+    schema = pa.schema([("n", pa.int64())])
+
+    def work(i):
+        for _ in range(5):
+            with t.manifest.transaction():
+                t.write_rows([{"n": i}], schema)
+                t.write_rows([{"n": i}], schema)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    versions = [e["version"] for e in t.versions()]
+    assert versions == list(range(1, 81))
+    writer = [pq.read_table(t._snap_dir(v))["n"][0].as_py() for v in versions]
+    assert writer[0::2] == writer[1::2]
+    assert SnapshotTable(str(tmp_path), "log", kind="delta").versions() == t.versions()
