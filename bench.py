@@ -255,6 +255,9 @@ def run_crawl_bench(cpus: int) -> dict:
         "urls_per_sec": round(fetched / elapsed, 2) if elapsed > 0 else 0.0,
         "steal_pct_during": steal_during,
         "load_1m_after": round(os.getloadavg()[0], 2),
+        # per-phase sums of the waves' ``timings``; the crawled and
+        # frontier commits overlap, so the phases add up to more than
+        # ``seconds``
         "phase_seconds": timings,
     }
 

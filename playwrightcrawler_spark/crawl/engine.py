@@ -12,10 +12,11 @@ One wave =
     discover: explode links + open-dir tree expansion (P16) → JVM-side
               hygiene filters with drop accounting (P4-P10, A5)
     dedup   : dropDuplicates + anti-join against the frontier (J1/J2/J5)
-    commit  : crawled delta-append + frontier increments + Bloom sidecar +
-              wave_metrics, published together by one lakehouse
-              transaction per wave (resumable from a kill anywhere —
-              north_rule checkpoint/lineage)
+    commit  : crawled delta-append beside (on a second driver thread)
+              frontier increments + Bloom sidecar, then wave_metrics, all
+              published together by one lakehouse transaction per wave
+              (resumable from a kill anywhere — north_rule
+              checkpoint/lineage)
 
 Scale design:
 - the wave side of every join is <= wave_size rows and broadcast, so the
@@ -23,13 +24,19 @@ Scale design:
 - the wide shuffles are the per-host window (bounded by the candidate
   set) and the frontier rewrite (bucketed by host_salt on Iceberg);
 - five Spark ACTIONS per wave with Bloom and compaction off (selection
-  counts, cache fill, crawled write, frontier inserts and flips writes);
-  a bucketed pages table, the Bloom update and a compaction add one
-  each. Each action runs as one or more Spark JOBS (AQE submits every
-  query stage and broadcast as its own job: 13 jobs per wave on the
+  counts, cache fill, then at once the crawled write on one driver
+  thread and the frontier inserts and flips writes on the other); a
+  bucketed pages table, the Bloom update and a compaction add one each.
+  Each action runs as one or more Spark JOBS (AQE submits every query
+  stage and broadcast as its own job: 13 jobs per wave on the
   benchmark's crawl_extract shape). Table reads and the pages scan add
-  none: they are planned from recorded schemas, not inferred. Counters ride on Observations attached to the
-  write actions instead of separate count() actions;
+  none: they are planned from recorded schemas, not inferred. Counters
+  ride on Observations attached to the write actions instead of
+  separate count() actions;
+- the two commits are chains of small jobs that wait on the driver, with
+  the cores mostly idle, so they overlap (``_commit_wave``): they read
+  only the cached wave frames and write different tables. Waves never
+  overlap: a wave's selection depends on the previous wave's flips;
 - crawled/wave_metrics are fast-append (delta) tables: commit cost is
   O(wave), only the frontier pays a rewrite (Iceberg MoR would make that
   O(wave) too);
@@ -37,10 +44,11 @@ Scale design:
   politeness aggregates on the raw host (SURVEY.md §7 hard part 4).
 
 The stages are named methods (``_robots_step``, ``_fused_fetch_extract``,
-``_append_crawled``/``_build_crawled``, ``_commit_links``), and ``run_wave``
-is one selector followed by them. The fast-extension pass (X7/X8) runs the
-same stages after its own extension-filtered selector, so there is one
-extraction UDF and one crawled/frontier commit sequence.
+``_append_crawled``/``_build_crawled``, ``_commit_links``, both commits run
+by ``_commit_wave``), and ``run_wave`` is one selector followed by them.
+The fast-extension pass (X7/X8) runs the same stages after its own
+extension-filtered selector, so there is one extraction UDF and one
+crawled/frontier commit sequence.
 """
 
 from __future__ import annotations
@@ -628,6 +636,35 @@ class CrawlEngine:
         ]
         return frontier_version, link_stats, bucket_rows
 
+    def _commit_wave(self, fetched: DataFrame, wave_df: DataFrame, selected: DataFrame,
+                     web_links: DataFrame, wave: int, urls_selected: int, meta: dict,
+                     **counters) -> tuple[tuple, tuple, dict]:
+        """A wave's two commits at once, into its one transaction
+        (``Manifest.concurrently``): the crawled append
+        (``_append_crawled``, ``counters`` riding it) on a second driver
+        thread while this thread runs the link → seen-set → frontier
+        commit (``_commit_links``). Waits for both, on success or failure,
+        and re-raises the first failure. Returns (``_append_crawled``'s
+        result, ``_commit_links``'s result, {"t_crawled", "t_frontier"}:
+        each branch's own seconds)."""
+        marks = {"t_crawled": 0.0, "t_frontier": 0.0}
+
+        def timed(label, fn):
+            def run():
+                t = time.time()
+                try:
+                    return fn()
+                finally:
+                    marks[label] = round(time.time() - t, 2)
+            return run
+
+        links, crawled = self.lake.manifest.concurrently(
+            timed("t_frontier", lambda: self._commit_links(web_links, selected, wave, meta)),
+            timed("t_crawled", lambda: self._append_crawled(
+                fetched, wave_df, wave, urls_selected, meta, **counters)),
+        )
+        return crawled, links, marks
+
     def _write_metrics(self, rows, method: str, meta: dict) -> None:
         """(wave, scope, metric, value) rows → wave_metrics. Metrics are
         driver-resident counters: write them driver-side (pyarrow) instead
@@ -645,11 +682,16 @@ class CrawlEngine:
     # ------------------------------------------------------------- one wave
     @_atomic
     def run_wave(self, wave: int) -> dict:
-        t0 = time.time()
+        """One crawl wave. ``timings`` holds each phase's seconds; the two
+        commits overlap, so ``t_crawled`` and ``t_frontier`` each time
+        their own branch and the marks add up to more than ``seconds``."""
+        t0 = since = time.time()
         tmarks = {}
 
         def mark(label):
-            tmarks[label] = round(time.time() - t0 - sum(tmarks.values()), 2)
+            nonlocal since
+            now = time.time()
+            tmarks[label], since = round(now - since, 2), now
 
         candidates = self._frontier().filter(~F.col("visited"))
         method, selected = fr.weighted_select(
@@ -684,15 +726,6 @@ class CrawlEngine:
         fetched.count()
         mark("t_extract")
 
-        # ---- crawled rows (A4 schema, reference §1.1b) — ACTION 3 (write)
-        crawled_version, crawl_stats = self._append_crawled(
-            fetched, wave_df, wave, urls_selected, meta={"wave": wave},
-            rows=F.count(F.lit(1)),
-            fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
-            emails=F.count(F.when(F.col("route") == "email", 1)),
-        )
-        mark("t_crawled")
-
         # ---- discovered links → hygiene → anti-join → frontier commit.
         # The extraction UDF already resolved, split off mailto and
         # sanitized every href, so the link pipeline reads the cache only.
@@ -714,11 +747,17 @@ class CrawlEngine:
                 .unionByName(tree_of(wave_df, "url"))
                 .unionByName(tree_of(guarded, "raw"))
             )
-        # ACTION 4 (two O(wave) writes)
-        frontier_version, link_stats, bucket_rows = self._commit_links(
-            web_links, selected, wave, meta={"wave": wave}
-        )
-        mark("t_frontier")
+        # ACTIONS 3 and 4 at once: the crawled rows (A4 schema, reference
+        # §1.1b) beside the frontier commit (two O(wave) writes)
+        (crawled_version, crawl_stats), (frontier_version, link_stats, bucket_rows), marks = (
+            self._commit_wave(
+                fetched, wave_df, selected, web_links, wave, urls_selected, {"wave": wave},
+                rows=F.count(F.lit(1)),
+                fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
+                emails=F.count(F.when(F.col("route") == "email", 1)),
+            ))
+        tmarks.update(marks)
+        since = time.time()
 
         # ---- metrics + per-bucket lineage (A5/A6), all from Observations
         links_new = link_stats["links_new"]
@@ -792,13 +831,13 @@ class CrawlEngine:
         fetched = self._fused_fetch_extract(wave_df).cache()
         fetched.count()
         meta = {"wave": wave, "op": "fast_pass"}
-        _, stats = self._append_crawled(
-            fetched, wave_df, wave, urls_selected, meta=meta,
+        links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
+        (_, stats), (_, link_stats, _), _ = self._commit_wave(
+            fetched, wave_df, selected, links, wave, urls_selected, meta,
             fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
             consistent=F.count(F.when(F.col("ext_consistent"), 1)),
         )
-        links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
-        links_new = self._commit_links(links, selected, wave, meta=meta)[1]["links_new"]
+        links_new = link_stats["links_new"]
         counts = {"urls_selected": urls_selected, "urls_fetched": int(stats["fetched_ok"]),
                   "ext_consistent": int(stats["consistent"]), "links_new": links_new}
         self._write_metrics([(wave, "fast_pass", m, v) for m, v in counts.items()],

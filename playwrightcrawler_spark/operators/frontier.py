@@ -11,8 +11,12 @@ crawl-ordering equivalence is defined under a pinned seed (SURVEY.md §5.2).
 Scale notes: every policy is one scan + one window + one global sort
 bounded by ``limit(size)``. The window partitions by ``host`` — the same
 key the frontier is salted/bucketed on — so at cluster scale the shuffle
-is bounded by the candidate set, not the 10^10-row table; Catalyst pushes
-the ``visited = false`` filter and the column pruning into the scan.
+is bounded by the candidate set, not the 10^10-row table. Column pruning
+reaches the scan; the ``visited = false`` filter does not. On the
+merge-on-read view (``MorTable.read``) it sits above the flip join that
+sets ``visited``, so the base scan has ``DataFilters: []`` and every
+selection reads and sorts every unvisited row (WindowGroupLimit only cuts
+the shuffle to ``quota`` rows per host per partition).
 """
 
 from __future__ import annotations

@@ -12,8 +12,12 @@ parquet:
   ``versions`` (``Manifest``). An engine operation is one
   ``Lakehouse.transaction()`` whose table commits publish together in one
   atomic rename (Iceberg's snapshot commit, spanning tables), so a kill
-  anywhere leaves the last whole operation. A killed operation's version
-  numbers are reused: a table empties a version's directory first;
+  anywhere leaves the last whole operation. The transaction belongs to the
+  operation, not to a thread: the thread it starts with
+  ``Manifest.concurrently`` (a wave's crawled append beside its frontier
+  commit) joins it and commits into it, and it ends only after that
+  thread returns. A killed operation's version numbers are reused: a table
+  empties a version's directory first;
 - ``read(version=...)`` is time travel; ``latest_version`` is the resume
   point (test: kill anywhere → relaunch → identical tables);
 - reads are planned from the manifest, as Iceberg plans scans from table
@@ -52,6 +56,7 @@ from functools import reduce
 from pathlib import Path
 from urllib.parse import unquote
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -85,15 +90,24 @@ class Manifest:
     inside ``transaction()`` are visible to this process at once and
     reach disk together, in one rename, when the outermost transaction
     exits; an exception inside discards them all and reloads the file.
-    The transaction holds a lock, so operations on one catalog from
-    several threads (a streaming ingest and a wave) commit one after the
-    other. Outside a transaction a read first reloads the file if another
-    writer replaced it."""
+
+    A transaction belongs to the operation that opened it, not to a
+    thread. The opening thread holds the lock until it exits, so an
+    operation on another thread (a streaming ingest beside a wave) waits
+    for the whole transaction. The thread the operation starts with
+    ``concurrently`` joins it: its commits land in it without taking the
+    lock, one change of the in-memory manifest at a time, and the
+    transaction ends only after it has returned. Outside a
+    transaction a read first reloads the file if another writer
+    replaced it."""
 
     def __init__(self, path: Path):
         self.path = path
-        self._lock = threading.RLock()
-        self._depth = 0
+        self._lock = threading.Lock()
+        # guards the in-memory manifest and ``_members``, the threads of
+        # the open transaction (none when no transaction is open)
+        self._mutex = threading.Lock()
+        self._members: set[int] = set()
         self._load()
 
     def _stat(self) -> tuple | None:
@@ -110,20 +124,36 @@ class Manifest:
         if self._stamp:
             self.tables = json.loads(self.path.read_text())["tables"]
 
+    def _joined(self) -> bool:
+        with self._mutex:
+            return threading.get_ident() in self._members
+
     def section(self, name: str) -> dict:
-        if not self._depth and self._stat() != self._stamp:
+        if not self._members and self._stat() != self._stamp:
             self._load()
         return self.tables.get(name) or {"schemas": [], "versions": []}
 
     @contextmanager
+    def change(self, name: str):
+        """Table ``name``'s section to change, in the open transaction (a
+        one-commit transaction of its own outside any); the changes of the
+        transaction's threads apply one at a time."""
+        with self.transaction(), self._mutex:
+            yield self.tables.setdefault(name, {"schemas": [], "versions": []})
+            self.pending = True
+
+    @contextmanager
     def transaction(self):
+        if self._joined():
+            yield  # a nested call or a joined thread: the open transaction
+            return
         with self._lock:
-            if not self._depth and self._stat() != self._stamp:
+            if self._stat() != self._stamp:
                 self._load()
-            self._depth += 1
+            self._members.add(threading.get_ident())
             try:
                 yield
-                if self._depth == 1 and self.pending:
+                if self.pending:
                     tmp = self.path.with_suffix(".tmp")
                     tmp.write_text(json.dumps({"tables": self.tables}, indent=1))
                     os.replace(tmp, self.path)  # atomic commit point
@@ -132,7 +162,43 @@ class Manifest:
                 self._load()
                 raise
             finally:
-                self._depth -= 1
+                with self._mutex:
+                    self._members.clear()
+
+    def concurrently(self, here, beside) -> tuple:
+        """Run ``here`` on this thread and, at once, ``beside`` on a new
+        ``InheritableThread`` (so its Spark jobs carry this thread's job
+        group and local properties) that joins this thread's open
+        transaction. Waits for both, on success or failure, then re-raises
+        the exception raised first; nothing of the transaction is
+        published after a failure. Returns (``here``'s result,
+        ``beside``'s result)."""
+        if not self._joined():
+            raise RuntimeError("concurrently() needs an open transaction on this thread")
+        results, errors = [None, None], []
+
+        def run(i, fn):
+            try:
+                results[i] = fn()
+            except BaseException as e:
+                errors.append(e)
+
+        def branch():
+            with self._mutex:
+                self._members.add(threading.get_ident())
+            try:
+                run(1, beside)
+            finally:
+                with self._mutex:
+                    self._members.discard(threading.get_ident())
+
+        thread = InheritableThread(target=branch)
+        thread.start()
+        run(0, here)
+        thread.join()
+        if errors:
+            raise errors[0]
+        return tuple(results)
 
 
 class SnapshotTable:
@@ -174,8 +240,10 @@ class SnapshotTable:
         ``flips_schema`` for MoR flips) by index into the section's
         ``schemas`` list, which holds every distinct schema once; a
         partitioned snapshot also lists its partition directories."""
-        with self.manifest.transaction():
-            m = self.manifest.tables.setdefault(self.name, {"schemas": [], "versions": []})
+        with self.manifest.change(self.name) as m:
+            if m["versions"] and m["versions"][-1]["version"] >= version:
+                # two threads of one transaction wrote this table at once
+                raise RuntimeError(f"table {self.name}: version {version} is taken")
             entry = {"version": version, "committed_at": time.time(), **(meta or {})}
             for key, schema in schemas.items():
                 js = schema.jsonValue()
@@ -189,7 +257,6 @@ class SnapshotTable:
                     for p in root.glob("/".join(f"{c}=*" for c in self.partition_by))
                 )
             m["versions"].append(entry)
-            self.manifest.pending = True
 
     @staticmethod
     def _schema(m: dict, upto: int | None = None, key: str = "schema") -> StructType | None:
@@ -503,7 +570,8 @@ class Lakehouse:
 
     def transaction(self):
         """Context manager: every table commit inside publishes together
-        (``Manifest.transaction``); a nested call joins the outer one."""
+        (``Manifest.transaction``); a nested call, or a thread started by
+        ``Manifest.concurrently``, joins the outer one."""
         return self.manifest.transaction()
 
     def describe(self) -> dict:

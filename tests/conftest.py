@@ -13,6 +13,10 @@ from tests.reference_loader import load_reference_functions  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# a test-sized driver heap: the session default pre-commits 12g (-Xms=-Xmx)
+# for a fixture of a few MB; subprocess lanes inherit it through the env
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -721,3 +721,109 @@ def test_kill_anywhere_resumes_to_the_same_warehouse(
     for s in rest:
         _step(resumed, s)
     assert _warehouse(spark, resumed.lake) == kill_refs[key]
+
+
+def test_wave_commits_overlap(spark, pages_dir, tmp_path, monkeypatch):
+    """A wave's crawled append and its frontier commit run at once, on two
+    driver threads: the append waits until the frontier commit is done,
+    which times out when they run one after the other."""
+    import threading
+
+    eng = _kill_engine(spark, pages_dir, tmp_path / "wh", "bloom")
+    eng.bootstrap(pages_gen.seed_urls())
+    append, commit_wave = eng.lake.crawled.append, eng.lake.frontier.commit_wave
+    committed, seen = threading.Event(), {}
+
+    def held_append(*a, **kw):
+        seen["crawled"] = threading.get_ident()
+        seen["overlapped"] = committed.wait(timeout=60)
+        return append(*a, **kw)
+
+    def signalling_commit(*a, **kw):
+        seen["frontier"] = threading.get_ident()
+        try:
+            return commit_wave(*a, **kw)
+        finally:
+            committed.set()
+
+    monkeypatch.setattr(eng.lake.crawled, "append", held_append)
+    monkeypatch.setattr(eng.lake.frontier, "commit_wave", signalling_commit)
+    assert not eng.run_wave(1)["done"]
+    assert seen["overlapped"]
+    assert seen["crawled"] != seen["frontier"]
+
+
+@pytest.mark.parametrize("failing,held", [
+    (("frontier", "commit_wave"), ("crawled", "append")),
+    (("crawled", "append"), (None, "_commit_links")),
+], ids=["frontier_fails", "crawled_fails"])
+def test_abort_waits_for_the_other_commit(
+        spark, pages_dir, tmp_path, kill_refs, failing, held):
+    """One of a wave's two concurrent commits raises while the other is
+    still held; the held one resumes only after the failure. The wave
+    raises once both are done, no thread of it is left running, and the
+    held branch's commit is discarded with the rest: the same engine's
+    next ingest publishes no stray version of it, and a resumed engine
+    writes the warehouse of an uninterrupted run. Had the wave returned
+    before the held branch, its commit would have landed in the reloaded
+    manifest and been published by that ingest."""
+    import threading
+
+    from playwrightcrawler_spark.sources.tables import Lakehouse
+
+    program = ["wave", "ingest", "wave", "wave"]
+    key = ("bloom", tuple(program))
+    if key not in kill_refs:
+        ref = _kill_engine(spark, pages_dir, tmp_path / "ref", "bloom")
+        ref.bootstrap(pages_gen.seed_urls())
+        for s in program:
+            _step(ref, s)
+        kill_refs[key] = _warehouse(spark, ref.lake)
+
+    wh = tmp_path / "wh"
+    eng = _kill_engine(spark, pages_dir, wh, "bloom")
+    eng.bootstrap(pages_gen.seed_urls())
+    _step(eng, "wave")
+    published = {t: getattr(eng.lake, t).versions() for t in Lakehouse.TABLES}
+
+    release, threads, done = threading.Event(), [], []
+    fail_obj = getattr(eng.lake, failing[0])
+    hold_obj = eng if held[0] is None else getattr(eng.lake, held[0])
+    fail, hold = getattr(fail_obj, failing[1]), getattr(hold_obj, held[1])
+
+    def failing_commit(*a, **kw):
+        threads.append(threading.current_thread())
+        fail(*a, **kw)
+        threading.Timer(0.5, release.set).start()
+        raise _Killed(".".join(filter(None, failing)))
+
+    def held_commit(*a, **kw):
+        threads.append(threading.current_thread())
+        assert release.wait(timeout=60)
+        out = hold(*a, **kw)
+        done.append(held[1])
+        return out
+
+    setattr(fail_obj, failing[1], failing_commit)
+    setattr(hold_obj, held[1], held_commit)
+    try:
+        with pytest.raises(_Killed):
+            _step(eng, "wave")
+    finally:
+        setattr(fail_obj, failing[1], fail)
+        setattr(hold_obj, held[1], hold)
+    assert done == [held[1]]
+    assert len(threads) == 2
+    assert not any(t.is_alive() for t in threads if t is not threading.current_thread())
+    spark.catalog.clearCache()
+
+    _step(eng, "ingest")
+    on_disk = Lakehouse(str(wh))
+    assert on_disk.crawled.versions() == published["crawled"]
+    assert on_disk.wave_metrics.versions() == published["wave_metrics"]
+    assert len(on_disk.frontier.versions()) == len(published["frontier"]) + 1
+
+    resumed = _kill_engine(spark, pages_dir, wh, "bloom")
+    for s in program[2:]:
+        _step(resumed, s)
+    assert _warehouse(spark, resumed.lake) == kill_refs[key]
