@@ -125,7 +125,7 @@ COMPACT_FLIP_ROWS = 2_000_000
 # per-task fixed costs (plan deserialization, email-branch python
 # roundtrip) that dominated the commit stage at one-task-per-scan-split
 # granularity. ~1000 × 100 KB ≈ 100 MB per task at CC page weight.
-WRITE_TASK_ROWS = int(os.environ.get("SPARK_GRAFT_WRITE_TASK_ROWS", "1000"))
+WRITE_TASK_ROWS = 1000
 
 # default parallelism used by tests/bench on this sandbox
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32

@@ -133,7 +133,7 @@ def _atomic(op):
         except BaseException:
             # built on the discarded commits: re-derived from the published
             # tables by the next operation
-            self._frontier_cur = self._bloom_rows = None
+            self._bloom_rows = None
             raise
 
     return run
@@ -195,7 +195,6 @@ class CrawlEngine:
         # html rows only; default off matches the reference. Must stay
         # constant per warehouse (delta-table schema stability).
         self.extract_raw = extract_raw_webcontent
-        self._frontier_cur: tuple[int, DataFrame] | None = None
         self._bloom_rows: list | None = None
         # wave-membership pruning: a pages table hive-partitioned by
         # pmod(xxhash64(url), N) carries a marker with N; a wave pushes its
@@ -230,13 +229,6 @@ class CrawlEngine:
             F.pmod(F.xxhash64("url"), F.lit(self._url_buckets)).cast("int").alias("b")
         ).distinct().collect()]
         return self._pages().filter(F.col("url_bucket").isin(buckets)).select("url", "html")
-
-    def _frontier(self) -> DataFrame:
-        """The frontier's merge-on-read view, read again after a commit."""
-        v = self.lake.frontier.latest_version
-        if self._frontier_cur is None or self._frontier_cur[0] != v:
-            self._frontier_cur = (v, self.lake.frontier.read(self.spark))
-        return self._frontier_cur[1]
 
     @staticmethod
     def _frontier_rows(links: DataFrame, wave: int) -> DataFrame:
@@ -350,8 +342,7 @@ class CrawlEngine:
             self._hashed_links(self._seed_links(seed_urls)), wave=0
         ).dropDuplicates(["url_hash"])
         self.lake.frontier.write(rows, meta={"wave": 0, "op": "bootstrap"})
-        self._bloom_update(
-            self.lake.frontier.read_keys(self.spark, cols=("host_salt", "url_hash")))
+        self._bloom_rebuild()
         return self.lake.frontier.key_rows()
 
     # ---------------------------------------------------- bloom sidecar life
@@ -377,9 +368,9 @@ class CrawlEngine:
         frontier size (2x headroom): fixed build-time parameters otherwise
         saturate once the frontier outgrows them — FPP degrades toward 1
         and every candidate takes the broadcast-confirm path, silently
-        un-filtering the pre-filter (round-2 verdict). Called at
-        compaction and cleanup (new bases: the full key set is scanned
-        anyway) and when the sidecar is missing or stale."""
+        un-filtering the pre-filter (round-2 verdict). Called after every
+        base write — bootstrap, compaction and cleanup, where the full key
+        set is scanned anyway — and when the sidecar is missing or stale."""
         if not self.use_bloom:
             return
         # keys-only read: the Bloom covers url_hashes, which flips never
@@ -403,15 +394,15 @@ class CrawlEngine:
         — after a resize they differ from the config-derived defaults.
         The sidecar is part of the checkpoint — resume reloads it instead
         of rebuilding — and records the frontier version it covers
-        (``_bloom_sync``)."""
+        (``_bloom_sync``). Every operation that commits links starts with
+        the sidecar loaded: bootstrap builds it and ``_atomic`` syncs it;
+        it has no row only while the frontier has none."""
         if not self.use_bloom:
             return
         live = self._bloom_rows
         params = dict(m_bits=int(live[0]["m_bits"]), k=int(live[0]["k"])) if live else {}
         new = seen.build_blooms(keys, expected_items_per_bucket=self.bloom_items, **params)
-        if live:
-            new = seen.merge_blooms(self.lake.seen_bloom.read(self.spark), new)
-        self._bloom_write(new)
+        self._bloom_write(seen.merge_blooms(self.lake.seen_bloom.read(self.spark), new))
 
     def _bloom_write(self, blooms: DataFrame, **meta) -> None:
         """Collect the per-bucket sidecar (64 rows) and write it
@@ -693,7 +684,7 @@ class CrawlEngine:
             now = time.time()
             tmarks[label], since = round(now - since, 2), now
 
-        candidates = self._frontier().filter(~F.col("visited"))
+        candidates = self.lake.frontier.read(self.spark).filter(~F.col("visited"))
         method, selected = fr.weighted_select(
             candidates,
             size=self.wave_size,
@@ -811,7 +802,7 @@ class CrawlEngine:
         the routed UDF, the reference's fallback to get_page on a
         content-type mismatch (:4826-4860). No open-directory hunting."""
         cand = (
-            self._frontier().filter(~F.col("visited"))
+            self.lake.frontier.read(self.spark).filter(~F.col("visited"))
             .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
             .withColumn("expected_route", routing.expected_route_for_extension_col(F.col("file_extension")))
             .filter(F.col("expected_route") != "")
@@ -861,7 +852,7 @@ class CrawlEngine:
         wave_metrics (A5). No-op (no commit) when nothing matches."""
         from playwrightcrawler_spark.operators import cleanup as cl
 
-        kept, stats = cl.cleanup(self._frontier(), **flags)
+        kept, stats = cl.cleanup(self.lake.frontier.read(self.spark), **flags)
         counts = {r["drop_reason"]: int(r["deleted"]) for r in stats.collect()}
         deleted = sum(counts.values())
         if deleted:

@@ -42,19 +42,9 @@ def query_of(url: Column) -> Column:
     return F.try_parse_url(url, F.lit("QUERY"))
 
 
-def strip_fragment(url: Column) -> Column:
-    """Drop #fragment (reference playwrightcrawler.py:1858)."""
-    return F.regexp_replace(url, "#.*$", "")
-
-
 def url_hash(url: Column) -> Column:
     """64-bit seen-set key (north_rule): JVM xxhash64, no UDF."""
     return F.xxhash64(url)
-
-
-def url_id_sha256(url: Column) -> Column:
-    """Reference `_id` parity: hex sha256 (playwrightcrawler.py:1431-1456)."""
-    return F.sha2(url, 256)
 
 
 # --------------------------------------------------------------------------
@@ -111,22 +101,11 @@ def padded_host_levels(host: Column, max_levels: int = config.MAX_HOST_LEVELS) -
     return F.concat(pad, lv)
 
 
-def host_level(host: Column, i: int, max_levels: int = config.MAX_HOST_LEVELS) -> Column:
-    """host_level_i, TLD = level 1 (reference :1915-1916 flattens the last
-    ``max_levels`` entries reversed)."""
-    tail = F.slice(padded_host_levels(host, max_levels), -max_levels, max_levels)
-    return F.element_at(F.reverse(tail), i)
-
-
 def dir_levels(path: Column, max_levels: int = config.MAX_DIR_LEVELS) -> Column:
     """Non-empty segments right-padded with '' (reference :1982-1987)."""
     segs = F.filter(F.split(F.regexp_replace(path, "^/|/$", ""), "/"), lambda x: x != "")
     pad = F.array_repeat(F.lit(""), F.greatest(F.lit(0), F.lit(max_levels) - F.size(segs)))
     return F.concat(segs, pad)
-
-
-def dir_level(path: Column, i: int, max_levels: int = config.MAX_DIR_LEVELS) -> Column:
-    return F.element_at(dir_levels(path, max_levels), i)
 
 
 # --------------------------------------------------------------------------
@@ -230,17 +209,4 @@ def level_flatten_columns() -> dict[str, Column]:
         cols[f"host_level_{i}"] = F.element_at(host_tail, i)
     for i in range(1, md + 1):
         cols[f"directory_level_{i}"] = F.element_at(F.col("directory_levels"), i)
-    return cols
-
-
-def enrichment_columns(url: Column) -> dict[str, Column]:
-    """Single-shot variant (small frames / tests). For wide pipelines use
-    base + flatten to stay codegen-friendly."""
-    cols = enrichment_base_columns(url)
-    host = cols["host"]
-    path = path_of(url)
-    for i in range(1, config.MAX_HOST_LEVELS + 1):
-        cols[f"host_level_{i}"] = host_level(host, i)
-    for i in range(1, config.MAX_DIR_LEVELS + 1):
-        cols[f"directory_level_{i}"] = dir_level(path, i)
     return cols

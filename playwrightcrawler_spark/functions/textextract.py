@@ -473,23 +473,20 @@ def parse_html(html: str) -> tuple[list[str], list[str]]:
             return fast
         w = _walk(html)
         return w.text_parts, w.links
-    if _HAVE_BS4:
-        soup = BeautifulSoup(html, "html.parser")
-        parts = [
-            str(t)
-            for t in soup.find_all(string=True)
-            if t.parent.name not in TAG_BLOCKLIST
-        ]
-        links: list[str] = []
-        seen: set[str] = set()
-        for el in soup.find_all(list(_LINK_ATTR)):
-            v = el.get(_LINK_ATTR[el.name])
-            if isinstance(v, str) and v not in seen:
-                seen.add(v)
-                links.append(v)
-        return parts, links
-    w = _walk(html)
-    return w.text_parts, w.links
+    soup = BeautifulSoup(html, "html.parser")
+    parts = [
+        str(t)
+        for t in soup.find_all(string=True)
+        if t.parent.name not in TAG_BLOCKLIST
+    ]
+    links: list[str] = []
+    seen: set[str] = set()
+    for el in soup.find_all(list(_LINK_ATTR)):
+        v = el.get(_LINK_ATTR[el.name])
+        if isinstance(v, str) and v not in seen:
+            seen.add(v)
+            links.append(v)
+    return parts, links
 
 
 def extract_text(raw, max_size: int = config.MAX_WEBCONTENT_SIZE) -> str:

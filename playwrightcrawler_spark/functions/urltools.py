@@ -309,12 +309,6 @@ def resolve_link(parent_url: str, href: str) -> str:
     return urljoin(parent_url, href)
 
 
-def strip_fragment(url: str) -> str:
-    """Drop the #fragment (reference playwrightcrawler.py:1858)."""
-    parts = urlsplit(url)
-    return urlunsplit((parts.scheme, parts.netloc, parts.path, parts.query, ""))
-
-
 # ---------------------------------------------------------------------------
 # Email extraction (reference email_url handler, playwrightcrawler.py:2131-2197)
 # ---------------------------------------------------------------------------

@@ -30,8 +30,6 @@ from urllib.parse import quote, urlsplit
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 OUTPUT_DIR = "downloads"
 
@@ -100,11 +98,6 @@ def safe_filepath_from_url(url: str, output_dir: str = OUTPUT_DIR) -> str:
         safe_name = re.sub(r"[^a-zA-Z0-9_.-]", "_", f"{host}_{path}")
         normalized = posixpath.join(output_dir, "unsafe", safe_name)
     return normalized
-
-
-@pandas_udf(T.StringType())
-def safe_filepath_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(safe_filepath_from_url, na_action="ignore")
 
 
 # ---------------------------------------------------------------------------

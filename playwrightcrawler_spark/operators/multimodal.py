@@ -23,7 +23,6 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 try:  # pragma: no cover - exercised only where Pillow is installed
@@ -185,12 +184,3 @@ def extract_media_metadata(
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META_SCHEMA.fields])
 
     return df.select(url_col, bin_col).mapInPandas(process, MEDIA_META_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10, ts_col: str = "warc_ts") -> DataFrame:
-    """Video frame-sampling *plan* (which frames to pull) as pure SQL —
-    the decode of those frames is the stubbed step."""
-    return df.withColumn(
-        "sample_frames",
-        F.sequence(F.lit(0), F.lit(every_n * 9), F.lit(every_n)),
-    )

@@ -19,12 +19,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # pragma: no cover
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """The filters the parquet source accepted for row-group pruning."""
     out = []

@@ -504,17 +504,6 @@ def bench_all_page_urls(n_hosts: int, pages_per_host: int) -> list[str]:
     ]
 
 
-def bench_seed_urls(n_hosts: int = 2000, n_seeds: int = 64, per_host: int = 1) -> list[str]:
-    hosts_needed = max(1, n_seeds // per_host)
-    step = max(1, n_hosts // hosts_needed)
-    urls = [
-        f"https://host{h:05d}.bench.example/p{k}.html"
-        for h in range(0, n_hosts, step)
-        for k in range(per_host)
-    ]
-    return urls[:n_seeds]
-
-
 if __name__ == "__main__":
     import sys
 

@@ -364,43 +364,66 @@ def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_
     assert eng5.lake.seen_bloom.latest_version == side_v
 
 
+def _measured_fpp(rows) -> float:
+    """False-positive rate of a sidecar over 10k probe hashes it never saw."""
+    import numpy as np
+
+    from playwrightcrawler_spark.operators import seen
+
+    fp = tot = 0
+    probe = (np.arange(10_000, dtype=np.int64) * np.int64(2654435761)) + np.int64(987654321)
+    for r in rows:
+        bits = np.frombuffer(r["bits"], dtype=np.uint8)
+        hits = seen._test_bits(bits, probe, int(r["m_bits"]), int(r["k"]))
+        fp += int(hits.sum())
+        tot += len(probe)
+    return fp / tot
+
+
+def _many_seeds(spark, n: int = 20_000):
+    return spark.range(n).select(
+        F.concat(F.lit("https://h"), F.col("id"), F.lit(".example.org/p.html")).alias("url")
+    )
+
+
+def test_bloom_sized_from_bootstrap(spark, pages_dir, tmp_path_factory):
+    """Bootstrap writes a base, so like every base write it sizes the
+    sidecar from the frontier's key count: a 20k-seed bootstrap against a
+    ~300x undersized ``bloom_items_per_bucket`` starts at the configured
+    FPP, and discovered links take the Bloom pre-filter from wave 1."""
+    from playwrightcrawler_spark import config
+
+    wh = tmp_path_factory.mktemp("wh_bloom_bootstrap")
+    eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=50, per_host_quota=2,
+                      method_weights={"oldest": 1}, use_bloom=True,
+                      bloom_items_per_bucket=1)
+    eng.bootstrap(_many_seeds(spark))
+    assert _measured_fpp(eng._bloom_rows) < 2 * config.BLOOM_FPP
+
+
 def test_bloom_resize_on_compaction(spark, pages_dir, tmp_path_factory):
     """Round-2 verdict: a sidecar sized for N items must not silently
     saturate when the frontier outgrows it — compaction rebuilds with
     (m, k) re-derived from actual counts, keeping measured FPP < 2x the
     configured target."""
-    import numpy as np
-
     from playwrightcrawler_spark import config
     from playwrightcrawler_spark.operators import seen
-
-    def measured_fpp(rows):
-        fp = tot = 0
-        probe = (np.arange(10_000, dtype=np.int64) * np.int64(2654435761)) + np.int64(987654321)
-        for r in rows:
-            bits = np.frombuffer(r["bits"], dtype=np.uint8)
-            hits = seen._test_bits(bits, probe, int(r["m_bits"]), int(r["k"]))
-            fp += int(hits.sum())
-            tot += len(probe)
-        return fp / tot
 
     wh = tmp_path_factory.mktemp("wh_bloom_resize")
     eng = CrawlEngine(spark, pages_dir, str(wh), wave_size=50, per_host_quota=2,
                       method_weights={"oldest": 1}, use_bloom=True,
                       bloom_items_per_bucket=1,       # ~300x undersized
-                      compact_every=1)
-    # 20k-url frontier against 64-bit buckets: the fixed sizing saturates
-    seeds = spark.range(20_000).select(
-        F.concat(F.lit("https://h"), F.col("id"), F.lit(".example.org/p.html")).alias("url")
-    )
-    eng.bootstrap(seeds)
-    saturated = measured_fpp(eng._bloom_rows)
+                      compact_every=2)
+    eng.bootstrap(pages_gen.seed_urls())              # sized for 10 keys
+    # 20k urls OR-merged into the bootstrap's 64-bit buckets: saturated
+    eng.ingest(_many_seeds(spark))
+    saturated = _measured_fpp(eng._bloom_rows)
     assert saturated > 0.5, saturated                 # degenerate pre-resize
-    eng.run(1)                                        # commit → compact → rebuild
+    eng.run(1)                                        # 2nd delta → compact → rebuild
     assert any(e.get("op") == "compact" for e in eng.lake.frontier.versions())
     rows = eng._bloom_rows
     assert rows[0]["m_bits"] > 64                     # actually resized
-    assert measured_fpp(rows) < 2 * config.BLOOM_FPP
+    assert _measured_fpp(rows) < 2 * config.BLOOM_FPP
     # coverage invariant survives the rebuild
     cover = eng.lake.frontier.read(spark).withColumn(
         "m", seen.maybe_seen_col(spark, rows))
@@ -547,8 +570,7 @@ def test_cleanup_pass_deletes_and_counts(spark, pages_dir, tmp_path_factory):
         " score double, visited boolean, discovered_at timestamp, wave int",
     )
     eng.lake.frontier.commit_wave(inserts=bad, flips=None, meta={"op": "test_inject"})
-    eng._frontier_cur = None
-    before = eng._frontier().count()
+    before = eng.lake.frontier.read(spark).count()
     m = eng.run_cleanup_pass(wave=0, remove_repeated=True, remove_invalid=False)
     assert m["deleted"] == 1 and m["rules"] == {"repeated_segments": 1}
     fr = eng.lake.frontier.read(spark)
