@@ -34,7 +34,7 @@ Scale design:
   ride on Observations attached to the write actions instead of
   separate count() actions;
 - the two commits are chains of small jobs that wait on the driver, with
-  the cores mostly idle, so they overlap (``_commit_wave``): they read
+  the cores mostly idle, so they overlap (``_crawl``): they read
   only the cached wave frames and write different tables. Waves never
   overlap: a wave's selection depends on the previous wave's flips;
 - crawled/wave_metrics are fast-append (delta) tables: commit cost is
@@ -44,11 +44,13 @@ Scale design:
   politeness aggregates on the raw host (SURVEY.md §7 hard part 4).
 
 The stages are named methods (``_robots_step``, ``_fused_fetch_extract``,
-``_append_crawled``/``_build_crawled``, ``_commit_links``, both commits run
-by ``_commit_wave``), and ``run_wave`` is one selector followed by them.
-The fast-extension pass (X7/X8) runs the same stages after its own
-extension-filtered selector, so there is one extraction UDF and one
-crawled/frontier commit sequence.
+``_append_crawled``/``_build_crawled``, ``_commit_links``), and ``_crawl``
+is the one crawl body that runs them after a selector and writes one
+metric set. ``run_wave`` and the fast-extension pass (X7/X8) are two
+selectors over it: the weighted frontier policy, and the oldest
+candidates carrying a mapped file extension. So there is one extraction
+UDF, one crawled/frontier commit sequence and one set of wave_metrics
+rows, told apart by their ``method``.
 """
 
 from __future__ import annotations
@@ -202,7 +204,7 @@ class CrawlEngine:
         # min(wave_size, N)/N of the files. None → unbucketed, full scan.
         from playwrightcrawler_spark.sources import pages_gen as _pg
 
-        self._url_buckets = _pg.read_bucket_marker(pages_path)
+        self._url_buckets = _pg.read_bucket_marker(spark, pages_path)
         # seed-folder files this engine has ingested (``run(seed_folder=)``)
         self._seed_files: set[str] = set()
         self._bloom_sync()
@@ -322,16 +324,23 @@ class CrawlEngine:
             buckets=config.HOST_SALT_BUCKETS,
         ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
 
-    def _seed_links(self, urls: DataFrame | list[str]) -> DataFrame:
-        """Seed URLs (a list, or a DataFrame with a ``url`` column) → link
-        rows at depth 0, the shape ``_page_links`` gives discovered links."""
-        if not isinstance(urls, DataFrame):
-            urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        # a generator's output is not an alias of the UDF call, so the url
-        # filter of ``_dedupe_links`` cannot be pushed below it and copy the
-        # UDF: seed_link runs once per seed
+    @staticmethod
+    def _url_links(urls: DataFrame) -> DataFrame:
+        """A DataFrame's ``url`` column → link rows at depth 0, the shape
+        ``_page_links`` gives discovered links. A generator's output is not
+        an alias of the UDF call, so a filter on the link columns (the url
+        filter of ``_dedupe_links``, the drop_reason filter of the streaming
+        ``clean_links``) cannot be pushed below it and copy the UDF:
+        seed_link runs once per URL."""
         return urls.select(
             F.inline(F.array(udfs.seed_link(F.col("url")))), F.lit(0).alias("depth"))
+
+    def _seed_links(self, urls: DataFrame | list[str]) -> DataFrame:
+        """Seed URLs (a list, or a DataFrame with a ``url`` column) → link
+        rows (``_url_links``)."""
+        if not isinstance(urls, DataFrame):
+            urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
+        return self._url_links(urls)
 
     # ------------------------------------------------------------- bootstrap
     @_atomic
@@ -627,35 +636,6 @@ class CrawlEngine:
         ]
         return frontier_version, link_stats, bucket_rows
 
-    def _commit_wave(self, fetched: DataFrame, wave_df: DataFrame, selected: DataFrame,
-                     web_links: DataFrame, wave: int, urls_selected: int, meta: dict,
-                     **counters) -> tuple[tuple, tuple, dict]:
-        """A wave's two commits at once, into its one transaction
-        (``Manifest.concurrently``): the crawled append
-        (``_append_crawled``, ``counters`` riding it) on a second driver
-        thread while this thread runs the link → seen-set → frontier
-        commit (``_commit_links``). Waits for both, on success or failure,
-        and re-raises the first failure. Returns (``_append_crawled``'s
-        result, ``_commit_links``'s result, {"t_crawled", "t_frontier"}:
-        each branch's own seconds)."""
-        marks = {"t_crawled": 0.0, "t_frontier": 0.0}
-
-        def timed(label, fn):
-            def run():
-                t = time.time()
-                try:
-                    return fn()
-                finally:
-                    marks[label] = round(time.time() - t, 2)
-            return run
-
-        links, crawled = self.lake.manifest.concurrently(
-            timed("t_frontier", lambda: self._commit_links(web_links, selected, wave, meta)),
-            timed("t_crawled", lambda: self._append_crawled(
-                fetched, wave_df, wave, urls_selected, meta, **counters)),
-        )
-        return crawled, links, marks
-
     def _write_metrics(self, rows, method: str, meta: dict) -> None:
         """(wave, scope, metric, value) rows → wave_metrics. Metrics are
         driver-resident counters: write them driver-side (pyarrow) instead
@@ -670,12 +650,19 @@ class CrawlEngine:
             _METRICS_SCHEMA, meta=meta,
         )
 
-    # ------------------------------------------------------------- one wave
-    @_atomic
-    def run_wave(self, wave: int) -> dict:
-        """One crawl wave. ``timings`` holds each phase's seconds; the two
-        commits overlap, so ``t_crawled`` and ``t_frontier`` each time
-        their own branch and the marks add up to more than ``seconds``."""
+    # ------------------------------------------------------------ one crawl
+    def _crawl(self, meta: dict, select, hunt: bool) -> dict:
+        """The one crawl body of a wave and of the fast-extension pass.
+        ``select`` maps the unvisited frontier to ``(method, selection)``;
+        the selection then runs the robots step, the fused fetch+extract and
+        the two commits at once, into the operation's one transaction
+        (``Manifest.concurrently``): the crawled append on a second driver
+        thread beside the link → seen-set → frontier commit on this one.
+        ``hunt`` adds open-directory hunting (P16) to the discovered links.
+        Every crawl writes the same metric set under scope ``meta["op"]``
+        (default "wave"), rows told apart by ``method``, and returns it
+        with ``meta``, the table versions, ``seconds`` and ``timings``."""
+        wave = meta["wave"]
         t0 = since = time.time()
         tmarks = {}
 
@@ -684,25 +671,28 @@ class CrawlEngine:
             now = time.time()
             tmarks[label], since = round(now - since, 2), now
 
-        candidates = self.lake.frontier.read(self.spark).filter(~F.col("visited"))
-        method, selected = fr.weighted_select(
-            candidates,
-            size=self.wave_size,
-            seed=self.seed + wave,
-            quota=self.quota,
-            weights=self.method_weights,
-        )
+        def timed(label, fn):
+            # the two commits overlap: each times its own branch
+            def run():
+                t = time.time()
+                try:
+                    return fn()
+                finally:
+                    tmarks[label] = round(time.time() - t, 2)
+            return run
+
+        method, selected = select(self.lake.frontier.read(self.spark).filter(~F.col("visited")))
         # ACTION 1: one aggregate gives the denied/allowed split
         selected, robots_denied, urls_selected = self._robots_step(
             selected.select("url", "url_hash", "host", "depth", "discovered_at")
         )
         mark("t_select")
         if robots_denied + urls_selected == 0:
-            # terminal ONLY when the pre-robots selection is empty — a wave
+            # terminal ONLY when the pre-robots selection is empty — a crawl
             # in which every selected URL is robots-denied still progresses
             # (the denied rows are flipped visited via `selected`)
             selected.unpersist()
-            return {"wave": wave, "method": method, "urls_selected": 0, "done": True}
+            return {**meta, "method": method, "urls_selected": 0, "done": True}
         wave_df = selected.filter(~F.col("_denied")).drop("_denied")
         npart = self._npart(urls_selected)
 
@@ -721,7 +711,7 @@ class CrawlEngine:
         # The extraction UDF already resolved, split off mailto and
         # sanitized every href, so the link pipeline reads the cache only.
         web_links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
-        if self.hunt:
+        if hunt:
             # P16: content URLs and links contribute parent-directory chains
             # (reference preprocess :1837-1845)
             def tree_of(df, url_col):
@@ -739,53 +729,78 @@ class CrawlEngine:
                 .unionByName(tree_of(guarded, "raw"))
             )
         # ACTIONS 3 and 4 at once: the crawled rows (A4 schema, reference
-        # §1.1b) beside the frontier commit (two O(wave) writes)
-        (crawled_version, crawl_stats), (frontier_version, link_stats, bucket_rows), marks = (
-            self._commit_wave(
-                fetched, wave_df, selected, web_links, wave, urls_selected, {"wave": wave},
-                rows=F.count(F.lit(1)),
-                fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
-                emails=F.count(F.when(F.col("route") == "email", 1)),
+        # §1.1b) beside the frontier commit (two O(wave) writes); each waits
+        # for the other, on success or failure, and the first failure raises
+        (frontier_version, link_stats, bucket_rows), (crawled_version, crawl_stats) = (
+            self.lake.manifest.concurrently(
+                timed("t_frontier", lambda: self._commit_links(web_links, selected, wave, meta)),
+                timed("t_crawled", lambda: self._append_crawled(
+                    fetched, wave_df, wave, urls_selected, meta,
+                    fetched_ok=F.count(F.when(
+                        (F.col("route") != "missing") & (F.col("route") != "email"), 1)),
+                    emails=F.count(F.when(F.col("route") == "email", 1)),
+                    ext_consistent=F.count(F.when(F.col("ext_consistent"), 1)),
+                )),
             ))
-        tmarks.update(marks)
         since = time.time()
 
         # ---- metrics + per-bucket lineage (A5/A6), all from Observations
-        links_new = link_stats["links_new"]
+        fetched_ok = int(crawl_stats["fetched_ok"])
+        counts = {
+            "urls_selected": urls_selected,
+            "robots_denied": robots_denied,
+            "urls_fetched": fetched_ok,
+            "pages_missing": urls_selected - fetched_ok,
+            "emails": int(crawl_stats["emails"]),
+            "ext_consistent": int(crawl_stats["ext_consistent"]),
+            "links_seen": int(link_stats["links_seen"]),
+            "links_new": link_stats["links_new"],
+        }
         drop_rows = [
             (wave, f"drop:{r}", "links_dropped", int(link_stats[f"drop_{r}"]))
             for r in DROP_REASONS
             if link_stats[f"drop_{r}"]
         ]
-        scalar = [
-            (wave, "wave", "urls_selected", urls_selected),
-            (wave, "wave", "robots_denied", robots_denied),
-            (wave, "wave", "urls_fetched", int(crawl_stats["fetched_ok"])),
-            (wave, "wave", "pages_missing", urls_selected - int(crawl_stats["fetched_ok"])),
-            (wave, "wave", "emails", int(crawl_stats["emails"])),
-            (wave, "wave", "links_seen", int(link_stats["links_seen"])),
-            (wave, "wave", "links_new", links_new),
-        ]
         mark("t_buckets")
-        self._write_metrics(scalar + bucket_rows + drop_rows, method, meta={"wave": wave})
+        scope = meta.get("op", "wave")
+        self._write_metrics(
+            [(wave, scope, m, v) for m, v in counts.items()] + bucket_rows + drop_rows,
+            method, meta=meta,
+        )
         mark("t_metrics")
 
         selected.unpersist()
         fetched.unpersist()
         return {
-            "wave": wave,
+            **meta,
             "method": method,
-            "urls_selected": urls_selected,
-            "robots_denied": robots_denied,
-            "urls_fetched": int(crawl_stats["fetched_ok"]),
-            "links_seen": int(link_stats["links_seen"]),
-            "links_new": links_new,
+            **counts,
             "crawled_version": crawled_version,
             "frontier_version": frontier_version,
             "seconds": round(time.time() - t0, 2),
             "timings": tmarks,
             "done": False,
         }
+
+    @_atomic
+    def run_wave(self, wave: int) -> dict:
+        """One crawl wave: the weighted frontier policy (``fr.weighted_select``,
+        seeded per wave) selects, ``_crawl`` crawls, hunting open directories
+        when the engine does. ``timings`` holds each phase's seconds:
+        ``t_select``, ``t_fetch``, ``t_extract``, then ``t_crawled`` and
+        ``t_frontier``, which overlap and so add up to more than
+        ``seconds``, then ``t_buckets`` and ``t_metrics``."""
+        return self._crawl(
+            {"wave": wave},
+            lambda candidates: fr.weighted_select(
+                candidates,
+                size=self.wave_size,
+                seed=self.seed + wave,
+                quota=self.quota,
+                weights=self.method_weights,
+            ),
+            hunt=self.hunt,
+        )
 
     # ------------------------------------------------- fast-extension pass
     @_atomic
@@ -801,45 +816,19 @@ class CrawlEngine:
         URL serving a page) get the full extraction + link discovery of
         the routed UDF, the reference's fallback to get_page on a
         content-type mismatch (:4826-4860). No open-directory hunting."""
-        cand = (
-            self.lake.frontier.read(self.spark).filter(~F.col("visited"))
-            .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
-            .withColumn("expected_route", routing.expected_route_for_extension_col(F.col("file_extension")))
-            .filter(F.col("expected_route") != "")
-        )
-        sel = fr.per_host_quota(cand, F.col("discovered_at").asc(), self.quota)
-        selected, robots_denied, urls_selected = self._robots_step(
-            fr.filter_blocked_hosts(sel)
-            .orderBy("discovered_at", "url")
-            .limit(size)
-            .select("url", "url_hash", "host", "depth", "discovered_at")
-        )
-        if robots_denied + urls_selected == 0:
-            selected.unpersist()
-            return {"wave": wave, "op": "fast_pass", "urls_selected": 0, "done": True}
-        wave_df = selected.filter(~F.col("_denied")).drop("_denied")
-        npart = self._npart(urls_selected)
-        fetched = self._fused_fetch_extract(wave_df).cache()
-        fetched.count()
-        meta = {"wave": wave, "op": "fast_pass"}
-        links = self._page_links(fetched.filter(F.col("route") == "html")).coalesce(npart)
-        (_, stats), (_, link_stats, _), _ = self._commit_wave(
-            fetched, wave_df, selected, links, wave, urls_selected, meta,
-            fetched_ok=F.count(F.when((F.col("route") != "missing") & (F.col("route") != "email"), 1)),
-            consistent=F.count(F.when(F.col("ext_consistent"), 1)),
-        )
-        links_new = link_stats["links_new"]
-        counts = {"urls_selected": urls_selected, "urls_fetched": int(stats["fetched_ok"]),
-                  "ext_consistent": int(stats["consistent"]), "links_new": links_new}
-        self._write_metrics([(wave, "fast_pass", m, v) for m, v in counts.items()],
-                            "fast_extension", meta=meta)
-        selected.unpersist()
-        fetched.unpersist()
-        return {
-            "wave": wave, "op": "fast_pass", "urls_selected": urls_selected,
-            "ext_consistent": int(stats["consistent"]),
-            "links_new": links_new, "done": False,
-        }
+
+        def select(candidates):
+            cand = (
+                candidates
+                .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
+                .withColumn("expected_route", routing.expected_route_for_extension_col(F.col("file_extension")))
+                .filter(F.col("expected_route") != "")
+            )
+            sel = fr.per_host_quota(cand, F.col("discovered_at").asc(), self.quota)
+            return "fast_extension", (
+                fr.filter_blocked_hosts(sel).orderBy("discovered_at", "url").limit(size))
+
+        return self._crawl({"wave": wave, "op": "fast_pass"}, select, hunt=False)
 
     # ------------------------------------------------------ cleanup pass
     @_atomic

@@ -82,17 +82,10 @@ def build_robots_rules(pages: DataFrame) -> DataFrame:
     (host, disallow_prefixes, crawl_delay_ms). Hosts with no useful rules
     are dropped (absent row = everything allowed)."""
     robots = pages.filter(F.col("url").rlike(r"^https?://[^/]+/robots\.txt$"))
-    parsed = robots.select(
+    # the rule columns come out of a generator, not as fields of the UDF's
+    # alias, so the filter below cannot be pushed beneath it and copy the
+    # UDF: each robots.txt body is parsed once
+    return robots.select(
         sqlfns.host_of(F.col("url")).alias("host"),
-        parse_robots_udf(F.col("html")).alias("_r"),
-    )
-    return (
-        parsed.select(
-            "host",
-            F.col("_r.disallow_prefixes").alias("disallow_prefixes"),
-            F.col("_r.crawl_delay_ms").alias("crawl_delay_ms"),
-        )
-        .filter(
-            (F.size("disallow_prefixes") > 0) | F.col("crawl_delay_ms").isNotNull()
-        )
-    )
+        F.inline(F.array(parse_robots_udf(F.col("html")))),
+    ).filter((F.size("disallow_prefixes") > 0) | F.col("crawl_delay_ms").isNotNull())

@@ -7,20 +7,21 @@ The frontier's ``url_hash`` keyspace IS the URL-seen set — the reference's
 (right) side cannot be the broadcast build side, so at 10^10 frontier rows
 that plan shuffles the whole table every wave.
 
-This module replaces it with a three-step exact pipeline whose only work
+This module replaces it with a two-step exact pipeline whose only work
 against the big table is ONE un-shuffled scan:
 
-1. **Bloom pre-filter** — one Bloom sidecar per ``host_salt`` bucket (the
-   frontier's physical partitioning key), built/merged distributed. Bloom
-   NEGATIVE = definitely new → bypasses the frontier entirely.
-2. **Broadcast confirm** — Bloom POSITIVES (true dups + false positives,
-   a tiny fraction of discovered links) are broadcast INNER-joined against
-   the frontier: the frontier is scanned, never shuffled, and on Iceberg
-   the bucket layout + min/max stats prune the scan to matching files.
-3. **Exact subtraction** — confirmed-seen hashes are small, so the final
-   anti-join broadcasts them. False positives only cost a redundant probe;
-   no URL is ever dropped (the Bloom is a pre-filter ONLY — mirrors the
-   `_id` exactness contract).
+1. **Broadcast confirm** — one Bloom sidecar per ``host_salt`` bucket (the
+   frontier's physical partitioning key), built/merged distributed, probes
+   every candidate once. Its POSITIVES (true dups + false positives, a tiny
+   fraction of discovered links) are broadcast INNER-joined against the
+   frontier: the frontier is scanned, never shuffled, and on Iceberg the
+   bucket layout + min/max stats prune the scan to matching files. A Bloom
+   has no false negatives, so the join's result is exactly the candidates
+   already in the frontier.
+2. **Exact subtraction** — those confirmed-seen hashes are small, so the
+   final anti-join of the candidates broadcasts them. False positives only
+   cost a redundant probe; no URL is ever dropped (the Bloom is a
+   pre-filter ONLY — mirrors the `_id` exactness contract).
 
 Sidecar layout: ``(host_salt int, m_bits long, k int, n_items long,
 bits binary)``. Per-wave maintenance is O(wave): a Bloom over the wave's
@@ -206,26 +207,21 @@ def anti_join_seen(
 ) -> DataFrame:
     """EXACT ``candidates \\ frontier`` on ``hash_col``. Without blooms this
     is the plain anti-join (small-frontier fast path). With blooms the plan
-    never shuffles the frontier:
+    never shuffles the frontier, and probes each candidate once:
 
-        new      = candidates WHERE NOT maybe_seen            (bloom negative)
-        hits     = frontier ⋈ broadcast(maybe-subset)          (scan, no shuffle)
-        survivors= maybe-subset ANTI broadcast(hits)           (fp rescue)
-        result   = new ∪ survivors
+        maybe  = candidates WHERE maybe_seen                  (one probe)
+        seen   = frontier ⋈ broadcast(maybe)                  (scan, no shuffle)
+        result = candidates ANTI broadcast(seen)
+
+    ``blooms`` must cover ``frontier``: with no false negatives, ``seen``
+    is exactly candidates ∩ frontier.
     """
     if blooms is None:
         return candidates.join(
             frontier.select(hash_col), on=hash_col, how="left_anti"
         )
-    flagged = candidates.withColumn(
-        "_maybe", maybe_seen_col(spark, blooms, hash_col, salt_col)
-    )
-    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
+    maybe = candidates.filter(maybe_seen_col(spark, blooms, hash_col, salt_col))
     seen_hashes = frontier.select(hash_col).join(
         F.broadcast(maybe.select(hash_col)), on=hash_col, how="inner"
     )
-    survivors = maybe.join(
-        F.broadcast(seen_hashes), on=hash_col, how="left_anti"
-    )
-    return definitely_new.unionByName(survivors)
+    return candidates.join(F.broadcast(seen_hashes), on=hash_col, how="left_anti")

@@ -463,35 +463,24 @@ def write_bucket_marker(path: str, url_buckets: int) -> None:
                    "hash": "pmod(xxhash64(url), url_buckets)"}, fh)
 
 
-def read_bucket_marker(path: str) -> int | None:
+def read_bucket_marker(spark, path: str) -> int | None:
     """url_buckets modulus of a bucketed pages table, or None when the
-    table is unbucketed (no marker). Local-filesystem read — on a
-    non-local URI (hdfs://, s3a://) the marker is unreadable here and
-    the engine falls back to full-table scans; that silent degradation
-    is WARNED about (round-6 advice) by sniffing for hive
-    ``url_bucket=`` partition directories in the path listing."""
+    table is unbucketed (no marker). Read through the Hadoop FileSystem
+    API, so a plain path and any URI Spark reads (file://, hdfs://, s3a://)
+    find the same marker; no Spark job runs."""
     import json
-    import logging
 
-    try:
-        with open(os.path.join(path, _BUCKET_MARKER)) as fh:
-            return int(json.load(fh)["url_buckets"])
-    except (OSError, ValueError, KeyError):
-        try:
-            looks_bucketed = any(
-                e.startswith("url_bucket=") for e in os.listdir(path)
-            )
-        except OSError:
-            looks_bucketed = "://" in path
-        if looks_bucketed:
-            logging.getLogger(__name__).warning(
-                "pages table %s looks hive-bucketed but has no readable "
-                "%s marker — wave-membership pruning is DISABLED and "
-                "every wave will scan the full table (non-local storage "
-                "needs the marker read through the Hadoop FS API)",
-                path, _BUCKET_MARKER,
-            )
+    jvm = spark._jvm
+    marker = jvm.org.apache.hadoop.fs.Path(path, _BUCKET_MARKER)
+    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(marker):
         return None
+    stream = fs.open(marker)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return int(json.loads(text)["url_buckets"])
 
 
 def bench_all_page_urls(n_hosts: int, pages_per_host: int) -> list[str]:

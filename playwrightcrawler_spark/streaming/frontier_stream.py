@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from playwrightcrawler_spark.crawl.engine import CrawlEngine
-from playwrightcrawler_spark.functions import udfs
 from playwrightcrawler_spark.sources.seeds import seed_lines
 
 
@@ -36,12 +35,9 @@ def streaming_links(spark: SparkSession, folder: str) -> DataFrame:
 
 def clean_links(links: DataFrame) -> DataFrame:
     """(url, host) of the links the engine's hygiene keeps, each URL once.
-    Streaming-safe: ``seed_link`` runs per micro-batch and the hygiene is
-    stateless column work."""
-    checked = CrawlEngine._classify_links(
-        links.select(udfs.seed_link(F.col("url")).alias("_l"), F.lit(0).alias("depth"))
-        .select("_l.*", "depth")
-    )
+    Streaming-safe: ``seed_link`` runs once per row of each micro-batch
+    (``CrawlEngine._url_links``) and the hygiene is stateless column work."""
+    checked = CrawlEngine._classify_links(CrawlEngine._url_links(links))
     return (
         checked.filter(F.col("drop_reason").isNull())
         .select("url", "host")

@@ -215,6 +215,22 @@ def test_bucketed_pages_wave_scan_prunes(spark, tmp_path):
     assert got == want and len(got) == len(wave_urls)
 
 
+def test_bucket_marker_read_through_a_uri(spark, tmp_path):
+    """The pages table's bucket marker is read through the Hadoop
+    FileSystem API, so a ``file://`` URI finds it as a plain path does.
+    Read with a local ``open()``, the URI found no marker, and wave
+    pruning was silently off."""
+    from playwrightcrawler_spark.crawl.engine import CrawlEngine
+    from playwrightcrawler_spark.sources import pages_gen
+
+    pages = tmp_path / "pages_bucketed"
+    pages_gen.write_pages_scaled(spark, str(pages), url_buckets=16, n_hosts=4,
+                                 pages_per_host=2, paragraphs=1,
+                                 include_assets=False, next_links=1)
+    eng = CrawlEngine(spark, pages.as_uri(), str(tmp_path / "wh"))
+    assert eng._url_buckets == 16
+
+
 def test_near_dup_plan_has_no_cartesian(spark, sf_dir):
     """The exposed embedding_near_dup must be the LSH-banded equi-join —
     never a cross join (the brute-force all-pairs form lives only in the
@@ -293,12 +309,12 @@ def test_wave_has_one_python_crossing(spark, pages_dir, tmp_path, monkeypatch):
     assert _digest(eng.lake.frontier.read(spark)) == (78, 78469828928)
 
 
-def test_seed_link_runs_once_per_seed(spark, pages_dir, tmp_path, monkeypatch):
-    """Bootstrap's frontier base and an ingest's inserts each evaluate
-    ``seed_link`` in ONE ArrowEvalPython. When the url filter of
-    ``_dedupe_links`` was pushed below the UDF's projection it copied the
-    UDF, and both plans held two. The bootstrapped frontier is the one
-    written before (digest recorded from that engine)."""
+def _bootstrap_and_ingest_plans(spark, pages_dir, tmp_path, monkeypatch):
+    """Bootstrap's frontier base and an ingest's inserts. When the url
+    filter of ``_dedupe_links`` was pushed below the UDF's projection it
+    copied the UDF, and both plans held two ``seed_link`` nodes. The
+    bootstrapped frontier is the one written before (digest recorded from
+    that engine)."""
     from playwrightcrawler_spark.crawl.engine import CrawlEngine
     from playwrightcrawler_spark.sources import pages_gen
 
@@ -315,8 +331,67 @@ def test_seed_link_runs_once_per_seed(spark, pages_dir, tmp_path, monkeypatch):
     assert _digest(eng.lake.frontier.read(spark)) == (10, 8622476720)
     assert eng.ingest(["https://tail005.example.io/p1.html"]) == 1
     assert len(plans) == 2
+    return plans, "seed_link"
+
+
+def _clean_links_plans(spark, pages_dir, tmp_path, monkeypatch):
+    """The streaming link hygiene: its ``drop_reason`` filter, pushed below
+    the UDF's projection, copied ``seed_link``."""
+    from playwrightcrawler_spark.streaming.frontier_stream import clean_links
+
+    links = spark.createDataFrame(
+        [("https://a.example.org/x",), ("javascript:void(0)",),
+         ("https://fonts.gstatic.com/s.css",)], "url string")
+    cleaned = clean_links(links)
+    assert [r.url for r in cleaned.collect()] == ["https://a.example.org/x"]
+    return [audit.python_eval_nodes(cleaned)], "seed_link"
+
+
+def _robots_rules_plans(spark, pages_dir, tmp_path, monkeypatch):
+    """The robots rules scan: its rule filter, pushed below the UDF's
+    projection, copied ``parse_robots_udf``."""
+    from playwrightcrawler_spark.functions import robotstxt
+
+    rules = robotstxt.build_robots_rules(spark.read.parquet(pages_dir))
+    assert rules.count() == 2
+    return [audit.python_eval_nodes(rules)], "parse_robots_udf"
+
+
+def _bloom_anti_join_plans(spark, pages_dir, tmp_path, monkeypatch):
+    """The Bloom seen-set: the bloom-negative branch, the positive branch
+    and the false-positive rescue each evaluated the probe ``_maybe``."""
+    from playwrightcrawler_spark.operators import seen
+
+    # the salt is not a function of the hash, as in the engine (it derives
+    # from the host): a salt computed from url_hash lets Catalyst infer the
+    # probe onto the frontier side through the join key
+    def keys(prefix, n):
+        return spark.range(n).select(
+            F.xxhash64(F.concat(prefix, F.col("id"))).alias("url_hash"),
+            F.pmod(F.col("id"), F.lit(8)).cast("int").alias("host_salt"),
+        )
+
+    frontier = keys(F.lit("seen:"), 200)
+    # half of them seen
+    candidates = keys(F.when(F.col("id") < 50, "seen:").otherwise("new:"), 100)
+    blooms = seen.build_blooms(frontier, expected_items_per_bucket=100).collect()
+    new = seen.anti_join_seen(candidates, frontier, spark, blooms=blooms)
+    assert new.count() == 50
+    return [audit.python_eval_nodes(new)], "_maybe"
+
+
+@pytest.mark.parametrize("plans_of", [
+    _bootstrap_and_ingest_plans, _clean_links_plans, _robots_rules_plans,
+    _bloom_anti_join_plans,
+], ids=["bootstrap_ingest", "clean_links", "build_robots_rules", "bloom_anti_join_seen"])
+def test_each_pandas_udf_runs_once(spark, pages_dir, tmp_path, monkeypatch, plans_of):
+    """Each pandas UDF of these plans is evaluated in ONE ArrowEvalPython,
+    so it runs once per row. A filter Catalyst pushes below a projection
+    copies the UDF that projection aliases; a generator's output
+    (``F.inline(F.array(udf(...)))``) is not an alias, and stops it."""
+    plans, udf = plans_of(spark, pages_dir, tmp_path, monkeypatch)
     for nodes in plans:
-        assert len(nodes) == 1 and "seed_link" in nodes[0], nodes
+        assert len(nodes) == 1 and udf in nodes[0], nodes
 
 
 @pytest.mark.parametrize("engine_kw,jobs", [
