@@ -51,6 +51,13 @@ selectors over it: the weighted frontier policy, and the oldest
 candidates carrying a mapped file extension. So there is one extraction
 UDF, one crawled/frontier commit sequence and one set of wave_metrics
 rows, told apart by their ``method``.
+
+The Bloom sidecar has one owner, ``seen.BloomSidecar``, and the engine
+keeps no copy of it: the seen-set probe asks it for the rows covering the
+frontier's latest version (rebuilt first if another writer committed),
+each base write (bootstrap, compaction, cleanup) has it rebuilt, and each
+other frontier delta has its inserts added, all inside the operation's
+transaction.
 """
 
 from __future__ import annotations
@@ -128,15 +135,8 @@ def _atomic(op):
 
     @functools.wraps(op)
     def run(self, *args, **kwargs):
-        try:
-            with self.lake.transaction():
-                self._bloom_sync()
-                return op(self, *args, **kwargs)
-        except BaseException:
-            # built on the discarded commits: re-derived from the published
-            # tables by the next operation
-            self._bloom_rows = None
-            raise
+        with self.lake.transaction():
+            return op(self, *args, **kwargs)
 
     return run
 
@@ -174,10 +174,14 @@ class CrawlEngine:
             # result is host-count-sized, cached, and broadcast per wave
             from playwrightcrawler_spark.functions import robotstxt
 
-            robots_rules = robotstxt.build_robots_rules(
-                spark.read.parquet(pages_path)
-            ).cache()
-        self.robots = robots_rules
+            robots_rules = robotstxt.build_robots_rules(spark.read.parquet(pages_path))
+        # one rules row per host (a host may serve robots.txt over http and
+        # https): the wave's left join would otherwise duplicate its rows
+        self.robots = None if robots_rules is None else robots_rules.groupBy("host").agg(
+            F.array_distinct(F.flatten(F.collect_list("disallow_prefixes")))
+            .alias("disallow_prefixes"),
+            F.max("crawl_delay_ms").alias("crawl_delay_ms"),
+        ).cache()
         # write the per-salt-bucket links_new rows (A5/A6); they are counted
         # either way, by the insert write's Observation
         self.bucket_lineage = bucket_lineage
@@ -185,8 +189,7 @@ class CrawlEngine:
         # sandbox: the exact anti-join is cheaper below ~10^7 frontier rows
         # (BENCH notes); at cluster scale this flag is the difference
         # between scanning and SHUFFLING a 10^10-row table per wave.
-        self.use_bloom = use_bloom
-        self.bloom_items = bloom_items_per_bucket
+        self.bloom = seen.BloomSidecar(self.lake, bloom_items_per_bucket) if use_bloom else None
         # fold MoR deltas into a fresh base every K commits, or once the
         # flip rows (read()'s merge-join side) pass compact_flip_rows: at
         # wave_size 10^7 a count cadence alone outgrows any broadcast
@@ -197,7 +200,6 @@ class CrawlEngine:
         # html rows only; default off matches the reference. Must stay
         # constant per warehouse (delta-table schema stability).
         self.extract_raw = extract_raw_webcontent
-        self._bloom_rows: list | None = None
         # wave-membership pruning: a pages table hive-partitioned by
         # pmod(xxhash64(url), N) carries a marker with N; a wave pushes its
         # buckets into the scan as a PartitionFilter and reads
@@ -207,7 +209,6 @@ class CrawlEngine:
         self._url_buckets = _pg.read_bucket_marker(spark, pages_path)
         # seed-folder files this engine has ingested (``run(seed_folder=)``)
         self._seed_files: set[str] = set()
-        self._bloom_sync()
 
     # ------------------------------------------------------------------ util
     def _pages(self) -> DataFrame:
@@ -351,75 +352,9 @@ class CrawlEngine:
             self._hashed_links(self._seed_links(seed_urls)), wave=0
         ).dropDuplicates(["url_hash"])
         self.lake.frontier.write(rows, meta={"wave": 0, "op": "bootstrap"})
-        self._bloom_rebuild()
+        if self.bloom:
+            self.bloom.rebuild(self.spark)
         return self.lake.frontier.key_rows()
-
-    # ---------------------------------------------------- bloom sidecar life
-    def _bloom_sync(self) -> None:
-        """Hold the sidecar covering the published frontier (at start, and
-        after an aborted operation dropped it). A Bloom engine follows each
-        frontier commit, in the same transaction, with a sidecar stamped
-        with that version: one stamped with the latest version is loaded.
-        Otherwise (Bloom enabled mid-life, commits by a Bloom-off engine)
-        hashes may exist that the Bloom never saw and would call 'new'
-        (exactness contract): rebuild from the FULL frontier."""
-        if not self.use_bloom or self._bloom_rows is not None or not self.lake.frontier.exists():
-            return
-        side = self.lake.seen_bloom
-        if (side.exists() and side.versions()[-1].get("frontier_version")
-                == self.lake.frontier.latest_version):
-            self._bloom_rows = side.read(self.spark).collect()
-        else:
-            self._bloom_rebuild()
-
-    def _bloom_rebuild(self) -> None:
-        """Full sidecar rebuild with (m, k) re-derived from the ACTUAL
-        frontier size (2x headroom): fixed build-time parameters otherwise
-        saturate once the frontier outgrows them — FPP degrades toward 1
-        and every candidate takes the broadcast-confirm path, silently
-        un-filtering the pre-filter (round-2 verdict). Called after every
-        base write — bootstrap, compaction and cleanup, where the full key
-        set is scanned anyway — and when the sidecar is missing or stale."""
-        if not self.use_bloom:
-            return
-        # keys-only read: the Bloom covers url_hashes, which flips never
-        # change — no need to pay the MoR flip join for a rebuild scan;
-        # sized from parquet footers, so the build is the only scan
-        keys = self.lake.frontier.read_keys(self.spark, cols=("host_salt", "url_hash"))
-        n = self.lake.frontier.key_rows()
-        per_bucket = max(
-            -(-n * 2 // config.HOST_SALT_BUCKETS),  # ceil, 2x headroom
-            self.bloom_items,
-        )
-        self._bloom_write(seen.build_blooms(keys, expected_items_per_bucket=per_bucket),
-                          per_bucket=int(per_bucket), op="rebuild")
-
-    def _bloom_update(self, keys: DataFrame) -> None:
-        """OR-merge a Bloom over freshly inserted ``(host_salt, url_hash)``
-        keys, read back from the files their commit wrote, into the
-        per-bucket sidecar: O(wave) build where the data lives, one collect
-        of the 64-row sidecar, driver-side parquet write (no extra Spark
-        write job). The increment is built with the LIVE sidecar's (m, k)
-        — after a resize they differ from the config-derived defaults.
-        The sidecar is part of the checkpoint — resume reloads it instead
-        of rebuilding — and records the frontier version it covers
-        (``_bloom_sync``). Every operation that commits links starts with
-        the sidecar loaded: bootstrap builds it and ``_atomic`` syncs it;
-        it has no row only while the frontier has none."""
-        if not self.use_bloom:
-            return
-        live = self._bloom_rows
-        params = dict(m_bits=int(live[0]["m_bits"]), k=int(live[0]["k"])) if live else {}
-        new = seen.build_blooms(keys, expected_items_per_bucket=self.bloom_items, **params)
-        self._bloom_write(seen.merge_blooms(self.lake.seen_bloom.read(self.spark), new))
-
-    def _bloom_write(self, blooms: DataFrame, **meta) -> None:
-        """Collect the per-bucket sidecar (64 rows) and write it
-        driver-side, stamped with the frontier version it covers."""
-        rows = [r.asDict() for r in blooms.collect()]
-        self.lake.seen_bloom.write_rows(rows, seen.SIDECAR_PA_SCHEMA, meta={
-            "frontier_version": self.lake.frontier.latest_version, **meta})
-        self._bloom_rows = rows
 
     @_atomic
     def ingest(self, seed_urls: DataFrame | list[str]) -> int:
@@ -574,13 +509,13 @@ class CrawlEngine:
         seeds (``ingest``) and streamed links. ``selected`` is every
         consumed row (allowed ∪ robots-denied), so denied rows can never win
         a later selection; None (ingestion) consumes nothing, and then a
-        commit with no new row publishes nothing (version None, no sidecar
-        write). Returns (frontier version, link counters with
+        commit with no new row publishes no frontier version (None) and no
+        Bloom increment. Returns (frontier version, link counters with
         ``links_new``, per-salt-bucket lineage rows (A5/A6): the non-zero
         buckets, with bucket lineage on)."""
         spark = self.spark
         obs_links, obs_insert = Observation(), Observation()
-        # J1/J5 seen-set membership. With use_bloom the frontier is only
+        # J1/J5 seen-set membership. With the Bloom the frontier is only
         # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
         # without, the exact anti-join (right side = frontier) is cheaper
         # at sub-10^7 frontier sizes.
@@ -590,7 +525,7 @@ class CrawlEngine:
         # a per-wave aggregation + broadcast build from the commit path
         new_links = seen.anti_join_seen(
             hashed, self.lake.frontier.read_keys(spark), spark,
-            blooms=self._bloom_rows if self.use_bloom else None,
+            blooms=self.bloom.rows(spark) if self.bloom else None,
         )
         # links_new per salt bucket rides the insert write as an Observation
         buckets = [f"bucket:{b}" for b in range(config.HOST_SALT_BUCKETS)]
@@ -609,7 +544,7 @@ class CrawlEngine:
         frontier_version = self.lake.frontier.commit_wave(
             inserts=insert_rows, flips=flips, meta=meta)
         if frontier_version is None:
-            pass  # nothing new: no version, no sidecar write
+            pass  # nothing new: no version, no Bloom increment
         elif (
             self.lake.frontier.deltas_since_base() >= self.compact_every
             or self.lake.frontier.flip_rows_since_base() >= self.compact_flip_rows
@@ -617,13 +552,10 @@ class CrawlEngine:
             # an ingest carries no wave: its compaction must not mark the
             # wave it precedes committed (last_committed_wave)
             self.lake.frontier.compact(spark, meta=meta)
-            # compaction scans the full key set anyway — the moment to
-            # re-derive (m, k) from actual counts instead of OR-merging
-            # into possibly-saturated fixed-size blooms
-            self._bloom_rebuild()
-        else:
-            self._bloom_update(self.lake.frontier.read_inserts(
-                spark, frontier_version, cols=("host_salt", "url_hash")))
+            if self.bloom:
+                self.bloom.rebuild(spark)
+        elif self.bloom:
+            self.bloom.add(spark, frontier_version)
         link_stats = _obs_get(
             obs_links,
             {"links_seen": 0, **{f"drop_{r}": 0 for r in DROP_REASONS}},
@@ -846,8 +778,8 @@ class CrawlEngine:
         deleted = sum(counts.values())
         if deleted:
             self.lake.frontier.write(kept.select(*FRONTIER_COLS), meta={"op": "cleanup"})
-            # a new base, so a sidecar stamped with it, as after compaction
-            self._bloom_rebuild()
+            if self.bloom:
+                self.bloom.rebuild(self.spark)
             self._write_metrics(
                 [(wave, f"cleanup:{rule}", "deleted", v) for rule, v in counts.items()],
                 "cleanup", meta={"op": "cleanup"},

@@ -8,8 +8,8 @@ the ``User-agent: *`` group's ``Disallow:`` path prefixes and
 SQL-friendly, so it's one Arrow-batched pandas UDF; everything around it
 (the robots-URL scan, the host join) is pure DataFrame.
 
-The rules table is tiny (one row per host that serves a robots.txt) and is
-broadcast against the wave — never shuffled.
+The rules table is tiny (one row per robots.txt URL; the engine folds a
+host's http and https rows into one) and is broadcast against the wave.
 """
 
 from __future__ import annotations

@@ -23,9 +23,15 @@ against the big table is ONE un-shuffled scan:
    cost a redundant probe; no URL is ever dropped (the Bloom is a
    pre-filter ONLY — mirrors the `_id` exactness contract).
 
-Sidecar layout: ``(host_salt int, m_bits long, k int, n_items long,
-bits binary)``. Per-wave maintenance is O(wave): a Bloom over the wave's
-*inserted* hashes is OR-merged into the sidecar (Bloom union = bitwise OR).
+Sidecar life (``BloomSidecar``, its one owner): the ``seen_bloom`` table
+holds one ``SIDECAR_PA_SCHEMA`` row per bucket, each snapshot stamped
+with the ``frontier_version`` it covers. A probe reads it driver-side and
+first rebuilds it from the full frontier if the stamp is not the
+frontier's latest version (Bloom enabled mid-life, a commit by a Bloom-off
+engine), so the Bloom never misses a hash. Every base write rebuilds it,
+sized from the key count; every other frontier delta OR-merges a Bloom
+over its inserts (Bloom union = bitwise OR), O(wave). All of it commits in
+the caller's transaction; the engine holds none of it between operations.
 
 Everything is numpy over Arrow batches (vectorized); probe positions use
 double hashing ``g_i = h1 + i*h2 mod m`` with a splitmix64-mixed second
@@ -38,25 +44,22 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from playwrightcrawler_spark import config
 
-_SIDECAR_SCHEMA = (
-    "host_salt int, m_bits long, k int, n_items long, bits binary"
-)
-
-import pyarrow as _pa
-
-SIDECAR_PA_SCHEMA = _pa.schema([
-    ("host_salt", _pa.int32()),
-    ("m_bits", _pa.int64()),
-    ("k", _pa.int32()),
-    ("n_items", _pa.int64()),
-    ("bits", _pa.binary()),
+SIDECAR_PA_SCHEMA = pa.schema([
+    ("host_salt", pa.int32()),
+    ("m_bits", pa.int64()),
+    ("k", pa.int32()),
+    ("n_items", pa.int64()),
+    ("bits", pa.binary()),
 ])
+_SIDECAR_SCHEMA = from_arrow_schema(SIDECAR_PA_SCHEMA)
 
 
 def bloom_params(expected_items: int, fpp: float = config.BLOOM_FPP) -> tuple[int, int]:
@@ -215,13 +218,68 @@ def anti_join_seen(
 
     ``blooms`` must cover ``frontier``: with no false negatives, ``seen``
     is exactly candidates ∩ frontier.
+
+    The probe's verdict comes out of a generator, not as an alias of the
+    UDF call, so constraint inference cannot copy the ``_m`` filter
+    through the ``hash_col`` equi-join onto the frontier side when the
+    salt is a function of the hash: the probe runs over candidates only.
     """
     if blooms is None:
         return candidates.join(
             frontier.select(hash_col), on=hash_col, how="left_anti"
         )
-    maybe = candidates.filter(maybe_seen_col(spark, blooms, hash_col, salt_col))
+    probe = maybe_seen_col(spark, blooms, hash_col, salt_col)
+    maybe = candidates.select(
+        hash_col, F.inline(F.array(F.struct(probe.alias("_m"))))
+    ).filter("_m")
     seen_hashes = frontier.select(hash_col).join(
         F.broadcast(maybe.select(hash_col)), on=hash_col, how="inner"
     )
     return candidates.join(F.broadcast(seen_hashes), on=hash_col, how="left_anti")
+
+
+class BloomSidecar:
+    """The engine's sidecar: the ``seen_bloom`` table of ``lake`` (a
+    ``Lakehouse``), sized at least ``items_per_bucket`` per bucket."""
+
+    def __init__(self, lake, items_per_bucket: int):
+        self.lake = lake
+        self.items = items_per_bucket
+
+    def rows(self, spark: SparkSession) -> list[dict]:
+        """The rows covering the frontier's latest version, read with
+        pyarrow (no Spark job); rebuilt first when missing or stale."""
+        side = self.lake.seen_bloom
+        if (side.exists() and side.versions()[-1].get("frontier_version")
+                == self.lake.frontier.latest_version):
+            return side.read_rows()
+        return self.rebuild(spark)
+
+    def rebuild(self, spark: SparkSession) -> list[dict]:
+        """Build from the full key set, (m, k) re-derived from the ACTUAL
+        frontier size with 2x headroom: fixed parameters saturate as the
+        frontier grows, FPP tends to 1 and every candidate is confirmed.
+        Keys only (flips never change url_hashes), sized from footers."""
+        frontier = self.lake.frontier
+        keys = frontier.read_keys(spark, cols=("host_salt", "url_hash"))
+        per_bucket = max(-(-frontier.key_rows() * 2 // config.HOST_SALT_BUCKETS), self.items)
+        return self._write(build_blooms(keys, expected_items_per_bucket=per_bucket),
+                           op="rebuild", per_bucket=int(per_bucket))
+
+    def add(self, spark: SparkSession, version: int) -> list[dict]:
+        """OR-merge a Bloom over the rows frontier delta ``version``
+        inserted, read back from its files, built with the live sidecar's
+        (m, k): after a rebuild they are not ``items_per_bucket``'s."""
+        live = self.lake.seen_bloom.read_rows()
+        params = dict(m_bits=int(live[0]["m_bits"]), k=int(live[0]["k"])) if live else {}
+        keys = self.lake.frontier.read_inserts(spark, version, cols=("host_salt", "url_hash"))
+        new = build_blooms(keys, expected_items_per_bucket=self.items, **params)
+        return self._write(merge_blooms(self.lake.seen_bloom.read(spark), new))
+
+    def _write(self, blooms: DataFrame, **meta) -> list[dict]:
+        """Collect the 64-row sidecar and write it driver-side, stamped
+        with the frontier version it covers."""
+        rows = [r.asDict() for r in blooms.collect()]
+        self.lake.seen_bloom.write_rows(rows, SIDECAR_PA_SCHEMA, meta={
+            "frontier_version": self.lake.frontier.latest_version, **meta})
+        return rows

@@ -372,6 +372,14 @@ class SnapshotTable:
         self._commit(v, meta, schema=read_schema)
         return v
 
+    def read_rows(self) -> list[dict]:
+        """The mirror of ``write_rows`` for a full table: the latest
+        snapshot's rows as dicts, read driver-side with pyarrow, no Spark
+        job (the bloom sidecar's probe read)."""
+        import pyarrow.parquet as pq
+
+        return pq.read_table(f"{self._snap_dir(self.latest_version)}/part-00000.parquet").to_pylist()
+
 
 class MorTable(SnapshotTable):
     """Merge-on-read keyed table — the Iceberg MoR analogue for the

@@ -243,6 +243,26 @@ def test_crawl_delay_slot_ignores_denied_rows(spark, pages_dir, tmp_path_factory
     assert "https://mega.example.com/sec0/item0.html" not in got
 
 
+def test_robots_served_twice_keeps_crawled_unique(spark, pages_dir, tmp_path):
+    """A host serving robots.txt over both http and https has one rules
+    row, so the wave's join with the rules cannot duplicate its selected
+    rows: (url, wave) stays unique in crawled. With a rules row per
+    robots.txt, seed1.example.org's rows were crawled twice per wave."""
+    pages = spark.read.parquet(pages_dir).select("url", "html")
+    robots = pages.filter(F.col("url").endswith("/robots.txt"))
+    pages.unionByName(
+        robots.withColumn("url", F.regexp_replace("url", "^https://", "http://"))
+    ).write.parquet(str(tmp_path / "pages"))
+    eng = CrawlEngine(spark, str(tmp_path / "pages"), str(tmp_path / "wh"), wave_size=300,
+                      per_host_quota=5, method_weights={"oldest": 1}, robots_rules="pages")
+    eng.run(2, seed_urls=pages_gen.seed_urls())
+    crawled = eng.lake.crawled.read(spark)
+    assert crawled.filter(F.col("host") == "seed1.example.org").count() > 0
+    dup = crawled.groupBy("url", "wave").count().filter(F.col("count") > 1)
+    assert dup.count() == 0, dup.collect()
+    assert eng.robots.count() == eng.robots.select("host").distinct().count() == 2
+
+
 def test_seed_ingest_merges_into_live_frontier(spark, pages_dir, tmp_path_factory):
     """S5 during a crawl: ingest must anti-join + append, never clobber the
     frontier snapshot with only the new seed rows."""
@@ -304,7 +324,7 @@ def test_bloom_crawl_identical_to_exact(spark, pages_dir, tmp_path_factory):
                        results["bloom"].lake.root, wave_size=100,
                        per_host_quota=2, method_weights={"oldest": 1},
                        use_bloom=True, bloom_items_per_bucket=1000)
-    assert eng2._bloom_rows, "sidecar not reloaded on resume"
+    assert eng2.bloom.rows(spark), "sidecar not reloaded on resume"
 
 
 def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_factory):
@@ -326,22 +346,23 @@ def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_
 
     # (a) flag enabled mid-life: sidecar missing → rebuilt from full frontier
     eng2 = CrawlEngine(spark, pages_dir, str(wh), **bloom)
-    assert eng2._bloom_rows, "sidecar not rebuilt on enable"
+    assert eng2.bloom.rows(spark), "sidecar not rebuilt on enable"
     cover = eng2.lake.frontier.read(spark).withColumn(
-        "m", seen.maybe_seen_col(spark, eng2._bloom_rows))
+        "m", seen.maybe_seen_col(spark, eng2.bloom.rows(spark)))
     assert cover.filter(~F.col("m")).count() == 0            # zero false negatives
 
-    # (b) a frontier commit no sidecar covers: rebuilt on the next start
+    # (b) a frontier commit no sidecar covers: rebuilt at the next probe
     extra = eng2._frontier_rows(
         eng2._hashed_links(eng2._seed_links(["https://tail009.example.io/fresh.html"])),
         wave=99,
     )
     v = eng2.lake.frontier.commit_wave(inserts=extra, flips=None, meta={"wave": 99})
     eng3 = CrawlEngine(spark, pages_dir, str(wh), **bloom)
+    eng3.bloom.rows(spark)
     side = eng3.lake.seen_bloom.versions()[-1]
     assert (side["op"], side["frontier_version"]) == ("rebuild", v)
     cover3 = eng3.lake.frontier.read(spark).withColumn(
-        "m", seen.maybe_seen_col(spark, eng3._bloom_rows))
+        "m", seen.maybe_seen_col(spark, eng3.bloom.rows(spark)))
     assert cover3.filter(~F.col("m")).count() == 0
 
     # (c) waves, a fast pass and a cleanup (which deletes an injected
@@ -360,8 +381,29 @@ def test_bloom_sidecar_rebuilt_when_missing_or_stale(spark, pages_dir, tmp_path_
     eng4.run(1)
     side_v = eng4.lake.seen_bloom.latest_version
     eng5 = CrawlEngine(spark, pages_dir, wh2, **bloom)
-    assert eng5._bloom_rows
+    assert eng5.bloom.rows(spark)
     assert eng5.lake.seen_bloom.latest_version == side_v
+
+
+def test_bloom_probe_sees_another_engines_commit(spark, pages_dir, tmp_path):
+    """Two engines on one warehouse in one process: a Bloom-off engine
+    ingests a URL after the Bloom engine's wave. The Bloom engine's next
+    probe finds the sidecar stamped with an older frontier version and
+    rebuilds it inside its own ingest, so the URL is known and the
+    frontier keeps one row per url_hash. An engine holding its own copy of
+    the sidecar called the URL new and inserted it a second time."""
+    kw = dict(wave_size=50, method_weights={"oldest": 1})
+    fresh = ["https://tail009.example.io/fresh.html"]
+    a = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), use_bloom=True,
+                    bloom_items_per_bucket=1000, **kw)
+    a.run(1, seed_urls=pages_gen.seed_urls())
+    b = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), **kw)
+    assert b.ingest(fresh) == 1
+    assert a.ingest(fresh) == 0
+    fr = a.lake.frontier.read(spark)
+    assert fr.count() == fr.select("url_hash").distinct().count()
+    side = a.lake.seen_bloom.versions()[-1]
+    assert (side["op"], side["frontier_version"]) == ("rebuild", a.lake.frontier.latest_version)
 
 
 def _measured_fpp(rows) -> float:
@@ -398,7 +440,7 @@ def test_bloom_sized_from_bootstrap(spark, pages_dir, tmp_path_factory):
                       method_weights={"oldest": 1}, use_bloom=True,
                       bloom_items_per_bucket=1)
     eng.bootstrap(_many_seeds(spark))
-    assert _measured_fpp(eng._bloom_rows) < 2 * config.BLOOM_FPP
+    assert _measured_fpp(eng.bloom.rows(spark)) < 2 * config.BLOOM_FPP
 
 
 def test_bloom_resize_on_compaction(spark, pages_dir, tmp_path_factory):
@@ -417,11 +459,11 @@ def test_bloom_resize_on_compaction(spark, pages_dir, tmp_path_factory):
     eng.bootstrap(pages_gen.seed_urls())              # sized for 10 keys
     # 20k urls OR-merged into the bootstrap's 64-bit buckets: saturated
     eng.ingest(_many_seeds(spark))
-    saturated = _measured_fpp(eng._bloom_rows)
+    saturated = _measured_fpp(eng.bloom.rows(spark))
     assert saturated > 0.5, saturated                 # degenerate pre-resize
     eng.run(1)                                        # 2nd delta → compact → rebuild
     assert any(e.get("op") == "compact" for e in eng.lake.frontier.versions())
-    rows = eng._bloom_rows
+    rows = eng.bloom.rows(spark)
     assert rows[0]["m_bits"] > 64                     # actually resized
     assert _measured_fpp(rows) < 2 * config.BLOOM_FPP
     # coverage invariant survives the rebuild

@@ -4,6 +4,7 @@ turns a designed plan into an accidental one."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
@@ -357,19 +358,19 @@ def _robots_rules_plans(spark, pages_dir, tmp_path, monkeypatch):
     return [audit.python_eval_nodes(rules)], "parse_robots_udf"
 
 
-def _bloom_anti_join_plans(spark, pages_dir, tmp_path, monkeypatch):
+def _bloom_anti_join_plans(spark, pages_dir, tmp_path, monkeypatch, salt_of_hash=False):
     """The Bloom seen-set: the bloom-negative branch, the positive branch
-    and the false-positive rescue each evaluated the probe ``_maybe``."""
+    and the false-positive rescue each evaluated the probe ``_maybe``.
+    With ``salt_of_hash`` the salt is computed from url_hash, as in
+    ``test_seen.py``'s frames (in the engine it derives from the host):
+    Catalyst then inferred the probe's filter through the join key onto
+    the frontier side, and the probe ran over every frontier row too."""
     from playwrightcrawler_spark.operators import seen
 
-    # the salt is not a function of the hash, as in the engine (it derives
-    # from the host): a salt computed from url_hash lets Catalyst infer the
-    # probe onto the frontier side through the join key
     def keys(prefix, n):
-        return spark.range(n).select(
-            F.xxhash64(F.concat(prefix, F.col("id"))).alias("url_hash"),
-            F.pmod(F.col("id"), F.lit(8)).cast("int").alias("host_salt"),
-        )
+        h = F.xxhash64(F.concat(prefix, F.col("id")))
+        salt = F.pmod(h, F.lit(64)) if salt_of_hash else F.pmod(F.col("id"), F.lit(8))
+        return spark.range(n).select(h.alias("url_hash"), salt.cast("int").alias("host_salt"))
 
     frontier = keys(F.lit("seen:"), 200)
     # half of them seen
@@ -382,8 +383,9 @@ def _bloom_anti_join_plans(spark, pages_dir, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("plans_of", [
     _bootstrap_and_ingest_plans, _clean_links_plans, _robots_rules_plans,
-    _bloom_anti_join_plans,
-], ids=["bootstrap_ingest", "clean_links", "build_robots_rules", "bloom_anti_join_seen"])
+    _bloom_anti_join_plans, functools.partial(_bloom_anti_join_plans, salt_of_hash=True),
+], ids=["bootstrap_ingest", "clean_links", "build_robots_rules", "bloom_anti_join_seen",
+        "bloom_anti_join_seen_salt_of_hash"])
 def test_each_pandas_udf_runs_once(spark, pages_dir, tmp_path, monkeypatch, plans_of):
     """Each pandas UDF of these plans is evaluated in ONE ArrowEvalPython,
     so it runs once per row. A filter Catalyst pushes below a projection
@@ -443,18 +445,18 @@ def test_bloom_update_jobs_do_not_depend_on_bucket_lineage(spark, pages_dir, tmp
                           per_host_quota=2, seed=7, hunt_open_directories=False,
                           use_bloom=True, bucket_lineage=lineage)
         eng.bootstrap(pages_gen.seed_urls())
-        update, counts = eng._bloom_update, []
+        update, counts = eng.bloom.add, []
 
-        def counted(keys, update=update, counts=counts, lineage=lineage):
+        def counted(spark, version, update=update, counts=counts, lineage=lineage):
             group = f"bloom-update-{tmp_path.name}-{lineage}-{len(counts)}"
             sc.setJobGroup(group, group)
             try:
-                update(keys)
+                update(spark, version)
             finally:
                 sc._jsc.clearJobGroup()
             counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
-        eng._bloom_update = counted
+        eng.bloom.add = counted
         for wave in (1, 2):
             assert not eng.run_wave(wave)["done"]
         jobs[lineage] = counts

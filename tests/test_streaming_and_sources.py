@@ -86,7 +86,7 @@ def test_streaming_ingest_commits_through_the_link_stage(spark, pages_dir, tmp_p
     cover = fr.read(spark).withColumn("m", seen.maybe_seen_col(spark, side.read(spark).collect()))
     assert cover.filter(~F.col("m")).count() == 0
     side_v = side.latest_version
-    CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), **kw)
+    assert CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), **kw).bloom.rows(spark)
     assert side.latest_version == side_v
 
 
